@@ -420,7 +420,7 @@ are stateful Python by design).
 
 Probe-side, the assembled forest matrix is published ONCE per box to
 /dev/shm by a single lock-holding worker and stream-copied by the
-rest (LIBFILTER_SHM_ASM_MIN, copy-on-attach): worker churn no longer
+rest (past 32 MB, copy-on-attach): worker churn no longer
 re-pays the broadcast unpickle + assembly (measured 6.2 s → 1.3-1.6 s
 re-probe of the 110 MB forest at local[32]; BENCH/probe_asm_share.json
 records the private / zero-copy / copy-on-attach A/B). The probe
@@ -546,7 +546,7 @@ the JVM `bit_or` engine is the scale path that bypasses it entirely.
 
 - **Many-group merge: AQE was serializing it.** Stage decomposition of
   the slowest bench row (`shuffle_grouped_semijoin_returned_parts`,
-  1000 groups — `tools/exp_merge_partitions.py`, `exp_merge_variants.py`)
+  1000 groups; the stage times below are the record)
   found AQE size-coalescing the bare `repartition(*group_cols)` blob
   exchange in the tree merge down to ~5 partitions (50 MB of KB-blobs),
   serializing ~17k per-group Python merges; each group also yielded its

@@ -12,8 +12,11 @@ turns a 100 TB shuffle into a few-GB shuffle.
 
 from __future__ import annotations
 
+import json
 import os
 import threading
+import warnings
+from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -21,94 +24,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..filters import FAMILIES
-from .build import _keys_from_series
+from ..filters.block import BlockFilter, BlockSliceFilter
+from ..kernels import block as K
 
-# one lock guards every module-level cache below: driver-side queries
-# fan out over ThreadPoolExecutor (fpp conformance, merge audits), so
-# two threads can otherwise race the same pop(next(iter(d))) eviction
-# (KeyError) or double-broadcast one content token
+# one lock guards every insert into the two caches below: driver-side
+# queries fan out over ThreadPoolExecutor (fpp conformance, merge
+# audits), so two threads can otherwise race the same pop(next(iter(d)))
+# eviction (KeyError) or double-broadcast one content token
 _CACHE_LOCK = threading.Lock()
 
 # executor-local cache: broadcast token → {group: filter object}.
-# Keyed by an explicit uuid shipped inside the broadcast value (NOT
+# Keyed by an explicit token shipped inside the broadcast value (NOT
 # id(bc): CPython reuses ids after GC, which poisons the cache).
 _FILTER_CACHE: dict[str, dict] = {}
 _FILTER_CACHE_MAX = 16
 
-# driver-side broadcast reuse: (applicationId, content token) → the
-# live Broadcast handle, so repeated probes of an unchanged filters
-# frame skip the per-call broadcast dump (eviction only drops our
-# reference — Spark's ContextCleaner reclaims unreferenced broadcasts)
-_BC_CACHE: dict[tuple, object] = {}
-_BC_CACHE_MAX = 8
-
-# shard-frame probe memo: (appId, fingerprint) → (mode, broadcast,
-# params) — lets a repeat probe of an unchanged CACHED shard frame
-# skip the blob collect entirely (the fingerprint is a one-pass JVM
-# aggregation; see _probe_shard_frame)
-_SHARD_PROBE_CACHE: dict[tuple, tuple] = {}
-
-# grouped-frame probe memo (round-6, verdict task 4): (appId,
-# fingerprint) → broadcast. Iterative pipelines that re-probe an
-# unchanged cached grouped filters frame per round (e.g. dedup
-# verification passes) then skip the per-call blob collect + token
-# hash + broadcast dump — the same treatment shard frames got in r5.
-_GROUPED_PROBE_CACHE: dict[tuple, object] = {}
-
-# filter maps at least this big (in total) are materialized once into
-# /dev/shm and memory-mapped: N python workers then share ONE
-# page-cached copy instead of N private deserialized arrays. Default
-# raised past the broadcast budget in round 5 — a direct shm-vs-private
-# A/B on a 110 MB TBF forest measured shm NEUTRAL at 8 workers and 40%
-# SLOWER at 32 (5.53 s vs 3.53 s per 4M-key probe, min-of-3; shared
-# tmpfs mappings contend where private heap copies do not), so within
-# the 256 MB broadcast budget private copies win outright. Lower
-# LIBFILTER_SHM_MIN on RSS-constrained executors to trade probe speed
-# for workers x map_bytes of resident memory. (Global shard probes
-# don't hit this trade anymore: _SHM_ASM_MIN below shares the
-# ASSEMBLED state with a private-copy attach, getting both.)
-_SHM_MIN_BYTES = int(os.environ.get("LIBFILTER_SHM_MIN", 256 << 20))
-_SHM_BLOB_FLOOR = int(os.environ.get("LIBFILTER_SHM_BLOB_FLOOR",
-                                     256 << 10))
-
-# Global shard-frame probes ASSEMBLE per-worker state (block slices →
-# one BlockFilter; single-level TBF forest → one concatenated probe
-# matrix). Past this size the assembled state is published ONCE per
-# box to /dev/shm by a single lock-holding worker and attached
-# read-only by the rest — without it, every python worker privately
-# assembles ~map_bytes of state (and unpickles the broadcast first),
-# and worker churn re-pays that repeatedly: measured on a 110 MB /
-# 50M-key TBF-jvm forest at local[32], cold 4M-key probe 17.2 s and
-# post-churn re-probes 6.2 s vs 1.2 s warm. Unlike LIBFILTER_SHM_MIN
-# (which shares raw BLOBS but still deserializes per worker), this
-# shares the finished probe state itself.
-_SHM_ASM_MIN = int(os.environ.get("LIBFILTER_SHM_ASM_MIN", 32 << 20))
-# Attachers COPY the published state into private memory by default:
-# one streaming memcpy per worker (~ms) buys private-heap gather speed
-# — a direct A/B on the 110 MB forest at local[32] measured gathers
-# from the shared tmpfs mapping ~60% slower on a warm 50M-key probe
-# (5.26 s vs 3.25 s) while cold start still improves 3.4× because the
-# copy replaces broadcast-unpickle + re-assembly. Set =0 on
-# RSS-constrained executors to keep the zero-copy mapping (workers
-# then share ONE resident copy at the gather penalty).
-_SHM_ASM_COPY = os.environ.get("LIBFILTER_SHM_ASM_COPY", "1") != "0"
-# how long a non-assembling worker waits for the publisher before
-# falling back to private assembly, and when a lock counts as stale
-# (its holder died mid-assembly). Stale is deliberately LONGER than
-# the wait: a slow-but-alive publisher must not trigger a takeover
-# stampede (waiters give up and assemble privately instead); takeover
-# only heals locks of dead publishers for workers that arrive later.
-_ASM_WAIT_S = float(os.environ.get("LIBFILTER_SHM_ASM_WAIT", "120"))
-_ASM_LOCK_STALE_S = float(os.environ.get("LIBFILTER_SHM_ASM_STALE",
-                                         "300"))
-
-
-def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
-    """Small filters DataFrame → {group_tuple: (family, blob)}."""
-    rows = filters_df.select(*group_cols, "family", "filter").collect()
-    return {tuple(r[c] for c in group_cols): (r["family"], bytes(r["filter"]))
-            for r in rows}
-
+# driver-side memo with two kinds of entry:
+# - ("bc", appId, content token) → the live Broadcast handle, so
+#   repeated probes of an unchanged filter map skip the broadcast dump
+#   (eviction only drops our reference — Spark's ContextCleaner
+#   reclaims unreferenced broadcasts);
+# - (appId, "groupfp" | "shardfp", count, hash, bytes) → what a probe
+#   of that CACHED filters frame broadcast, so a repeat probe (e.g. the
+#   semi-join's, or an iterative pipeline's per-round re-probe) skips
+#   the blob collect, the token hash and the dump (see _fingerprint).
+_MEMO: dict[tuple, object] = {}
+_MEMO_MAX = 24  # a cached-frame probe records two entries
 
 # broadcast-probe budget: past this many bytes of collected filter
 # blobs the driver hop (collect + sc.broadcast) becomes the chokepoint
@@ -116,108 +57,96 @@ def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
 # cogroup — filters stay distributed, probe keys shuffle to them.
 _BROADCAST_MAX = int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
 
+# Global shard-frame probes ASSEMBLE per-worker state (see _Assembled).
+# Past this size the assembled state is published ONCE per box to
+# /dev/shm by a single lock-holding worker and copied by the rest —
+# without it, every python worker privately assembles ~map_bytes of
+# state (and unpickles the broadcast first), and worker churn re-pays
+# that repeatedly: measured on a 110 MB / 50M-key TBF-jvm forest at
+# local[32], cold 4M-key probe 17.2 s and post-churn re-probes 6.2 s vs
+# 1.2 s warm. Attachers COPY the published state into private memory:
+# gathers from the shared tmpfs mapping measured ~60% slower on a warm
+# 50M-key probe (5.26 s vs 3.25 s), while cold start still improves
+# 3.4x because one streaming read replaces unpickle + re-assembly.
+_SHM_ASM_MIN = 32 << 20
+# how long a non-assembling worker waits for the publisher before
+# falling back to private assembly, and when a lock counts as stale
+# (its holder died mid-assembly). Stale is deliberately LONGER than
+# the wait: a slow-but-alive publisher must not trigger a takeover
+# stampede (waiters give up and assemble privately instead); takeover
+# only heals locks of dead publishers for workers that arrive later.
+_ASM_WAIT_S = 120.0
+_ASM_LOCK_STALE_S = 300.0
+# first word of every published image (see _Assembled.to_raw)
+_RAW_MAGIC = 0x4C46_4153_4D02
 
-def _collect_filters_auto(filters_df: DataFrame,
-                          group_cols: list[str]) -> dict | None:
-    """auto-mode collect policy (None ⇒ over budget, caller falls back
-    to the shuffle probe):
+
+def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
+    """Small filters DataFrame → {group_tuple: (family, blob)}."""
+    return _filter_map(
+        filters_df.select(*group_cols, "family", "filter").collect(),
+        group_cols)
+
+
+def _filter_map(rows: list, group_cols: list[str]) -> dict:
+    return {tuple(r[c] for c in group_cols): (r["family"], bytes(r["filter"]))
+            for r in rows}
+
+
+def _is_cached(df: DataFrame) -> bool:
+    sl = df.storageLevel
+    return sl.useMemory or sl.useDisk
+
+
+def _collect_budgeted(filters_df: DataFrame, cols: list[str],
+                      shards: bool = False) -> list | None:
+    """auto-mode collect of ``cols`` + family + filter rows (None ⇒
+    over the broadcast budget; the caller falls back to the shuffle
+    probe). The budget is enforced BEFORE the blobs land in driver
+    memory wherever that is cheap — an over-budget frame is the exact
+    case the budget exists for.
 
     - cached frames, or sessions with ≤64 shuffle partitions: plain
-      collect() — one job, plus a post-collect budget check (warn +
-      shuffle fallback). The iterator costs ~90 ms of sequential
-      mini-job scheduling PER PARTITION (measured 3.0 s on a cached
-      32-partition frame vs 0.25 s collect), so the frames a small
-      session produces must not pay it per probe. The signal is the
-      session conf, which is FREE — asking the frame itself
-      (rdd.getNumPartitions) converts the plan to an RDD at ~230 ms
-      per call, measured as a 2 s regression across one driver query.
-    - bigger-session uncached frames — the shape a 10^5-group build
-      on a real cluster has (hundreds of shuffle partitions):
-      budgeted toLocalIterator. Recompute dominates there (measured
-      1.16 s iterator vs 1.37 s collect on an uncached grouped
-      build), upstream shuffle outputs are reused across the
+      collect() — one job — plus a post-collect budget check. The
+      iterator costs ~90 ms of sequential mini-job scheduling PER
+      PARTITION (measured 3.0 s vs 0.25 s collect on a cached
+      32-partition frame, 4.6 s vs 1.5 s on the 5M-key shard probe
+      bench), so the frames a small session produces must not pay it
+      per probe. The signal is the session conf, which is FREE —
+      rdd.getNumPartitions converts the plan to an RDD at ~230 ms per
+      call. For an uncached SHARD frame a narrow first() job first
+      estimates n_shards × first-blob bytes (shard sizing is uniform,
+      so the estimate is tight).
+    - bigger-session uncached frames — the shape a 10^5-group build on
+      a real cluster has: budgeted toLocalIterator. Recompute dominates
+      there (measured 1.16 s iterator vs 1.37 s collect on an uncached
+      grouped build), upstream shuffle outputs are reused across the
       per-partition jobs, and driver memory stays bounded by the
       budget at ANY group count."""
-    sl = filters_df.storageLevel
-    session_parts = int(filters_df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    if (sl.useMemory or sl.useDisk) or session_parts <= 64:
-        out = collect_filters(filters_df, group_cols)
-        if sum(len(b) for _, b in out.values()) > _BROADCAST_MAX:
-            import warnings
-            warnings.warn(
-                "collected filter blobs exceed LIBFILTER_BROADCAST_MAX; "
-                "falling back to the shuffle probe — pass via='shuffle' "
-                "(or cache less) to skip the driver collect entirely")
-            return None
-        return out
-    out = {}
-    total = 0
-    it = filters_df.select(*group_cols, "family", "filter") \
-        .toLocalIterator(prefetchPartitions=True)
-    for r in it:
-        blob = bytes(r["filter"])
-        total += len(blob)
-        if total > _BROADCAST_MAX:
-            return None
-        out[tuple(r[c] for c in group_cols)] = (r["family"], blob)
-    return out
-
-
-def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
-    """auto-mode collect policy for SHARD frames (None ⇒ over budget,
-    caller falls back to the shuffle probe). Mirrors
-    _collect_filters_auto: the budget must be enforced BEFORE the
-    blobs land in driver memory — an over-budget forest is the exact
-    case the budget exists for. Only UNCACHED frames reach here —
-    cached frames are intercepted by _probe_shard_frame's fingerprint
-    aggregation, which length-checks the budget JVM-side. Big sessions
-    (>64 shuffle partitions) use a budgeted toLocalIterator so a
-    rebuild-per-action frame is read once with driver memory bounded
-    at any shard count; small sessions plain-collect (the iterator's
-    per-partition mini-job scheduling costs more than the blobs it
-    guards against)."""
-    sel = filters_df.select("__shard", "params", "family", "filter")
-    session_parts = int(filters_df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    if session_parts <= 64:
-        # plain collect + budget checks — the iterator pays ~90 ms of
-        # sequential mini-job scheduling PER PARTITION (measured 4.6 s
-        # vs 1.5 s on the 5M-key probe bench), and the over-budget
-        # shard frames the budget guards against are a big-session
-        # shape (hundreds of shuffle partitions). A narrow first()
-        # job estimates n_shards × first-blob bytes BEFORE the blobs
-        # land in driver memory (shard sizing is uniform, so the
-        # estimate is tight); the post-collect check stays as the
-        # exact gate for non-uniform frames.
-        import json as _json
-        head = filters_df.select(
-            "params", F.length("filter").alias("l")).first()
-        if head is None:
-            return []
-        try:
-            n_sh = int(_json.loads(head["params"]).get("n_shards", 1))
-        except (ValueError, TypeError):
-            n_sh = 1
-        if n_sh * int(head["l"]) > _BROADCAST_MAX:
-            import warnings
-            warnings.warn(
-                "estimated shard blobs exceed LIBFILTER_BROADCAST_MAX "
-                "(n_shards x first blob); falling back to the shuffle "
-                "probe before any blob reaches the driver — pass "
-                "via='shuffle' to skip the estimate job too")
-            return None
+    sel = filters_df.select(*cols, "family", "filter")
+    cached = _is_cached(filters_df)
+    if cached or int(filters_df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "200")) <= 64:
+        if shards and not cached:
+            head = filters_df.select(
+                "params", F.length("filter").alias("l")).first()
+            if head is not None and head["l"] * int(json.loads(
+                    head["params"]).get("n_shards", 1)) > _BROADCAST_MAX:
+                warnings.warn(
+                    "estimated shard blobs exceed LIBFILTER_BROADCAST_MAX "
+                    "(n_shards x first blob); falling back to the shuffle "
+                    "probe before any blob reaches the driver — pass "
+                    "via='shuffle' to skip the estimate job too")
+                return None
         rows = sel.collect()
-        if sum(len(r["filter"]) for r in rows) > _BROADCAST_MAX:
-            import warnings
-            warnings.warn(
-                "collected shard blobs exceed LIBFILTER_BROADCAST_MAX; "
-                "falling back to the shuffle probe — pass via='shuffle' "
-                "to skip the driver collect entirely")
-            return None
-        return rows
-    rows = []
-    total = 0
+        if sum(len(r["filter"]) for r in rows) <= _BROADCAST_MAX:
+            return rows
+        warnings.warn(
+            "collected filter blobs exceed LIBFILTER_BROADCAST_MAX; "
+            "falling back to the shuffle probe — pass via='shuffle' "
+            "(or cache less) to skip the driver collect entirely")
+        return None
+    rows, total = [], 0
     for r in sel.toLocalIterator(prefetchPartitions=True):
         total += len(r["filter"])
         if total > _BROADCAST_MAX:
@@ -226,22 +155,128 @@ def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
     return rows
 
 
-def _assembled_block_bytes(slice_blobs: list[bytes]) -> bytes:
-    """Concatenate disjoint block_slice blobs into the raw LE-u32 byte
-    array of the GLOBAL filter (missing shards = zero ranges = no keys),
-    byte-identical to assemble_block_shards' export."""
-    from ..filters.block import BlockSliceFilter
-    slices = [BlockSliceFilter.deserialize(b) for b in slice_blobs]
-    nb = slices[0].num_buckets
-    out = bytearray(nb * 32)
-    for sl in slices:
-        off = sl.lo * 32
-        blob = sl.state.astype("<u4", copy=False).tobytes()
-        out[off:off + len(blob)] = blob
-    return bytes(out)
+def _all_same(sigs) -> bool:
+    """Eligibility test: at least one signature, all equal, none None
+    (None marks a blob that cannot join the assembled state)."""
+    sigs = list(sigs)
+    return bool(sigs) and sigs[0] is not None \
+        and sigs.count(sigs[0]) == len(sigs)
 
 
-class _TbfForestProbe:
+def _tbf_levels(blob: bytes) -> list:
+    """Level arrays of a taffy_block blob (zero-copy views)."""
+    from ..filters.taffy_block import TaffyBlockFilter
+    return TaffyBlockFilter.deserialize_view(
+        np.frombuffer(blob, dtype=np.uint8)).levels
+
+
+class _Assembled:
+    """One assembled probe kind: the shards of a global shard frame
+    concatenated into ONE probe state, so a batch runs hash → bucket
+    index → gather → compare once for all shards (libfilter's ``find``
+    on a fixed layout, ``block.h:140-152`` / ``taffy-cuckoo.h:236-273``)
+    instead of the grouped route's per-batch segmentation and S tiny
+    ``find_hashes`` calls.
+
+    A kind declares the ``family`` of its shard rows and implements
+    ``eligible`` (the driver's cheap header check), ``_build``,
+    ``_image``/``_sizes``/``_from_parts`` (the /dev/shm image) and
+    ``find(keys, binary)`` — ``binary`` tells the forests' xxhash64
+    routing replica how the key column was hashed."""
+
+    family = ""
+
+    @classmethod
+    def assemble(cls, n_shards: int, blobs: dict):
+        """{shard: blob} → probe object, or None when the shards are
+        not eligible for this kind."""
+        if not cls.eligible(n_shards, blobs):
+            return None
+        return cls._build(n_shards, blobs)
+
+    @staticmethod
+    def payload(n_shards: int, blobs: dict):
+        """What the broadcast carries for this kind (see _split)."""
+        return n_shards, blobs
+
+    def to_raw(self) -> np.ndarray:
+        """Flat u64 image for the /dev/shm publisher: [magic, n_shards,
+        len(dims), dims…, arrays…]. The dims fix every array's size, so
+        from_raw can demand the exact image size."""
+        dims, arrays = self._image()
+        head = np.array([_RAW_MAGIC, self.n_shards, len(dims), *dims],
+                        dtype=np.uint64)
+        return np.concatenate(
+            [head] + [np.ascontiguousarray(a).reshape(-1).view(np.uint64)
+                      for a in arrays])
+
+    @classmethod
+    def from_raw(cls, n_shards: int, raw: np.ndarray):
+        """Inverse of to_raw; None unless the header carries the magic
+        and this ``n_shards`` and the image is exactly as long as its
+        dims imply (truncated or foreign file ⇒ the caller assembles
+        privately)."""
+        if raw.size < 3 or int(raw[0]) != _RAW_MAGIC \
+                or int(raw[1]) != n_shards:
+            return None
+        head = 3 + int(raw[2])
+        dims = [int(x) for x in raw[3:head]]
+        sizes = cls._sizes(n_shards, dims) \
+            if len(dims) == head - 3 else None
+        if sizes is None or raw.size != head + sum(sizes):
+            return None
+        ends = list(accumulate([head, *sizes]))
+        return cls._from_parts(n_shards, dims,
+                               [raw[a:b] for a, b in zip(ends, ends[1:])])
+
+
+class _BlockSliceProbe(_Assembled, BlockFilter):
+    """A ``bucket_range`` shard frame's disjoint slices written into
+    the GLOBAL block filter (missing shards = zero ranges = no keys),
+    byte-identical to assemble_block_shards' export: a plain global
+    probe — no shard column, no per-batch groupby."""
+
+    family = "block_slice"
+
+    def __init__(self, n_shards: int, state: np.ndarray):
+        BlockFilter.__init__(self, state)
+        self.n_shards = n_shards
+
+    @classmethod
+    def eligible(cls, n_shards: int, blobs: dict) -> bool:
+        # every slice names one global bucket count (header word 0)
+        return _all_same(b[:8] for b in blobs.values())
+
+    @classmethod
+    def _build(cls, n_shards: int, blobs: dict):
+        slices = [BlockSliceFilter.deserialize(b) for b in blobs.values()]
+        w = K.WORDS_PER_BUCKET
+        state = np.zeros(slices[0].num_buckets * w, dtype=np.uint32)
+        for sl in slices:
+            state[sl.lo * w:sl.lo * w + sl.state.size] = sl.state
+        return cls(n_shards, state)
+
+    @staticmethod
+    def payload(n_shards: int, blobs: dict):
+        # a bare blob list: every slice carries its own bucket range
+        return list(blobs.values())
+
+    def _image(self):
+        return [self.state.size // K.WORDS_PER_BUCKET], [self.state]
+
+    @staticmethod
+    def _sizes(n_shards: int, dims: list):
+        return [4 * dims[0]] if len(dims) == 1 else None
+
+    @classmethod
+    def _from_parts(cls, n_shards: int, dims: list, parts: list):
+        return cls(n_shards, parts[0].view(np.uint32))
+
+    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
+        return self.find_hashes(keys)
+
+
+class _TbfForestProbe(_Assembled):
     """Assembled probe view of a SINGLE-LEVEL taffy_block forest (the
     jvm engine's shape: pre-sized shards that never upsized). All
     shards share one level-0 bucket count, so the whole forest
@@ -249,46 +284,47 @@ class _TbfForestProbe:
     ONE vectorized pass: global bucket = shard × nb + level-0 bucket.
     This removes the grouped route's per-batch pandas groupby and its
     S tiny find_hashes calls — measured 875 ns/key there vs the
-    ~120 ns/key block-probe floor this path runs at."""
+    ~120 ns/key block-probe floor this path runs at. Kept apart from
+    _TbfForestMultiProbe, which measured 5–24% slower per key on a
+    single-level forest."""
+
+    family = "taffy_block"
 
     def __init__(self, n_shards: int, num_buckets: int,
-                 state64: "np.ndarray"):
+                 state64: np.ndarray):
         self.n_shards = n_shards
         self.num_buckets = num_buckets
         self.b64 = state64.reshape(-1, 4)          # (S*nb, 4) u64
 
     @classmethod
-    def assemble(cls, n_shards: int, shard_blobs: dict[int, bytes]):
-        """→ _TbfForestProbe, or None when the forest is not eligible
-        (multi-level shards or non-uniform level-0 sizes). Levels are
-        read through deserialize_view (zero-copy) so assembly costs
-        exactly one pass over the blobs."""
-        from ..filters.taffy_block import TaffyBlockFilter
-        from ..kernels import block as K
-        nb = None
-        levels: dict[int, np.ndarray] = {}
-        for s, blob in shard_blobs.items():
-            f = TaffyBlockFilter.deserialize_view(
-                np.frombuffer(blob, dtype=np.uint8))
-            if len(f.levels) != 1:
-                return None
-            lvl_nb = f.levels[0].size // K.WORDS_PER_BUCKET
-            if nb is None:
-                nb = lvl_nb
-            elif nb != lvl_nb:
-                return None
-            levels[s] = f.levels[0]
-        if nb is None:
-            return None
-        state = np.zeros(n_shards * nb * K.WORDS_PER_BUCKET,
-                         dtype=np.uint32)
-        span = nb * K.WORDS_PER_BUCKET
+    def eligible(cls, n_shards: int, blobs: dict) -> bool:
+        # single-level shards sharing one level-0 size
+        return _all_same(
+            lv[0].size if len(lv) == 1 else None
+            for lv in map(_tbf_levels, blobs.values()))
+
+    @classmethod
+    def _build(cls, n_shards: int, blobs: dict):
+        levels = {s: _tbf_levels(b)[0] for s, b in blobs.items()}
+        span = next(iter(levels.values())).size
+        state = np.zeros(n_shards * span, dtype=np.uint32)
         for s, lvl in levels.items():
             state[s * span:(s + 1) * span] = lvl
-        return cls(n_shards, nb, state.view(np.uint64))
+        return cls(n_shards, span // K.WORDS_PER_BUCKET,
+                   state.view(np.uint64))
 
-    def find(self, keys: "np.ndarray", binary: bool) -> "np.ndarray":
-        from ..kernels import block as K
+    def _image(self):
+        return [self.num_buckets], [self.b64]
+
+    @staticmethod
+    def _sizes(n_shards: int, dims: list):
+        return [4 * n_shards * dims[0]] if len(dims) == 1 else None
+
+    @classmethod
+    def _from_parts(cls, n_shards: int, dims: list, parts: list):
+        return cls(n_shards, dims[0], parts[0])
+
+    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..kernels.keys import shard_of_keys
         if len(keys) == 0:
             return np.zeros(0, dtype=bool)
@@ -301,7 +337,7 @@ class _TbfForestProbe:
         return (g == m64).all(axis=1)
 
 
-class _TbfForestMultiProbe:
+class _TbfForestMultiProbe(_Assembled):
     """Assembled probe view of a GROWN (multi-level) taffy_block
     forest. Every shard of a forest is created with the same
     (per-shard ndv, fpp), so level ``i``'s bucket count is a function
@@ -320,8 +356,10 @@ class _TbfForestMultiProbe:
     assembled block probe). Lane masks are computed ONCE per batch and
     compressed along with the keys (they depend only on the key)."""
 
+    family = "taffy_block"
+
     def __init__(self, n_shards: int, nbs: list[int],
-                 offsets: "np.ndarray", mats: list):
+                 offsets: np.ndarray, mats: list):
         self.n_shards = n_shards
         self.nbs = nbs            # bucket count of absolute level i
         self.offsets = offsets    # (L, S) int64 row offsets, -1 missing
@@ -332,34 +370,26 @@ class _TbfForestMultiProbe:
                      for i in range(len(mats))]
 
     @classmethod
-    def assemble(cls, n_shards: int, shard_blobs: dict[int, bytes]):
-        """→ _TbfForestMultiProbe, or None when any absolute level
-        index has two bucket counts across shards (foreign shards —
-        cannot happen for one forest's shared creation params)."""
-        from ..filters.taffy_block import TaffyBlockFilter
-        from ..kernels import block as K
-        per: dict[int, list] = {}
-        n_levels = 0
-        for s, blob in shard_blobs.items():
-            f = TaffyBlockFilter.deserialize_view(
-                np.frombuffer(blob, dtype=np.uint8))
-            per[s] = f.levels
-            n_levels = max(n_levels, len(f.levels))
-        if not n_levels:
-            return None
-        nbs: list[int | None] = [None] * n_levels
-        for levels in per.values():
-            for i, lvl in enumerate(levels):
-                nb = lvl.size // K.WORDS_PER_BUCKET
-                if nbs[i] is None:
-                    nbs[i] = nb
-                elif nbs[i] != nb:
-                    return None
+    def eligible(cls, n_shards: int, blobs: dict) -> bool:
+        # every absolute level index has one size across shards: true
+        # for one forest's shards (the level schedule is a function of
+        # the shared creation params), false for foreign mixes
+        sizes = [tuple(lvl.size for lvl in _tbf_levels(b))
+                 for b in blobs.values()]
+        longest = max(sizes, key=len, default=())
+        return bool(longest) and all(s == longest[:len(s)] for s in sizes)
+
+    @classmethod
+    def _build(cls, n_shards: int, blobs: dict):
+        per = {s: _tbf_levels(b) for s, b in blobs.items()}
+        n_levels = max(len(lv) for lv in per.values())
+        nbs = []
         offsets = np.full((n_levels, n_shards), -1, dtype=np.int64)
         mats = []
         for i in range(n_levels):
             have = sorted(s for s, lv in per.items() if len(lv) > i)
-            span = nbs[i] * K.WORDS_PER_BUCKET
+            span = per[have[0]][i].size
+            nbs.append(span // K.WORDS_PER_BUCKET)
             m = np.zeros(len(have) * span, dtype=np.uint32)
             for j, s in enumerate(have):
                 m[j * span:(j + 1) * span] = per[s][i]
@@ -367,44 +397,25 @@ class _TbfForestMultiProbe:
             mats.append(m.view(np.uint64).reshape(-1, 4))
         return cls(n_shards, nbs, offsets, mats)
 
-    def to_raw(self) -> "np.ndarray":
-        """Flat u64 image for the /dev/shm publisher: [L, S, nb×L,
-        rows×L, offsets (L·S), level matrices]."""
-        head = np.array([len(self.mats), self.n_shards, *self.nbs,
-                         *[m.shape[0] for m in self.mats]],
-                        dtype=np.uint64)
-        return np.concatenate(
-            [head, self.offsets.ravel().view(np.uint64)]
-            + [m.ravel() for m in self.mats])
+    def _image(self):
+        return ([len(self.mats), *self.nbs, *(m.shape[0] for m in self.mats)],
+                [self.offsets, *self.mats])
+
+    @staticmethod
+    def _sizes(n_shards: int, dims: list):
+        n = dims[0] if dims else 0
+        if n < 1 or len(dims) != 1 + 2 * n:
+            return None
+        return [n * n_shards, *(4 * r for r in dims[1 + n:])]
 
     @classmethod
-    def from_raw(cls, n_shards: int, raw: "np.ndarray"):
-        """Inverse of to_raw; None on any size mismatch (truncated or
-        foreign file ⇒ caller assembles privately)."""
-        if raw.size < 2:
-            return None
-        n_levels, s = int(raw[0]), int(raw[1])
-        if s != n_shards or not 1 <= n_levels <= 64:
-            return None
-        head = 2 + 2 * n_levels
-        if raw.size < head + n_levels * n_shards:
-            return None
-        nbs = [int(x) for x in raw[2:2 + n_levels]]
-        rows = [int(x) for x in raw[2 + n_levels:head]]
-        if raw.size != head + n_levels * n_shards + 4 * sum(rows):
-            return None
-        off = np.asarray(
-            raw[head:head + n_levels * n_shards]).view(np.int64) \
-            .reshape(n_levels, n_shards)
-        mats = []
-        pos = head + n_levels * n_shards
-        for r in rows:
-            mats.append(raw[pos:pos + 4 * r].reshape(-1, 4))
-            pos += 4 * r
-        return cls(n_shards, nbs, off, mats)
+    def _from_parts(cls, n_shards: int, dims: list, parts: list):
+        n = dims[0]
+        return cls(n_shards, dims[1:1 + n],
+                   parts[0].view(np.int64).reshape(n, n_shards),
+                   [p.reshape(-1, 4) for p in parts[1:]])
 
-    def find(self, keys: "np.ndarray", binary: bool) -> "np.ndarray":
-        from ..kernels import block as K
+    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..kernels.keys import shard_of_keys
         n = len(keys)
         if n == 0:
@@ -443,7 +454,30 @@ class _TbfForestMultiProbe:
         return out
 
 
-class _FrozenTcfForestProbe:
+def _tcf_sig(blob: bytes, magic: bytes, n_shards: int, spans) -> bytes | None:
+    """Eligibility signature of a taffy-cuckoo blob: the header bytes at
+    ``spans`` (log_side_size + entropy — a 65-byte compare, no bucket
+    data touched), or None for a foreign blob or when stash codes,
+    which pack (shard << (log + HEAD)) | path into one u64, would
+    alias shards (unreachable for realistic forests)."""
+    from ..filters.taffy_cuckoo import HEAD
+    if blob[:4] != magic or len(blob) < spans[-1].stop \
+            or (n_shards - 1).bit_length() + blob[4] + HEAD > 64:
+        return None
+    return b"".join(blob[s] for s in spans)
+
+
+def _tcf_sizes(n_shards: int, dims: list, stash_arrays: int):
+    """Array sizes of a TCF image with dims [log, ns0, ns1, entropy×8]:
+    present (S), two (S << log)-word sides, then the stash arrays."""
+    if len(dims) != 11 or not 1 <= dims[0] <= 48:
+        return None
+    span = n_shards << dims[0]
+    return [n_shards, span, span,
+            *[dims[1]] * stash_arrays, *[dims[2]] * stash_arrays]
+
+
+class _FrozenTcfForestProbe(_Assembled):
     """Assembled probe view of a FROZEN taffy-cuckoo forest (the
     read-only serving shape, ``taffy-cuckoo.h:236-273``). Frozen
     buckets are flat 4×10-bit SWAR words and every shard of a
@@ -460,8 +494,10 @@ class _FrozenTcfForestProbe:
     with the grouped route, which the fp==0 always-true quirk would
     otherwise break on missing shards)."""
 
+    family = "frozen_taffy_cuckoo"
+
     def __init__(self, n_shards: int, log: int, entropy: tuple,
-                 data: list, stashes: list, present: "np.ndarray"):
+                 data: list, stashes: list, present: np.ndarray):
         self.n_shards = n_shards
         self.log = log
         self.entropy = entropy
@@ -470,26 +506,19 @@ class _FrozenTcfForestProbe:
         self.present = present    # (S,) bool
 
     @classmethod
-    def assemble(cls, n_shards: int, shard_blobs: dict[int, bytes]):
-        """→ _FrozenTcfForestProbe, or None when shards are not
-        uniform (different log_side_size or entropy — a grown shard)."""
+    def eligible(cls, n_shards: int, blobs: dict) -> bool:
+        from ..filters.taffy_cuckoo import _FROZEN_MAGIC
+        return _all_same(_tcf_sig(b, _FROZEN_MAGIC, n_shards,
+                                  (slice(4, 69),))
+                         for b in blobs.values())
+
+    @classmethod
+    def _build(cls, n_shards: int, blobs: dict):
         from ..filters.taffy_cuckoo import HEAD, FrozenTaffyCuckooFilter
-        log = entropy = None
-        per = {}
-        for s, blob in shard_blobs.items():
-            f = FrozenTaffyCuckooFilter.deserialize(blob)
-            if log is None:
-                log, entropy = f.log_side_size, f.entropy
-            elif f.log_side_size != log or f.entropy != entropy:
-                return None
-            per[s] = f
-        if log is None:
-            return None
-        if (n_shards - 1).bit_length() + log + HEAD > 64:
-            # stash codes pack (shard << (log+HEAD)) | path into one
-            # u64 — an overflow would alias shards; fall back to the
-            # grouped route (unreachable for realistic forests)
-            return None
+        per = {s: FrozenTaffyCuckooFilter.deserialize(b)
+               for s, b in blobs.items()}
+        first = next(iter(per.values()))
+        log, entropy = first.log_side_size, first.entropy
         nb = 1 << log
         data = [np.zeros(n_shards * nb, dtype=np.uint64)
                 for _ in range(2)]
@@ -509,42 +538,22 @@ class _FrozenTcfForestProbe:
                    for x in stash_parts]
         return cls(n_shards, log, entropy, data, stashes, present)
 
-    def to_raw(self) -> "np.ndarray":
-        """Flat u64 image for the /dev/shm publisher: [log, ns0, ns1,
-        entropy×8, present (S), D0, D1, stash0, stash1]."""
-        header = np.array([self.log, self.stashes[0].size,
-                           self.stashes[1].size, *self.entropy],
-                          dtype=np.uint64)
-        return np.concatenate(
-            [header, self.present.astype(np.uint64),
-             self.data[0], self.data[1],
-             self.stashes[0], self.stashes[1]])
+    def _image(self):
+        return ([self.log, self.stashes[0].size, self.stashes[1].size,
+                 *self.entropy],
+                [self.present.astype(np.uint64), *self.data,
+                 *self.stashes])
+
+    @staticmethod
+    def _sizes(n_shards: int, dims: list):
+        return _tcf_sizes(n_shards, dims, 1)
 
     @classmethod
-    def from_raw(cls, n_shards: int, raw: "np.ndarray"):
-        """Inverse of to_raw; None on any size mismatch (truncated or
-        foreign file ⇒ caller assembles privately)."""
-        if raw.size < 11 + n_shards:
-            return None
-        log, ns0, ns1 = int(raw[0]), int(raw[1]), int(raw[2])
-        if not 1 <= log <= 48:
-            return None
-        nb = 1 << log
-        if raw.size != 11 + n_shards + 2 * n_shards * nb + ns0 + ns1:
-            return None
-        entropy = tuple(int(x) for x in raw[3:11])
-        off = 11
-        present = raw[off:off + n_shards].astype(bool)
-        off += n_shards
-        span = n_shards * nb
-        d0 = raw[off:off + span]
-        d1 = raw[off + span:off + 2 * span]
-        off += 2 * span
-        return cls(n_shards, log, entropy, [d0, d1],
-                   [raw[off:off + ns0], raw[off + ns0:off + ns0 + ns1]],
-                   present)
+    def _from_parts(cls, n_shards: int, dims: list, parts: list):
+        return cls(n_shards, dims[0], tuple(dims[3:]), parts[1:3],
+                   parts[3:5], parts[0].astype(bool))
 
-    def find(self, keys: "np.ndarray", binary: bool) -> "np.ndarray":
+    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..filters.taffy_cuckoo import FP_MASK, HEAD, _has_value_10
         from ..kernels.feistel import feistel_forward_batch
         from ..kernels.keys import shard_of_keys
@@ -576,7 +585,7 @@ class _FrozenTcfForestProbe:
         return out & self.present[shards]
 
 
-class _LiveTcfForestProbe:
+class _LiveTcfForestProbe(_Assembled):
     """Assembled probe view of a LIVE (absorb-capable) taffy-cuckoo
     forest. Live buckets are 4×u16 slots ``tail:6|fingerprint:10``
     (``taffy-cuckoo.h:68-73``) and every shard of a pre-sized forest
@@ -593,9 +602,11 @@ class _LiveTcfForestProbe:
     offsets); keys routed to a shard with NO row in the frame report
     False, matching the grouped route."""
 
+    family = "taffy_cuckoo"
+
     def __init__(self, n_shards: int, log: int, entropy: tuple,
                  data: list, stash_codes: list, stash_tails: list,
-                 present: "np.ndarray"):
+                 present: np.ndarray):
         self.n_shards = n_shards
         self.log = log
         self.entropy = entropy
@@ -605,27 +616,21 @@ class _LiveTcfForestProbe:
         self.present = present          # (S,) bool
 
     @classmethod
-    def assemble(cls, n_shards: int, shard_blobs: dict[int, bytes]):
-        """→ _LiveTcfForestProbe, or None when shards are not uniform
-        (different log_side_size or entropy — a shard that upsized
-        past its siblings)."""
+    def eligible(cls, n_shards: int, blobs: dict) -> bool:
+        # serialize(): magic 4B | log 1B + occupied 8B | rng 24B |
+        # entropy 64B — compare log + entropy (the rng state varies)
+        from ..filters.taffy_cuckoo import _MAGIC
+        return _all_same(_tcf_sig(b, _MAGIC, n_shards,
+                                  (slice(4, 5), slice(37, 101)))
+                         for b in blobs.values())
+
+    @classmethod
+    def _build(cls, n_shards: int, blobs: dict):
         from ..filters.taffy_cuckoo import HEAD, SLOTS, TaffyCuckooFilter
-        log = entropy = None
-        per = {}
-        for s, blob in shard_blobs.items():
-            f = TaffyCuckooFilter.deserialize(blob)
-            if log is None:
-                log, entropy = f.log_side_size, f.entropy
-            elif f.log_side_size != log or f.entropy != entropy:
-                return None
-            per[s] = f
-        if log is None:
-            return None
-        if (n_shards - 1).bit_length() + log + HEAD > 64:
-            # stash codes pack (shard << (log+HEAD)) | path into one
-            # u64 — an overflow would alias shards; fall back to the
-            # grouped route (unreachable for realistic forests)
-            return None
+        per = {s: TaffyCuckooFilter.deserialize(b)
+               for s, b in blobs.items()}
+        first = next(iter(per.values()))
+        log, entropy = first.log_side_size, first.entropy
         nb = 1 << log
         data = [np.zeros((n_shards * nb, SLOTS), dtype=np.uint16)
                 for _ in range(2)]
@@ -641,64 +646,35 @@ class _LiveTcfForestProbe:
                             ((s << (log + HEAD)) | (b << HEAD) | fp, t))
         codes, tails = [], []
         for i in range(2):
-            if st_parts[i]:
-                arr = np.array(sorted(st_parts[i]), dtype=np.uint64)
-                codes.append(np.ascontiguousarray(arr[:, 0]))
-                tails.append(arr[:, 1].astype(np.int64))
-            else:
-                codes.append(np.zeros(0, dtype=np.uint64))
-                tails.append(np.zeros(0, dtype=np.int64))
+            arr = np.array(sorted(st_parts[i]),
+                           dtype=np.uint64).reshape(-1, 2)
+            codes.append(np.ascontiguousarray(arr[:, 0]))
+            tails.append(arr[:, 1].astype(np.int64))
         return cls(n_shards, log, entropy, data, codes, tails, present)
 
-    def to_raw(self) -> "np.ndarray":
-        """Flat u64 image for the /dev/shm publisher: [log, ns0, ns1,
-        entropy×8, present (S), D0, D1, codes0, tails0, codes1,
-        tails1]. A 4-slot u16 bucket row is exactly one u64 word."""
-        header = np.array([self.log, self.stash_codes[0].size,
-                           self.stash_codes[1].size, *self.entropy],
-                          dtype=np.uint64)
-        return np.concatenate(
-            [header, self.present.astype(np.uint64),
-             np.ascontiguousarray(self.data[0]).reshape(-1)
-             .view(np.uint64),
-             np.ascontiguousarray(self.data[1]).reshape(-1)
-             .view(np.uint64),
-             self.stash_codes[0], self.stash_tails[0].view(np.uint64),
-             self.stash_codes[1], self.stash_tails[1].view(np.uint64)])
+    def _image(self):
+        # a 4-slot u16 bucket row is exactly one u64 word
+        return ([self.log, self.stash_codes[0].size,
+                 self.stash_codes[1].size, *self.entropy],
+                [self.present.astype(np.uint64), *self.data,
+                 self.stash_codes[0], self.stash_tails[0],
+                 self.stash_codes[1], self.stash_tails[1]])
+
+    @staticmethod
+    def _sizes(n_shards: int, dims: list):
+        return _tcf_sizes(n_shards, dims, 2)
 
     @classmethod
-    def from_raw(cls, n_shards: int, raw: "np.ndarray"):
-        """Inverse of to_raw; None on any size mismatch (truncated or
-        foreign file ⇒ caller assembles privately)."""
+    def _from_parts(cls, n_shards: int, dims: list, parts: list):
         from ..filters.taffy_cuckoo import SLOTS
-        if raw.size < 11 + n_shards:
-            return None
-        log, ns0, ns1 = int(raw[0]), int(raw[1]), int(raw[2])
-        if not 1 <= log <= 48:
-            return None
-        nb = 1 << log
-        span = n_shards * nb
-        if raw.size != 11 + n_shards + 2 * span + 2 * (ns0 + ns1):
-            return None
-        entropy = tuple(int(x) for x in raw[3:11])
-        off = 11
-        present = raw[off:off + n_shards].astype(bool)
-        off += n_shards
-        data = []
-        for _ in range(2):
-            data.append(np.ascontiguousarray(raw[off:off + span])
-                        .view(np.uint16).reshape(-1, SLOTS))
-            off += span
-        codes, tails = [], []
-        for ns in (ns0, ns1):
-            codes.append(np.ascontiguousarray(raw[off:off + ns]))
-            off += ns
-            tails.append(np.ascontiguousarray(raw[off:off + ns])
-                         .view(np.int64))
-            off += ns
-        return cls(n_shards, log, entropy, data, codes, tails, present)
+        return cls(n_shards, dims[0], tuple(dims[3:]),
+                   [p.view(np.uint16).reshape(-1, SLOTS)
+                    for p in parts[1:3]],
+                   [parts[3], parts[5]],
+                   [parts[4].view(np.int64), parts[6].view(np.int64)],
+                   parts[0].astype(bool))
 
-    def find(self, keys: "np.ndarray", binary: bool) -> "np.ndarray":
+    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..filters.taffy_cuckoo import FP_MASK, HEAD, TAIL
         from ..kernels.feistel import (feistel_forward_batch_lean,
                                        is_prefix_of_batch)
@@ -752,76 +728,38 @@ class _LiveTcfForestProbe:
         return out & self.present[shards]
 
 
-def _live_tcf_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled live-TCF probe: every
-    shard shares one (log_side_size, entropy) header — a 65-byte
-    compare at fixed offsets (serialize(): magic 4B | log 1B +
-    occupied 8B | rng 24B | entropy 64B), no slot data touched."""
-    from ..filters.taffy_cuckoo import _MAGIC
-    sig = None
-    for blob in shard_blobs.values():
-        if blob[:4] != _MAGIC or len(blob) < 101:
-            return False
-        hdr = blob[4:5] + blob[37:101]  # log + entropy (rng varies)
-        if sig is None:
-            sig = hdr
-        elif hdr != sig:
-            return False
-    return sig is not None
+# kind → assembled class. A global shard frame takes the FIRST kind
+# whose family matches all its rows and whose shards are eligible, so a
+# single-level TBF forest gets the one-matrix probe. Frames no kind
+# takes probe through the grouped route on a JVM-derived shard column.
+# minimal_taffy_cuckoo forests deliberately stay grouped: each shard's
+# level geometry depends on its own cursor (which levels doubled) and
+# per-side hi/lo permutations, so a shared-permutation concatenated
+# matrix does not exist unless every shard grew in lockstep — and the
+# measured headroom is small (100M sweep: MTCF grouped 14.3 Mk/s vs
+# TCF assembled 16.7, BENCH/growth100m.json).
+_ASSEMBLED = {
+    "block_slice_set": _BlockSliceProbe,
+    "tbf_level0_set": _TbfForestProbe,
+    "tbf_forest_set": _TbfForestMultiProbe,
+    "frozen_tcf_set": _FrozenTcfForestProbe,
+    "tcf_set": _LiveTcfForestProbe,
+}
 
 
-def _frozen_tcf_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled frozen-TCF probe:
-    every shard shares one (log_side_size, entropy) header — a
-    65-byte prefix compare, no bucket data touched."""
-    from ..filters.taffy_cuckoo import _FROZEN_MAGIC
-    sig = None
-    for blob in shard_blobs.values():
-        if blob[:4] != _FROZEN_MAGIC or len(blob) < 69:
-            return False
-        hdr = blob[4:69]  # log (1B) + entropy (64B)
-        if sig is None:
-            sig = hdr
-        elif hdr != sig:
-            return False
-    return sig is not None
+def _split(payload) -> tuple[int, dict]:
+    """(n_shards, {shard: blob}) of an assembled map entry: forests
+    broadcast exactly that tuple, block slices a bare blob list (one
+    per non-empty shard)."""
+    if isinstance(payload, tuple):
+        return payload
+    return len(payload), dict(enumerate(payload))
 
 
-def _tbf_level0_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled forest probe: every
-    shard single-level with one shared level-0 bucket count
-    (zero-copy header reads — no blob is materialized twice)."""
-    from ..filters.taffy_block import TaffyBlockFilter
-    nb = None
-    for blob in shard_blobs.values():
-        f = TaffyBlockFilter.deserialize_view(
-            np.frombuffer(blob, dtype=np.uint8))
-        if len(f.levels) != 1:
-            return False
-        if nb is None:
-            nb = f.levels[0].size
-        elif f.levels[0].size != nb:
-            return False
-    return nb is not None
-
-
-def _tbf_forest_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled MULTI-level forest
-    probe: every absolute level index has one bucket count across all
-    shards (zero-copy header reads). Always true for one forest's
-    shards — the level schedule is a function of the shared creation
-    params — so this only rejects frames mixing foreign filters."""
-    from ..filters.taffy_block import TaffyBlockFilter
-    sizes: dict[int, int] = {}
-    seen = False
-    for blob in shard_blobs.values():
-        f = TaffyBlockFilter.deserialize_view(
-            np.frombuffer(blob, dtype=np.uint8))
-        for i, lvl in enumerate(f.levels):
-            seen = True
-            if sizes.setdefault(i, lvl.size) != lvl.size:
-                return False
-    return seen
+def _assemble(kind: str, payload):
+    obj = _ASSEMBLED[kind].assemble(*_split(payload))
+    assert obj is not None  # driver checked eligibility
+    return obj
 
 
 def _content_token(filter_map: dict) -> str:
@@ -865,49 +803,6 @@ def _blob_bytes(blob) -> int:
     return sum(len(x) for x in blob)
 
 
-def _shm_blob(token: str, g, blob: bytes) -> "np.memmap":
-    """Write the blob once to /dev/shm (atomic rename; first writer
-    wins) and return a read-only byte memmap — N python workers then
-    share ONE page-cached copy."""
-    import hashlib
-
-    import numpy as np
-
-    name = hashlib.sha256(
-        (token + repr(g)).encode()).hexdigest()[:24]
-    path = f"/dev/shm/libfilter_{name}.u4"
-    # best-effort TTL sweep so abandoned filters don't pin shm
-    import glob
-    import time
-    for old in glob.glob("/dev/shm/libfilter_*.u4"):
-        try:
-            if time.time() - os.path.getmtime(old) > 3600:
-                os.unlink(old)
-        except OSError:
-            pass
-    if not os.path.exists(path):
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, path)
-    return np.memmap(path, dtype=np.uint8, mode="r")
-
-
-def _filter_via_shm(token: str, g, fam: str, blob: bytes):
-    """shm-backed zero-copy deserialization for the families whose
-    probe state is flat arrays (block: the raw u4 array; taffy_block:
-    read-only level views via deserialize_view)."""
-    import numpy as np
-
-    from ..filters.block import BlockFilter
-    from ..filters.taffy_block import TaffyBlockFilter
-
-    arr = _shm_blob(token, g, blob)
-    if fam == "block":
-        return BlockFilter(arr.view(np.uint32))
-    return TaffyBlockFilter.deserialize_view(arr)
-
-
 def _asm_path(token: str, kind: str) -> str:
     import hashlib
     digest = hashlib.sha256((token + kind).encode()).hexdigest()[:24]
@@ -915,18 +810,16 @@ def _asm_path(token: str, kind: str) -> str:
 
 
 def _attach_assembled(asm_meta: dict):
-    """Attach the shared ASSEMBLED probe state for a global shard
-    probe, if some worker already published it to /dev/shm. Returns
-    the probe object or None. By default the state is stream-copied
-    into private memory (one memcpy buys THP-speed gathers — see
-    _SHM_ASM_COPY); =0 keeps the read-only memmap. The state is
-    self-describing given the meta: bucket count falls out of the file
-    size, so no header is needed."""
-    from ..filters.block import BlockFilter
-    from ..kernels import block as K
-
+    """Attach the ASSEMBLED probe state some worker already published
+    to /dev/shm, read into private memory (see _SHM_ASM_MIN). Returns
+    the probe object, or None when there is no file or it does not
+    match the meta exactly (see _Assembled.from_raw)."""
     path = _asm_path(asm_meta["token"], asm_meta["kind"])
-    if not os.path.exists(path):
+    try:
+        # u8 then view: a size that is not a whole number of words
+        # raises instead of being silently rounded down
+        raw = np.fromfile(path, dtype=np.uint8).view(np.uint64)
+    except (OSError, ValueError):
         return None
     try:
         # refresh mtime so the TTL sweep in _publish_assembled never
@@ -934,38 +827,8 @@ def _attach_assembled(asm_meta: dict):
         os.utime(path)
     except OSError:
         pass
-    try:
-        if asm_meta["kind"] == "tbf_level0_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            n_sh = int(asm_meta["n_shards"])
-            words = K.WORDS_PER_BUCKET // 2  # u64 words per bucket
-            nb = mm.size // (n_sh * words)
-            if nb * n_sh * words != mm.size or nb == 0:
-                return None  # truncated/foreign file: assemble privately
-            state = np.array(mm) if _SHM_ASM_COPY else mm
-            return _TbfForestProbe(n_sh, nb, state)
-        if asm_meta["kind"] == "tbf_forest_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _TbfForestMultiProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        if asm_meta["kind"] == "frozen_tcf_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _FrozenTcfForestProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        if asm_meta["kind"] == "tcf_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _LiveTcfForestProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        mm32 = np.memmap(path, dtype=np.uint32, mode="r")
-        exp = asm_meta.get("bytes")
-        if exp is not None and mm32.size * 4 != exp:
-            return None  # truncated/foreign file: assemble privately
-        return BlockFilter(np.array(mm32) if _SHM_ASM_COPY else mm32)
-    except (OSError, ValueError):
-        return None
+    return _ASSEMBLED[asm_meta["kind"]].from_raw(
+        int(asm_meta["n_shards"]), raw)
 
 
 def _takeover_stale_lock(lock: str, st: os.stat_result) -> bool:
@@ -999,16 +862,15 @@ def _publish_assembled(asm_meta: dict, build_fn):
     raw_array)``, publishes the raw array at the shared path (atomic
     rename), and keeps its private object; the rest WAIT for the file
     (bounded) instead of burning memory bandwidth on 32 duplicate
-    assemblies, then attach read-only. Returns a probe object, or None
-    when the caller should assemble privately (shm unwritable/full, or
-    the publisher is too slow)."""
+    assemblies, then attach. Returns a probe object, or None when the
+    caller should assemble privately (shm unwritable/full, or the
+    publisher is too slow)."""
+    import glob
     import time
 
     path = _asm_path(asm_meta["token"], asm_meta["kind"])
     lock = path + ".lock"
-    # TTL sweep of abandoned asm state + locks (same policy as
-    # _shm_blob's blob sweep)
-    import glob
+    # best-effort TTL sweep so abandoned state and locks don't pin shm
     for old in glob.glob("/dev/shm/libfilter_asm_*"):
         try:
             age = time.time() - os.path.getmtime(old)
@@ -1066,41 +928,23 @@ def _publish_assembled(asm_meta: dict, build_fn):
                 pass
 
 
-def _filter_cache_put(token: str, cached: dict) -> None:
+def _bounded_put(cache: dict, key, value, cap: int):
+    """Insert under _CACHE_LOCK, evicting oldest-first past ``cap``.
+    An entry a racing thread stored first wins and is returned."""
     with _CACHE_LOCK:
-        while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
-            _FILTER_CACHE.pop(next(iter(_FILTER_CACHE)), None)
-        _FILTER_CACHE[token] = cached
+        if key in cache:
+            return cache[key]
+        while len(cache) >= cap:
+            cache.pop(next(iter(cache)), None)
+        cache[key] = value
+        return value
 
 
 def _asm_build_from_map(filter_map: dict):
-    """Publisher-side builder: the global map's single assembled-kind
-    entry → (probe object, raw array to publish)."""
-    from ..filters.block import BlockFilter
-
-    fam, blob = filter_map[()]
-    if fam == "tbf_level0_set":
-        n_sh, shard_blobs = blob
-        pv = _TbfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.b64
-    if fam == "tbf_forest_set":
-        n_sh, shard_blobs = blob
-        pv = _TbfForestMultiProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    if fam == "frozen_tcf_set":
-        n_sh, shard_blobs = blob
-        pv = _FrozenTcfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    if fam == "tcf_set":
-        n_sh, shard_blobs = blob
-        pv = _LiveTcfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    raw = np.frombuffer(_assembled_block_bytes(blob), np.uint8)
-    return BlockFilter(raw.view(np.uint32)), raw
+    """Publisher-side builder: the global map's assembled entry →
+    (probe object, raw image to publish)."""
+    obj = _assemble(*filter_map[()])
+    return obj, obj.to_raw()
 
 
 def _materialize(bc, asm_meta: dict | None = None) -> dict:
@@ -1116,73 +960,20 @@ def _materialize(bc, asm_meta: dict | None = None) -> dict:
         cached = _FILTER_CACHE.get(asm_meta["token"])
         if cached is not None:
             return cached
-        got = _attach_assembled(asm_meta)
-        if got is None:
-            got = _publish_assembled(
-                asm_meta, lambda: _asm_build_from_map(bc.value[1]))
+        got = _publish_assembled(
+            asm_meta, lambda: _asm_build_from_map(bc.value[1]))
         if got is not None:
-            cached = {(): got}
-            _filter_cache_put(asm_meta["token"], cached)
-            return cached
+            return _bounded_put(_FILTER_CACHE, asm_meta["token"],
+                                {(): got}, _FILTER_CACHE_MAX)
         # shm unavailable or publisher too slow → private assembly
 
     token, filter_map = bc.value
     cached = _FILTER_CACHE.get(token)
     if cached is None:
-        cached = {}
-        # shm triggers on the TOTAL map size (a forest of 128 x 4 MB
-        # shards costs each worker as much private memory as one
-        # 512 MB filter would), with a per-blob floor so 10^4 tiny
-        # groups don't explode into 10^4 shm files
-        total = sum(_blob_bytes(b) for _, b in filter_map.values())
-        use_shm = os.path.isdir("/dev/shm") and total >= _SHM_MIN_BYTES
-        for g, (fam, blob) in filter_map.items():
-            if fam == "tbf_level0_set":
-                # single-level TBF forest: one concatenated probe
-                # matrix per worker (see _TbfForestProbe); the shared
-                # publish path above handled the asm_meta case
-                n_sh, shard_blobs = blob
-                cached[g] = _TbfForestProbe.assemble(n_sh, shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "tbf_forest_set":
-                # grown multi-level TBF forest: per-level concatenated
-                # matrices (see _TbfForestMultiProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _TbfForestMultiProbe.assemble(n_sh,
-                                                          shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "frozen_tcf_set":
-                # uniform frozen-TCF forest: one concatenated SWAR
-                # matrix per side (see _FrozenTcfForestProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _FrozenTcfForestProbe.assemble(n_sh,
-                                                           shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "tcf_set":
-                # uniform LIVE TCF forest: one concatenated u16 slot
-                # matrix per side (see _LiveTcfForestProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _LiveTcfForestProbe.assemble(n_sh,
-                                                         shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "block_slice_set":
-                # shard-frame fast path: assemble the disjoint slices
-                # into ONE BlockFilter per worker (plain global probe —
-                # no shard column, no per-batch groupby)
-                fam, blob = "block", _assembled_block_bytes(blob)
-            if fam in ("block", "taffy_block") and use_shm \
-                    and len(blob) >= _SHM_BLOB_FLOOR:
-                try:
-                    cached[g] = _filter_via_shm(token, g, fam, blob)
-                    continue
-                except OSError:
-                    pass  # shm full/unwritable → private copy
-            cached[g] = FAMILIES[fam].deserialize(blob)
-        _filter_cache_put(token, cached)
+        cached = _bounded_put(_FILTER_CACHE, token, {
+            g: _assemble(fam, blob) if fam in _ASSEMBLED
+            else FAMILIES[fam].deserialize(blob)
+            for g, (fam, blob) in filter_map.items()}, _FILTER_CACHE_MAX)
     return cached
 
 
@@ -1195,6 +986,23 @@ def _with_route_shard(df: DataFrame, key_col: str, p: dict) -> DataFrame:
                                 int(p["n_shards"]))
     from .forest import with_shard
     return with_shard(df, key_col, int(p["n_shards"]))
+
+
+def _fingerprint(filters_df: DataFrame, cols: list[str], *extra):
+    """One-pass JVM fingerprint of a CACHED filters frame: row count,
+    order-free content hash (bit_xor — overflow-free and ANSI-safe;
+    the group/shard columns inside the hash keep equal blobs of
+    different groups from cancelling) and total blob bytes. No blob
+    transfer, and the bytes check the broadcast budget for free."""
+    return filters_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*cols, "family", "filter")).alias("h"),
+        F.sum(F.length("filter")).alias("l"), *extra).first()
+
+
+def _memo_key(df: DataFrame, tag: str, agg) -> tuple:
+    return (df.sparkSession.sparkContext.applicationId, tag,
+            int(agg["n"]), int(agg["h"]), int(agg["l"]))
 
 
 def probe_with_filters(df: DataFrame, filters_df: DataFrame,
@@ -1236,49 +1044,35 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     if via == "shuffle":
         return _probe_via_cogroup(df, filters_df, group_cols, key_col,
                                   result_col)
-    fp_key = None
-    if _collected is None and group_cols:
-        sl = filters_df.storageLevel
-        if sl.useMemory or sl.useDisk:
-            # CACHED grouped frame: one-pass JVM fingerprint (count +
-            # order-free content hash + total bytes — no blob
-            # transfer); a repeat probe of the unchanged frame reuses
-            # the recorded broadcast directly
-            agg = filters_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64(*group_cols, "family", "filter"))
-                .alias("h"),
-                F.sum(F.length("filter")).alias("l")).first()
-            if not agg["n"]:
-                return df.withColumn(result_col, F.lit(False))
-            if via == "auto" and agg["l"] > _BROADCAST_MAX:
-                # over budget, known WITHOUT collecting any blob
-                return _probe_via_cogroup(df, filters_df, group_cols,
-                                          key_col, result_col)
-            fp_key = (df.sparkSession.sparkContext.applicationId,
-                      "groupfp", int(agg["n"]), int(agg["h"]),
-                      int(agg["l"]))
-            with _CACHE_LOCK:
-                bc = _GROUPED_PROBE_CACHE.get(fp_key)
-            if bc is not None:
-                return _broadcast_probe_udf(df, bc, group_cols,
-                                            key_col, result_col)
+    memo_key = None
+    if _collected is None and group_cols and _is_cached(filters_df):
+        # CACHED grouped frame: a repeat probe of the unchanged frame
+        # reuses the recorded broadcast directly
+        agg = _fingerprint(filters_df, group_cols)
+        if not agg["n"]:
+            return df.withColumn(result_col, F.lit(False))
+        if via == "auto" and agg["l"] > _BROADCAST_MAX:
+            # over budget, known WITHOUT collecting any blob
+            return _probe_via_cogroup(df, filters_df, group_cols,
+                                      key_col, result_col)
+        memo_key = _memo_key(df, "groupfp", agg)
+        bc = _MEMO.get(memo_key)
+        if bc is not None:
+            return _broadcast_probe_udf(df, bc, group_cols,
+                                        key_col, result_col)
     if _collected is not None:
         filter_map = _collected
     elif via == "broadcast":
         filter_map = collect_filters(filters_df, group_cols)
     else:
-        filter_map = _collect_filters_auto(filters_df, group_cols)
-        if filter_map is None:  # over budget → keep filters distributed
+        rows = _collect_budgeted(filters_df, group_cols)
+        if rows is None:  # over budget → keep filters distributed
             return _probe_via_cogroup(df, filters_df, group_cols,
                                       key_col, result_col)
+        filter_map = _filter_map(rows, group_cols)
     bc = _get_bc(df.sparkSession, filter_map)
-    if fp_key is not None:
-        with _CACHE_LOCK:
-            while len(_GROUPED_PROBE_CACHE) >= _BC_CACHE_MAX:
-                _GROUPED_PROBE_CACHE.pop(
-                    next(iter(_GROUPED_PROBE_CACHE)), None)
-            _GROUPED_PROBE_CACHE[fp_key] = bc
+    if memo_key is not None:
+        _bounded_put(_MEMO, memo_key, bc, _MEMO_MAX)
     return _broadcast_probe_udf(df, bc, group_cols, key_col, result_col)
 
 
@@ -1289,196 +1083,115 @@ def _get_bc(spark, filter_map: dict, token: str | None = None):
     100 MB map per call) and the worker-side deserialized/assembled
     state (no workers × map_bytes of rebuild memcpy per call; measured
     as the dominant cost of re-probing a 110 MB assembled forest)."""
-    if token is None:
-        token = _content_token(filter_map)
+    token = token or _content_token(filter_map)
     sc = spark.sparkContext
-    cache_key = (sc.applicationId, token)
-    with _CACHE_LOCK:
-        bc = _BC_CACHE.get(cache_key)
+    key = ("bc", sc.applicationId, token)
+    bc = _MEMO.get(key)
     if bc is None:
-        bc = sc.broadcast((token, filter_map))
-        with _CACHE_LOCK:
-            hit = _BC_CACHE.get(cache_key)
-            if hit is not None:
-                return hit  # raced another thread: reuse its broadcast
-            while len(_BC_CACHE) >= _BC_CACHE_MAX:
-                # drop OUR reference only — plans still holding the
-                # evicted broadcast keep it alive; ContextCleaner
-                # reclaims it when the last reference goes
-                _BC_CACHE.pop(next(iter(_BC_CACHE)), None)
-            _BC_CACHE[cache_key] = bc
+        # a racing thread's broadcast wins; ours is left to the
+        # ContextCleaner
+        bc = _bounded_put(_MEMO, key, sc.broadcast((token, filter_map)),
+                          _MEMO_MAX)
     return bc
+
+
+def _probe_shards_via_cogroup(df: DataFrame, filters_df: DataFrame,
+                              key_col: str, result_col: str,
+                              p: dict | None = None) -> DataFrame:
+    """Shard frame on the shuffle route (via='shuffle' or over the
+    budget): attach the routing column and cogroup — the blobs never
+    reach the driver."""
+    if p is None:
+        row = filters_df.select("params").first()
+        if row is None:
+            return df.withColumn(result_col, F.lit(False))
+        p = json.loads(row["params"])
+    probe = _with_route_shard(df, key_col, p)
+    return _probe_via_cogroup(probe, filters_df, ["__shard"], key_col,
+                              result_col).drop("__shard")
 
 
 def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
                        key_col: str, result_col: str,
                        via: str) -> DataFrame:
     """GLOBAL probe against a distributed shard frame (block shards /
-    filter forest). Routes by shape:
+    filter forest). Shapes an _ASSEMBLED kind takes (block slices,
+    single- and multi-level TBF forests, uniform frozen and live TCF
+    forests) assemble into ONE probe object per worker — a plain
+    global probe, measured ~1.5× over the grouped route for slices and
+    ~3× for TBF forests. Anything else probes through the grouped
+    route on a JVM-derived shard column; over-budget frames (or
+    via='shuffle') keep blobs off the driver via the cogroup route.
 
-    - ``bucket_range`` slices and single-level TBF forests assemble
-      into ONE probe object per worker (plain global probe — measured
-      ~1.5× over the grouped route for slices, ~3× for TBF forests:
-      no JVM shard column, no per-batch pandas groupby);
-    - GROWN multi-level TBF forests and uniform frozen-TCF forests
-      assemble per-level/per-side concatenated matrices (see
-      _TbfForestMultiProbe / _FrozenTcfForestProbe);
-    - live cuckoo forests probe through the grouped route on a
-      JVM-derived shard column;
-    - over-budget frames (or via='shuffle') keep blobs off the driver
-      entirely via the cogroup route.
-
-    A CACHED frame pays a one-pass JVM fingerprint aggregation first
-    (count + content xxhash64 + total bytes — no blob transfer);
+    A CACHED frame pays a one-pass JVM fingerprint aggregation first;
     repeat probes of an unchanged frame then skip the blob collect AND
-    the broadcast dump, reusing the recorded (mode, broadcast, params)
-    directly. Uncached frames keep the single-collect flow (a
-    fingerprint pass would recompute their whole upstream build)."""
-    import json as _json
-
-    spark = df.sparkSession
+    the broadcast dump, reusing the memoized (kind, broadcast, params,
+    shm meta) directly. Uncached frames keep the single-collect flow
+    (a fingerprint pass would recompute their whole upstream build)."""
     if via == "shuffle":
-        row = filters_df.select("params").first()
-        if row is None:
-            return df.withColumn(result_col, F.lit(False))
-        p = _json.loads(row["params"])
-        probe = _with_route_shard(df, key_col, p)
-        return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                  key_col, result_col).drop("__shard")
-
-    sl = filters_df.storageLevel
-    fp_key = None
-    if sl.useMemory or sl.useDisk:
-        agg = filters_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and overflow-free (ANSI-safe);
-            # shard id inside the hash keeps equal blobs at different
-            # shards from cancelling
-            F.bit_xor(F.xxhash64("__shard", "family", "filter"))
-            .alias("h"),
-            F.sum(F.length("filter")).alias("l"),
-            F.first("params").alias("p")).first()
+        return _probe_shards_via_cogroup(df, filters_df, key_col,
+                                         result_col)
+    memo_key = None
+    if _is_cached(filters_df):
+        agg = _fingerprint(filters_df, ["__shard"],
+                           F.first("params").alias("p"))
         if not agg["n"]:
             return df.withColumn(result_col, F.lit(False))
-        p = _json.loads(agg["p"])
         if via == "auto" and agg["l"] > _BROADCAST_MAX:
-            probe = _with_route_shard(df, key_col, p)
-            return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                      key_col, result_col).drop("__shard")
-        fp_key = (spark.sparkContext.applicationId, "shardfp",
-                  int(agg["n"]), int(agg["h"]), int(agg["l"]))
-        with _CACHE_LOCK:
-            hit = _SHARD_PROBE_CACHE.get(fp_key)
+            return _probe_shards_via_cogroup(
+                df, filters_df, key_col, result_col, json.loads(agg["p"]))
+        memo_key = _memo_key(df, "shardfp", agg)
+        hit = _MEMO.get(memo_key)
         if hit is not None:
-            mode, bc, p, asm_meta = hit
-            return _probe_from_bc(df, bc, mode, p, key_col, result_col,
-                                  asm_meta)
-        rows = filters_df.select("__shard", "params", "family",
-                                 "filter").collect()
-    elif via == "auto":
-        rows = _collect_shard_rows_auto(filters_df)
+            return _probe_from_bc(df, *hit, key_col, result_col)
+    if via == "auto":
+        rows = _collect_budgeted(filters_df, ["__shard", "params"],
+                                 shards=True)
         if rows is None:  # over budget: blobs never hit the driver
-            row = filters_df.select("params").first()
-            if row is None:
-                return df.withColumn(result_col, F.lit(False))
-            p = _json.loads(row["params"])
-            probe = _with_route_shard(df, key_col, p)
-            return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                      key_col, result_col).drop("__shard")
+            return _probe_shards_via_cogroup(df, filters_df, key_col,
+                                             result_col)
     else:  # via == "broadcast": caller pinned the driver hop
         rows = filters_df.select("__shard", "params", "family",
                                  "filter").collect()
     if not rows:  # empty build side: nothing can match
         return df.withColumn(result_col, F.lit(False))
-    p = _json.loads(rows[0]["params"])
-
-    mode = "grouped"
-    kind = None
-    if p.get("routing") == "bucket_range":
-        # worker-side slice assembly: one BlockFilter per worker,
-        # plain global probe
-        collected = {(): ("block_slice_set",
-                          [bytes(r["filter"]) for r in rows])}
-        mode, kind = "global", "block_slice_set"
-    elif all(r["family"] == "taffy_block" for r in rows):
-        # single-level TBF forest (the jvm engine's shape): one
-        # concatenated probe matrix per worker, ONE vectorized pass
-        # per batch instead of a pandas groupby + S tiny find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _tbf_level0_uniform(shard_blobs):
-            collected = {(): ("tbf_level0_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tbf_level0_set"
-        elif _tbf_forest_uniform(shard_blobs):
-            # grown multi-level forest: per-level concatenated
-            # matrices, newest-first probe with found-lane compression
-            collected = {(): ("tbf_forest_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tbf_forest_set"
-    elif all(r["family"] == "frozen_taffy_cuckoo" for r in rows):
-        # uniform frozen-TCF forest (the read-only serving shape):
-        # concatenated SWAR matrices, shared Feistel keys — one
-        # vectorized two-side pass per batch instead of S find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _frozen_tcf_uniform(shard_blobs):
-            collected = {(): ("frozen_tcf_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "frozen_tcf_set"
-    elif all(r["family"] == "taffy_cuckoo" for r in rows):
-        # uniform LIVE TCF forest (freeze=False / absorb-capable):
-        # concatenated u16 slot matrices, shared Feistel keys — one
-        # vectorized two-side pass per batch instead of S find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _live_tcf_uniform(shard_blobs):
-            collected = {(): ("tcf_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tcf_set"
-    # minimal_taffy_cuckoo forests deliberately stay on the grouped
-    # route: each shard's level geometry depends on its own cursor
-    # (which levels doubled) and per-side hi/lo permutations, so a
-    # shared-permutation concatenated matrix does not exist unless
-    # every shard grew in lockstep — and the measured headroom is
-    # small (100M sweep: MTCF grouped 14.3 Mk/s vs TCF assembled
-    # 16.7, BENCH/growth100m.json).
-    if mode == "grouped":
+    p = json.loads(rows[0]["params"])
+    n_sh = int(p["n_shards"])
+    shard_blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
+    fams = {r["family"] for r in rows}
+    kind = next((k for k, cls in _ASSEMBLED.items()
+                 if fams == {cls.family} and cls.eligible(n_sh, shard_blobs)),
+                None)
+    if kind is None:
         collected = {(int(r["__shard"]),): (r["family"],
                                             bytes(r["filter"]))
                      for r in rows}
+    else:
+        payload = _ASSEMBLED[kind].payload(n_sh, shard_blobs)
+        collected = {(): (kind, payload)}
     token = _content_token(collected)
-    # big assembled state → share it across workers via /dev/shm
-    # (single assembler + read-only attach; see _publish_assembled)
     asm_meta = None
-    if mode == "global" and os.path.isdir("/dev/shm") \
-            and _blob_bytes(collected[()][1]) >= _SHM_ASM_MIN:
+    # big assembled state → share it across workers via /dev/shm
+    # (single assembler + attach; see _publish_assembled)
+    if kind is not None and os.path.isdir("/dev/shm") \
+            and _blob_bytes(payload) >= _SHM_ASM_MIN:
         asm_meta = {"token": token, "kind": kind,
-                    "n_shards": int(p["n_shards"])}
-        if kind == "block_slice_set" and "num_buckets" in p:
-            # exact expected size of the assembled global filter —
-            # lets the attacher reject a truncated/foreign file
-            asm_meta["bytes"] = int(p["num_buckets"]) * 32
-    bc = _get_bc(spark, collected, token)
-    if fp_key is not None:
-        with _CACHE_LOCK:
-            while len(_SHARD_PROBE_CACHE) >= _BC_CACHE_MAX:
-                _SHARD_PROBE_CACHE.pop(
-                    next(iter(_SHARD_PROBE_CACHE)), None)
-            _SHARD_PROBE_CACHE[fp_key] = (mode, bc, p, asm_meta)
-    return _probe_from_bc(df, bc, mode, p, key_col, result_col, asm_meta)
+                    "n_shards": _split(payload)[0]}
+    bc = _get_bc(df.sparkSession, collected, token)
+    if memo_key is not None:
+        _bounded_put(_MEMO, memo_key, (kind, bc, p, asm_meta), _MEMO_MAX)
+    return _probe_from_bc(df, kind, bc, p, asm_meta, key_col, result_col)
 
 
-def _probe_from_bc(df: DataFrame, bc, mode: str, p: dict,
-                   key_col: str, result_col: str,
-                   asm_meta: dict | None = None) -> DataFrame:
-    if mode == "global":
+def _probe_from_bc(df: DataFrame, kind: str | None, bc, p: dict,
+                   asm_meta: dict | None, key_col: str,
+                   result_col: str) -> DataFrame:
+    if kind is not None:
         return _broadcast_probe_udf(df, bc, [], key_col, result_col,
                                     asm_meta)
-    from .forest import SHARD_COL, with_shard
-    probe = with_shard(df, key_col, int(p["n_shards"]))
-    return _broadcast_probe_udf(probe, bc, [SHARD_COL], key_col,
-                                result_col).drop(SHARD_COL)
+    probe = _with_route_shard(df, key_col, p)
+    return _broadcast_probe_udf(probe, bc, ["__shard"], key_col,
+                                result_col).drop("__shard")
 
 
 def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
@@ -1538,14 +1251,12 @@ def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
         return df.withColumn(result_col, udf(*args))
 
     def probe_global(keys):
-        filters = _materialize(bc, asm_meta)
-        f = filters.get(())
+        f = _materialize(bc, asm_meta).get(())
         if f is None:
             return pa.array(np.zeros(len(keys), dtype=bool))
         k, valid = keys_and_valid_from_arrow(keys)
-        if isinstance(f, (_TbfForestProbe, _TbfForestMultiProbe,
-                          _FrozenTcfForestProbe, _LiveTcfForestProbe)):
-            # the assembled forest routes by the xxhash64 replica,
+        if isinstance(f, _Assembled):
+            # the assembled forests route by the xxhash64 replica,
             # which hashes binary and int64 key columns differently —
             # the Arrow type is the authority
             binary = not pa.types.is_integer(keys.type)

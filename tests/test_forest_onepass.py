@@ -124,7 +124,7 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
                                      engine="jvm").cache()
         rows = forest.collect()
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._tbf_level0_uniform(blobs)  # fast path eligible
+        assert P._TbfForestProbe.eligible(8, blobs)  # fast path eligible
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -150,8 +150,8 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
                                 engine="arrow").cache()
     gb = {int(r["__shard"]): bytes(r["filter"])
           for r in grown.collect()}
-    assert not P._tbf_level0_uniform(gb)
-    assert P._tbf_forest_uniform(gb)
+    assert not P._TbfForestProbe.eligible(8, gb)
+    assert P._TbfForestMultiProbe.eligible(8, gb)
     assert probe_with_forest(keys, grown, "key") \
         .where("maybe_seen").count() == n
     from libfilter_spark.spark.forest import SHARD_COL, with_shard
@@ -191,7 +191,7 @@ def test_assembled_tbf_multilevel_probe_unit():
         f.add_hashes(ks)
         filters[s], blobs[s] = f, f.serialize()
     assert len(filters[3].levels) > len(filters[0].levels)  # ragged
-    assert P._tbf_forest_uniform(blobs)
+    assert P._TbfForestMultiProbe.eligible(S, blobs)
     pv = P._TbfForestMultiProbe.assemble(S, blobs)
     assert pv.find(all_keys, binary=False).all()  # zero FN
     absent = splitmix64(50_000, seed=456)
@@ -329,7 +329,7 @@ def test_assembled_frozen_tcf_probe_unit():
         fr = f.freeze()
         frozen[s] = fr
         blobs[s] = fr.serialize()
-    assert P._frozen_tcf_uniform(blobs)
+    assert P._FrozenTcfForestProbe.eligible(n_sh, blobs)
     pv = P._FrozenTcfForestProbe.assemble(n_sh, blobs)
     assert pv is not None
     # zero FN for keys of PRESENT shards
@@ -360,7 +360,7 @@ def test_assembled_frozen_tcf_probe_unit():
     big.add_hashes(keys[:100])
     blobs2 = dict(blobs)
     blobs2[n_sh - 1] = big.freeze().serialize()
-    assert not P._frozen_tcf_uniform(blobs2)
+    assert not P._FrozenTcfForestProbe.eligible(n_sh, blobs2)
     assert P._FrozenTcfForestProbe.assemble(n_sh, blobs2) is None
 
 
@@ -388,7 +388,7 @@ def test_assembled_frozen_tcf_probe_matches_grouped(spark):
                                      freeze=True).cache()
         rows = forest.collect()
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._frozen_tcf_uniform(blobs)  # fast path eligible
+        assert P._FrozenTcfForestProbe.eligible(8, blobs)  # fast path eligible
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -428,7 +428,7 @@ def test_probe_only_default_freezes_tcf(spark):
 
 
 def test_tbf_forest_uniform_rejects_foreign_mix():
-    """_tbf_forest_uniform only accepts shards whose per-level sizes
+    """_TbfForestMultiProbe.eligible only accepts shards whose per-level sizes
     agree (one forest's shared creation params); a mix of filters
     created with different params must fall back to the grouped
     route, not assemble a wrong-size matrix."""
@@ -443,9 +443,9 @@ def test_tbf_forest_uniform_rejects_foreign_mix():
     b = TaffyBlockFilter.create(50_000, 0.001)  # different schedule
     b.add_hashes(splitmix64(5000, seed=2))
     blobs = {0: a.serialize(), 1: b.serialize()}
-    assert not P._tbf_forest_uniform(blobs)
+    assert not P._TbfForestMultiProbe.eligible(2, blobs)
     assert P._TbfForestMultiProbe.assemble(2, blobs) is None
-    assert P._tbf_forest_uniform({}) is False
+    assert P._TbfForestMultiProbe.eligible(2, {}) is False
 
 
 def test_assembled_live_tcf_probe_unit():
@@ -483,7 +483,7 @@ def test_assembled_live_tcf_probe_unit():
         live[s] = f
         blobs[s] = f.serialize()
     assert stash_probe_keys  # the plant must exercise the stash path
-    assert P._live_tcf_uniform(blobs)
+    assert P._LiveTcfForestProbe.eligible(n_sh, blobs)
     pv = P._LiveTcfForestProbe.assemble(n_sh, blobs)
     assert pv is not None
     assert pv.find(np.array(stash_probe_keys, dtype=np.uint64),
@@ -518,9 +518,9 @@ def test_assembled_live_tcf_probe_unit():
     big.add_hashes(keys[:100])
     blobs2 = dict(blobs)
     blobs2[n_sh - 1] = big.serialize()
-    assert not P._live_tcf_uniform(blobs2)
+    assert not P._LiveTcfForestProbe.eligible(n_sh, blobs2)
     assert P._LiveTcfForestProbe.assemble(n_sh, blobs2) is None
-    assert P._live_tcf_uniform({}) is False
+    assert P._LiveTcfForestProbe.eligible(n_sh, {}) is False
 
 
 def test_assembled_live_tcf_probe_matches_grouped(spark):
@@ -548,7 +548,7 @@ def test_assembled_live_tcf_probe_matches_grouped(spark):
         rows = forest.collect()
         assert all(r["family"] == "taffy_cuckoo" for r in rows)
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._live_tcf_uniform(blobs)  # fast path eligible
+        assert P._LiveTcfForestProbe.eligible(8, blobs)  # fast path eligible
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -603,7 +603,7 @@ def test_live_tcf_nonuniform_forest_falls_back_grouped(spark):
     logs = {TaffyCuckooFilter.deserialize(b).log_side_size
             for b in blobs.values()}
     assert len(logs) > 1          # geometry actually diverged
-    assert not P._live_tcf_uniform(blobs)
+    assert not P._LiveTcfForestProbe.eligible(n_sh, blobs)
     assert P._LiveTcfForestProbe.assemble(n_sh, blobs) is None
     forest2 = spark.createDataFrame(
         pd.DataFrame([{**r, "filter": bytes(r["filter"])}

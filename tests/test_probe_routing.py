@@ -267,7 +267,7 @@ def test_shard_frame_auto_overbudget_stays_off_driver(spark,
     # uncached arm: budgeted toLocalIterator stops within budget.
     # The iterator arm only engages on big sessions (>64 shuffle
     # partitions — small sessions plain-collect, see
-    # _collect_shard_rows_auto), so pin a big-session shape for it.
+    # _collect_budgeted), so pin a big-session shape for it.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
@@ -286,37 +286,44 @@ def test_shard_frame_auto_overbudget_stays_off_driver(spark,
 
 
 def test_filter_via_shm_zero_copy_equivalent():
-    """The shm memmap path (what a worker runs past _SHM_MIN_BYTES)
-    must probe identically to the private-copy deserialize for both
-    covered families — block (raw u4 view) and taffy_block (grown
-    multi-level stack via deserialize_view). No Spark: _materialize's
+    """A worker's private materialization of a broadcast map must probe
+    identically to a plain deserialize for the flat-array families —
+    block and a grown multi-level taffy_block (the families the removed
+    raw-blob /dev/shm path used to serve). No Spark: _materialize's
     worker-side branch is exercised directly."""
-    import os
     import uuid
 
     import numpy as np
-    import pytest as _pytest
 
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
+    import libfilter_spark.spark.probe as P
     from libfilter_spark.filters import BlockFilter, TaffyBlockFilter
     from libfilter_spark.kernels.keys import splitmix64
-    from libfilter_spark.spark.probe import _filter_via_shm
     keys = splitmix64(30_000, seed=3)
     absent = splitmix64(60_000, seed=3)[30_000:]
-    token = uuid.uuid4().hex
     bf = BlockFilter.create_with_ndv_fpp(30_000, 0.01)
     bf.add_hashes(keys)
     tbf = TaffyBlockFilter.create(64, 0.01)
     tbf.add_hashes(keys)  # grown: multi-level
-    for fam, f in (("block", bf), ("taffy_block", tbf)):
-        g = _filter_via_shm(token, (fam,), fam, f.serialize())
-        assert g.find_hashes(keys).all()
-        assert np.array_equal(g.find_hashes(absent),
-                              f.find_hashes(absent))
-        # second call (another worker) reuses the same shm file
-        h = _filter_via_shm(token, (fam,), fam, f.serialize())
-        assert h.find_hashes(keys).all()
+    assert len(tbf.levels) > 1
+    fmap = {("block",): ("block", bf.serialize()),
+            ("taffy_block",): ("taffy_block", tbf.serialize())}
+
+    class FakeBC:
+        value = (uuid.uuid4().hex, fmap)
+
+    try:
+        P._FILTER_CACHE.clear()
+        got = P._materialize(FakeBC())
+        for (fam,), (_, blob) in fmap.items():
+            ref = P.FAMILIES[fam].deserialize(blob)
+            g = got[(fam,)]
+            assert g.find_hashes(keys).all()
+            assert np.array_equal(g.find_hashes(absent),
+                                  ref.find_hashes(absent))
+        # second call (same worker) reuses the materialized map
+        assert P._materialize(FakeBC()) is got
+    finally:
+        P._FILTER_CACHE.clear()
 
 
 def test_shared_assembled_state_equivalent():
@@ -600,10 +607,13 @@ def test_small_session_precheck_keeps_blobs_off_driver(spark,
 
 
 def test_truncated_published_state_falls_back():
-    """A truncated/garbage file at the published asm path (e.g. a
+    """A truncated or foreign file at the published asm path (e.g. a
     crashed publisher plus an unlucky rename) must be REJECTED by the
-    attacher for both assembled kinds; the worker then republishes
-    correct state over it and answers exactly."""
+    attacher for every assembled kind — a file short by whole buckets
+    (which a size-derived bucket count would silently accept, probing
+    the wrong rows) and a file published for another n_shards; the
+    worker then republishes correct state over it and answers
+    exactly."""
     import os
     import uuid
 
@@ -613,14 +623,42 @@ def test_truncated_published_state_falls_back():
     if not os.path.isdir("/dev/shm"):
         _pytest.skip("no /dev/shm")
     import libfilter_spark.spark.probe as P
-    from libfilter_spark.filters import BlockFilter
+    from libfilter_spark.filters import (BlockFilter, TaffyBlockFilter,
+                                         TaffyCuckooFilter)
     from libfilter_spark.filters.block import BlockSliceFilter
-    from libfilter_spark.filters.taffy_block import TaffyBlockFilter
     from libfilter_spark.kernels import block as K
     from libfilter_spark.kernels.keys import shard_of_keys, splitmix64
 
     keys = splitmix64(20_000, seed=11)
     absent = splitmix64(40_000, seed=11)[20_000:]
+    n_sh = 4
+    shards = shard_of_keys(keys, n_sh, binary=False)
+
+    def forest(make, freeze=False):
+        blobs = {}
+        for s in range(n_sh):
+            f = make()
+            f.add_hashes(keys[shards == s])
+            blobs[s] = (f.freeze() if freeze else f).serialize()
+        return n_sh, blobs
+
+    full = BlockFilter.create_with_ndv_fpp(20_000, 0.004)
+    full.add_hashes(keys)
+    w = K.WORDS_PER_BUCKET
+    nb = full.state.size // w
+    bounds = [0, nb // 2, nb]
+    payloads = {
+        "block_slice_set": [
+            BlockSliceFilter(nb, lo, full.state[lo * w:hi * w]).serialize()
+            for lo, hi in zip(bounds, bounds[1:])],
+        "tbf_level0_set": forest(
+            lambda: TaffyBlockFilter.create(8_000, 0.004)),
+        "tbf_forest_set": forest(lambda: TaffyBlockFilter.create(64, 0.01)),
+        "frozen_tcf_set": forest(lambda: TaffyCuckooFilter.create(8_000),
+                                 freeze=True),
+        "tcf_set": forest(lambda: TaffyCuckooFilter.create(8_000)),
+    }
+    assert set(payloads) == set(P._ASSEMBLED)  # every kind covered
 
     class FakeBC:
         def __init__(self, token, fmap):
@@ -628,58 +666,40 @@ def test_truncated_published_state_falls_back():
 
     made = []
     try:
-        # --- block_slice_set kind (exact-bytes meta guard) ---
-        full = BlockFilter.create_with_ndv_fpp(20_000, 0.004)
-        full.add_hashes(keys)
-        st = full.state
-        w = K.WORDS_PER_BUCKET
-        nb = st.size // w
-        bounds = [0, nb // 2, nb]
-        slices = [BlockSliceFilter(nb, lo,
-                                   st[lo * w:hi * w]).serialize()
-                  for lo, hi in zip(bounds, bounds[1:])]
-        token = uuid.uuid4().hex
-        meta = {"token": token, "kind": "block_slice_set",
-                "n_shards": 2, "bytes": nb * 32}
-        path = P._asm_path(token, "block_slice_set")
-        made.append(path)
-        np.zeros(7, dtype=np.uint8).tofile(path)  # truncated garbage
-        assert P._attach_assembled(meta) is None
-        P._FILTER_CACHE.clear()
-        got = P._materialize(
-            FakeBC(token, {(): ("block_slice_set", slices)}), meta)[()]
-        assert got.find_hashes(keys).all()
-        assert np.array_equal(got.find_hashes(absent),
-                              full.find_hashes(absent))
-        assert os.path.getsize(path) == nb * 32  # republished correct
-
-        # --- tbf_level0_set kind (size-divisibility guard) ---
-        n_sh = 4
-        shards = shard_of_keys(keys, n_sh, binary=False)
-        blobs = {}
-        for s in range(n_sh):
-            f = TaffyBlockFilter.create(8_000, 0.004)
-            f.add_hashes(keys[shards == s])
-            blobs[s] = f.serialize()
-        token2 = uuid.uuid4().hex
-        meta2 = {"token": token2, "kind": "tbf_level0_set",
-                 "n_shards": n_sh}
-        path2 = P._asm_path(token2, "tbf_level0_set")
-        made.append(path2)
-        np.zeros(13, dtype=np.uint8).tofile(path2)  # non-divisible
-        assert P._attach_assembled(meta2) is None
-        P._FILTER_CACHE.clear()
-        got2 = P._materialize(
-            FakeBC(token2, {(): ("tbf_level0_set", (n_sh, blobs))}),
-            meta2)[()]
-        assert got2.find(keys, binary=False).all()
+        for kind, payload in payloads.items():
+            ref = P._assemble(kind, payload)
+            assert ref.find(keys, binary=False).all(), kind
+            expect = ref.find(absent, binary=False)
+            token = uuid.uuid4().hex
+            meta = {"token": token, "kind": kind,
+                    "n_shards": ref.n_shards}
+            bc = FakeBC(token, {(): (kind, payload)})
+            path = P._asm_path(token, kind)
+            made.append(path)
+            good = ref.to_raw()
+            for bad, bad_meta in (
+                    (good[:-4 * n_sh], meta),  # short by whole buckets
+                    (good, {**meta, "n_shards": ref.n_shards + 1})):
+                bad.tofile(path)
+                assert P._attach_assembled(bad_meta) is None, kind
+                P._FILTER_CACHE.clear()
+                got = P._materialize(bc, meta)[()]
+                assert got.find(keys, binary=False).all(), kind
+                assert np.array_equal(got.find(absent, binary=False),
+                                      expect), kind
+                # republished correct: a fresh worker attaches it
+                assert os.path.getsize(path) == good.nbytes, kind
+                att = P._attach_assembled(meta)
+                assert np.array_equal(att.find(absent, binary=False),
+                                      expect), kind
     finally:
         P._FILTER_CACHE.clear()
         for pth in made:
-            try:
-                os.unlink(pth)
-            except OSError:
-                pass
+            for x in (pth, pth + ".lock"):
+                try:
+                    os.unlink(x)
+                except OSError:
+                    pass
 
 
 def test_stale_lock_takeover_is_compare_and_swap():
@@ -766,7 +786,7 @@ def test_grouped_probe_content_cache_skips_recollect(spark,
     produce its own answers."""
     import libfilter_spark.spark.probe as P
 
-    P._GROUPED_PROBE_CACHE.clear()
+    P._MEMO.clear()
     build = spark.range(2_000).select(
         (F.col("id") % 4).cast("string").alias("g"),
         F.col("id").cast("string").alias("content"))
@@ -786,7 +806,7 @@ def test_grouped_probe_content_cache_skips_recollect(spark,
     def poisoned(*a, **kw):
         raise AssertionError("repeat probe re-collected the blobs")
     monkeypatch.setattr(P, "collect_filters", poisoned)
-    monkeypatch.setattr(P, "_collect_filters_auto", poisoned)
+    monkeypatch.setattr(P, "_collect_budgeted", poisoned)
     second = {(r["g"], r["content"]): r["maybe_seen"]
               for r in probe_with_filters(probe_keys, filters,
                                           ["g"]).collect()}

@@ -297,7 +297,7 @@ def test_assembled_frozen_tcf_forest_probe_parity(seed, n, n_shards,
         del blobs[n_shards - 1 - s]
     pv = P._FrozenTcfForestProbe.assemble(n_shards, blobs)
     if pv is None:  # uneven growth made shards non-uniform: refusal
-        assert not P._frozen_tcf_uniform(blobs)
+        assert not P._FrozenTcfForestProbe.eligible(n_shards, blobs)
         return
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])
@@ -341,7 +341,7 @@ def test_assembled_live_tcf_forest_probe_parity(seed, n, n_shards,
         del blobs[n_shards - 1 - s]
     pv = P._LiveTcfForestProbe.assemble(n_shards, blobs)
     if pv is None:  # uneven growth made shards non-uniform: refusal
-        assert not P._live_tcf_uniform(blobs)
+        assert not P._LiveTcfForestProbe.eligible(n_shards, blobs)
         return
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])
