@@ -31,8 +31,7 @@ from pyspark.sql.types import (BinaryType, LongType, StringType,
                                StructField, StructType)
 
 from ..filters import FAMILIES
-
-SHARD_COL = "__shard"
+from .sharded import SHARD_COL, repartition_by_shard
 
 # one row per built shard — shared by every forest engine
 _FOREST_SCHEMA = StructType([
@@ -98,8 +97,8 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     n_partials=1, filter). ``ndv`` is the TOTAL population hint; each
     shard pre-sizes to its share.
 
-    One-pass streaming build: keys ``repartition(n, __shard)`` (the
-    shuffle writes straight to builder tasks) and stream through
+    One-pass streaming build: the shuffle sends shard s straight to
+    build task s (``repartition_by_shard``), and keys stream through
     ``mapInArrow`` batches — Python never materializes a shard's whole
     key table the way ``groupBy.applyInArrow`` did (the r3-measured
     2→8 scaling cap: one full-group Arrow table per shard). Only the
@@ -187,22 +186,24 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     if engine != "arrow":
         raise ValueError(f"unknown forest engine {engine!r}")
     is_binary = isinstance(df.schema[key_col].dataType, _Bin)
-    # null keys dropped (probe reports null keys non-members; inserting
-    # the key-0 surrogate would add a spurious bit — same contract as
-    # the sharded block build)
-    routed = with_shard(
-        df.select(key_col).where(F.col(key_col).isNotNull()),
-        key_col, n_shards).repartition(n_shards, SHARD_COL) \
+    routed = repartition_by_shard(
+        with_shard(df.select(key_col), key_col, n_shards), n_shards) \
         .select(key_col)
     def build_stream(batches):
         import numpy as np
 
-        from ..kernels.keys import keys_from_arrow, shard_of_keys
+        from ..kernels.keys import keys_and_valid_from_arrow, shard_of_keys
         bufs: dict[int, list] = {}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            keys = keys_from_arrow(batch.column(0))
+            # null keys dropped here, not by a JVM IS NOT NULL filter
+            # (Spark pushes it below the key projection and derives
+            # every key twice): probes report null keys non-members, and
+            # the key-0 surrogate would add a spurious bit
+            keys, valid = keys_and_valid_from_arrow(batch.column(0))
+            if not valid.all():
+                keys = keys[valid]
             shards = shard_of_keys(keys, n_shards, binary=is_binary)
             for s in np.unique(shards):
                 bufs.setdefault(int(s), []).append(keys[shards == s])
@@ -240,7 +241,11 @@ def _build_forest_arrow_packed(df: DataFrame, key_col: str, family: str,
     The shard id rides along one-per-packed-row — Python never
     recomputes the routing hash. Per-group agg state is
     ~64k keys × key bytes; per-task state is its partition's keys in
-    the JVM hash-agg (spillable), bounded by the shard sizing."""
+    the JVM hash-agg (spillable), bounded by the shard sizing.
+
+    This engine alone stays on hash partitioning: the aggregation
+    reuses ``HashPartitioning(__shard)``, and routing by shard id
+    (``repartition_by_shard``) adds a second Exchange to the plan."""
     import numpy as np
 
     routed = with_shard(
@@ -310,9 +315,9 @@ def _build_tbf_forest_jvm(df: DataFrame, key_col: str, n_shards: int,
     num_buckets = K.num_buckets_for(_level_bytes(ndv0, fpp, 0))
     shard_expr = F.pmod(F.xxhash64(F.col(key_col)),
                         F.lit(n_shards)).cast("long")
-    agg = block_groupby_bitor(df.select(key_col), key_col, num_buckets,
-                              shard_expr=shard_expr) \
-        .repartition(n_shards, SHARD_COL)
+    agg = repartition_by_shard(
+        block_groupby_bitor(df.select(key_col), key_col, num_buckets,
+                            shard_expr=shard_expr), n_shards)
     schema = (f"{SHARD_COL} long, family string, params string, "
               "n_keys long, n_partials long, filter binary")
 

@@ -64,6 +64,15 @@ def _upper32(df: DataFrame, key_col: str):
     return F.shiftrightunsigned(F.col(key_col).cast("long"), 32)
 
 
+def repartition_by_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    """Route shard s to partition s, so each build task owns exactly
+    one shard. ``repartitionById`` takes the id as the partition
+    (``INT`` only, hence the cast: the forest shard column is
+    ``long``); hash partitioning of small shard ids collides — 4
+    shards land on 2 of 4 partitions, 8 on 5, 16 on 10, 32 on 18."""
+    return df.repartitionById(n_shards, F.col(SHARD_COL).cast("int"))
+
+
 def with_block_shard(df: DataFrame, key_col: str, num_buckets: int,
                      n_shards: int) -> DataFrame:
     """Attach the shard routing column, computed JVM-side:
@@ -104,6 +113,12 @@ def build_block_shards(df: DataFrame, key_col: str = "key",
       shuffles of fixed overhead), jvm wins at 20M (6.44 s vs 7.51 s —
       codegen amortizes, Python allocator pressure grows); the
       crossover sits near 10M.
+
+    Both engines put shard s on task s (``repartition_by_shard``). The
+    "one shard per core" default and the 10M crossover above were
+    measured when shards were hash-partitioned instead, which packs
+    small shard ids onto fewer tasks (32 shards on 18 of 32
+    partitions); neither figure has been re-measured since.
     """
     spark = df.sparkSession
     num_buckets = max(1, block_bytes_needed(ndv, fpp) // BUCKET_BYTES)
@@ -135,13 +150,11 @@ def build_block_shards(df: DataFrame, key_col: str = "key",
     # the shard column exists only to drive the repartition; it is a
     # pure function of the key, so it does NOT cross into Python —
     # only the 8-byte key column goes through Arrow. Null keys are
-    # dropped to stay byte-identical with the jvm engine (which
-    # filters IS NOT NULL): keys_from_arrow would otherwise map a null
-    # to key 0 and set a spurious membership bit.
-    routed = with_block_shard(
-        df.select(key_col).where(F.col(key_col).isNotNull()),
-        key_col, num_buckets, n_shards) \
-        .repartition(n_shards, SHARD_COL).select(key_col)
+    # dropped in Python, not by a JVM IS NOT NULL filter: Spark pushes
+    # that filter below the key projection and derives every key twice.
+    routed = repartition_by_shard(
+        with_block_shard(df.select(key_col), key_col, num_buckets,
+                         n_shards), n_shards).select(key_col)
 
     def build_slice(batches):
         # mapInArrow, not mapInPandas: the pandas conversion would
@@ -151,13 +164,17 @@ def build_block_shards(df: DataFrame, key_col: str = "key",
         # buffer zero-copy instead.
         import pyarrow as pa
 
-        from ..kernels.keys import keys_from_arrow
+        from ..kernels.keys import keys_and_valid_from_arrow
         slices: dict[int, np.ndarray] = {}
         counts: dict[int, int] = {}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            keys = keys_from_arrow(batch.column(0))
+            # a null maps to key 0 and would set a spurious bit; drop
+            # it to stay byte-identical with the jvm engine
+            keys, valid = keys_and_valid_from_arrow(batch.column(0))
+            if not valid.all():
+                keys = keys[valid]
             buckets = K.bucket_index(keys, num_buckets).astype(np.int64)
             shards = buckets * n_shards // num_buckets  # same formula
             for s in np.unique(shards):
@@ -191,8 +208,10 @@ def build_block_shards(df: DataFrame, key_col: str = "key",
                                       sl).serialize()
                      for s, sl in slices.items()], type=pa.binary())})
 
-    # repartition(n, SHARD_COL) hash-partitions on the shard id, so a
-    # shard never splits across tasks — exactly one row per shard
+    # shard s is partition s, so a shard never splits across tasks and
+    # no task builds two: one row per non-empty shard from its own
+    # task. Hash partitioning also kept shards whole but stacked them:
+    # 4 shards on 2 of 4 tasks, 8 on 5, 16 on 10, 32 on 18.
     return routed.mapInArrow(
         build_slice,
         schema=f"{SHARD_COL} int, family string, params string, "
@@ -272,11 +291,12 @@ def _build_block_shards_jvm(df: DataFrame, key_col: str,
     block_groupby_bitor for the insert-as-aggregation machinery)."""
     import numpy as np
 
-    agg = (block_groupby_bitor(df, key_col, num_buckets)
-           .withColumn(SHARD_COL,
-                       F.floor(F.col("b") * F.lit(n_shards) /
-                               F.lit(int(num_buckets))).cast("int"))
-           .repartition(n_shards, SHARD_COL))
+    agg = repartition_by_shard(
+        block_groupby_bitor(df, key_col, num_buckets)
+        .withColumn(SHARD_COL,
+                    F.floor(F.col("b") * F.lit(n_shards) /
+                            F.lit(int(num_buckets))).cast("int")),
+        n_shards)
 
     def assemble(batches):
         import pyarrow as pa

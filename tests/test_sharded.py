@@ -284,3 +284,73 @@ def test_shard_frame_probe_assembles_per_worker(spark):
                                          via="shuffle").collect()}
     assert got == got_s
     sh.unpersist()
+
+
+def _content_keys(spark, n, binary=True):
+    from libfilter_spark.spark.keys import with_content_key
+    df = spark.range(n).withColumn("content", F.col("id").cast("string"))
+    if binary:
+        return with_content_key_bin(df, "content").select("key")
+    return with_content_key(df, "content", hex_col=None).select("key")
+
+
+def test_shard_routed_builds_one_shard_per_partition(spark):
+    """Every shard-routed build puts shard s on partition s, so each
+    build task owns exactly one shard. Hash partitioning of the shard
+    id would stack them (4 shards on 2 of 4 partitions)."""
+    from libfilter_spark.spark.forest import build_filter_forest
+    from libfilter_spark.spark.sharded import SHARD_COL, build_block_shards
+    n = 20_000
+    keys = _content_keys(spark, n)
+    builds = [(f"block/{engine}/{k}",
+               build_block_shards(keys, ndv=n, fpp=0.01, n_shards=k,
+                                  engine=engine), k)
+              for k in (3, 4, 8) for engine in ("arrow", "jvm")]
+    builds += [("forest/arrow", build_filter_forest(
+                    keys, "key", "taffy_cuckoo", ndv=n, fpp=0.01,
+                    n_shards=4, engine="arrow"), 4),
+               ("forest/jvm", build_filter_forest(
+                    keys, "key", "taffy_block", ndv=n, fpp=0.01,
+                    n_shards=4, engine="jvm"), 4)]
+    for name, out, k in builds:
+        rows = out.select(SHARD_COL,
+                          F.spark_partition_id().alias("pid")).collect()
+        assert sorted(r[SHARD_COL] for r in rows) == list(range(k)), name
+        assert all(r[SHARD_COL] == r["pid"] for r in rows), \
+            (name, sorted((r[SHARD_COL], r["pid"]) for r in rows))
+
+
+def test_sharded_build_null_keys_dropped(spark):
+    """Null keys are not members: both engines, binary and int64 keys,
+    build the same shard frame with nulls in the input as without."""
+    from libfilter_spark.spark.sharded import SHARD_COL, build_block_shards
+    n = 20_000
+    for binary in (True, False):
+        keys = _content_keys(spark, n, binary)
+        nulls = spark.range(300).select(
+            F.lit(None).cast(keys.schema["key"].dataType).alias("key"))
+        for engine in ("arrow", "jvm"):
+            frames = []
+            for src in (keys, keys.unionByName(nulls)):
+                sh = build_block_shards(src, ndv=n, fpp=0.01, n_shards=4,
+                                        engine=engine)
+                frames.append(sorted(
+                    (r[SHARD_COL], r["n_keys"], bytes(r["filter"]))
+                    for r in sh.collect()))
+            assert frames[0] == frames[1], (binary, engine)
+            assert sum(r[1] for r in frames[1]) == n
+
+
+def test_streamed_builds_derive_each_key_once(spark):
+    """The streamed builds drop null keys in Python, so no JVM filter
+    is pushed below the key projection to derive every key twice."""
+    from libfilter_spark.spark.forest import build_filter_forest
+    from libfilter_spark.spark.sharded import build_block_shards
+    n = 1_000
+    keys = _content_keys(spark, n)
+    for out in (build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4,
+                                   engine="arrow"),
+                build_filter_forest(keys, "key", "taffy_cuckoo", ndv=n,
+                                    fpp=0.01, n_shards=4, engine="arrow")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("sha2(") == 1, plan
