@@ -9,10 +9,10 @@ distributed analogue of the reference's single-process insert loop
 scales: at 100 TB the shuffle carries ~(tasks × groups) blobs, not
 10^12 rows.
 
-Stage 2 (final merge, ``applyInPandas``): per group, fold partial
-blobs with the family's union (OR for block families —
-``c/lib/block.c:68``'s TODO implemented; the TCF union algorithm of
-``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters).
+Stage 2 (final merge, ``mapInArrow`` over ``merge_partial_batches``):
+per group, fold partial blobs with the family's union (OR for block
+families — ``c/lib/block.c:68``'s TODO implemented; the TCF union
+algorithm of ``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters).
 
 Families must be *mergeable* for this path. The static XOR filter
 (one-shot bulk build, no union — ``c/lib/static.c:12-82``) uses the
@@ -22,6 +22,7 @@ per group via ``applyInPandas``.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from typing import Iterator
@@ -124,6 +125,145 @@ def _keys_from_series(s: pd.Series) -> np.ndarray:
         from ..kernels.keys import keys_from_hash_bytes
         return keys_from_hash_bytes(s.to_numpy())
     return to_unsigned(s.to_numpy())
+
+
+def group_segments(cols: list, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Segment ``n`` rows by their group-key tuple: a stable row order
+    that puts equal tuples next to each other, and the offsets in it
+    where every group after the first starts, so
+    ``np.split(order, bounds)`` yields each group's rows in input
+    order. ``cols`` holds one array per group column, of any type
+    ``pd.factorize`` reads. Null is a key value like any other, as in
+    Spark's ``groupBy`` (pandas ``dropna=False``). With no columns all
+    rows are one group."""
+    invs, sizes = [], []
+    for col in cols:
+        inv, u = pd.factorize(col, use_na_sentinel=False)
+        invs.append(inv.astype(np.int64))
+        sizes.append(max(len(u), 1))
+    prod = 1
+    for s in sizes:
+        prod *= s
+    if prod < (1 << 62):
+        gkey = np.zeros(n, dtype=np.int64)
+        for inv, s in zip(invs, sizes):
+            gkey = gkey * np.int64(s) + inv
+        order = np.argsort(gkey, kind="stable")
+        gs = gkey[order]
+        bounds = np.flatnonzero(gs[1:] != gs[:-1]) + 1
+    else:
+        # combined code would overflow int64 (product of per-column
+        # cardinalities ≥ 2^62): lexsort the code TUPLE instead — same
+        # segmentation, no overflow
+        order = np.lexsort(invs[::-1])
+        diff = np.zeros(max(n - 1, 0), dtype=bool)
+        for inv in invs:
+            s = inv[order]
+            diff |= s[1:] != s[:-1]
+        bounds = np.flatnonzero(diff) + 1
+    return order, bounds
+
+
+# merged rows per output batch are cut at this many blob bytes, so no
+# binary column nears Arrow's 2 GiB (int32-offset) limit
+_MERGED_BATCH_BYTES = 64 << 20
+
+
+def merge_partial_batches(batches, keys: list[str], names: list[str],
+                          tag: str, count: str, blob: str, merge):
+    """Partition-local merge of partial rows (filters or sketches):
+    one output row per distinct ``keys`` tuple, null keys included,
+    with the columns ``names`` in that order.
+
+    The groups are found once per partition, from the ``keys`` columns
+    only (``group_segments``); blobs are never concatenated into one
+    Arrow array. Per group, ``merge(tag_value, blobs)`` gets the
+    group's blobs **sorted by bytes** and returns the merged blob;
+    ``count`` and ``n_partials`` are summed, and every other column
+    takes the group's first row. Merged rows are yielded in batches of
+    at most ``_MERGED_BATCH_BYTES`` of blobs (plus one row).
+
+    Merge-order contract: the blobs a merge sees, and their order, are
+    a function of the group's partial *set* alone. OR families
+    (block, taffy_block, bloom) and lattice sketches (HLL, count-min)
+    are therefore byte-identical under any partitioning and any merge
+    tree; KLL and t-digest are a deterministic function of the sorted
+    partial set; the TCF union is probe-equivalent."""
+    import pyarrow as pa
+
+    metas, blobs, blob_type = [], [], None
+    for b in batches:
+        if b.num_rows:
+            blob_type = b.schema.field(blob).type
+            blobs += b.column(blob).to_pylist()
+            metas.append(b.drop_columns([blob]))
+    if not metas:
+        return
+    meta = pa.Table.from_batches(metas).combine_chunks()
+    order, bounds = group_segments(
+        [meta.column(k).to_pandas(types_mapper=pd.ArrowDtype)
+         for k in keys], meta.num_rows)
+    starts = np.r_[0, bounds].astype(np.int64)
+    heads = meta.take(order[starts])
+    sums = {c: np.add.reduceat(
+        meta.column(c).fill_null(0).to_numpy()[order], starts)
+        for c in (count, "n_partials")}
+    tags = heads.column(tag).to_pylist()
+    segs = np.split(order, bounds)
+    lo, size, out = 0, 0, []
+    for i, seg in enumerate(segs):
+        out.append(merge(tags[i], sorted(blobs[j] for j in seg)))
+        size += len(out[-1])
+        if size < _MERGED_BATCH_BYTES and i + 1 < len(segs):
+            continue
+        cols = [pa.array(out, type=blob_type) if c == blob
+                else pa.array(sums[c][lo:i + 1]) if c in sums
+                else heads.column(c).slice(lo, i + 1 - lo)
+                for c in names]
+        yield from pa.Table.from_arrays(cols, names=names).to_batches()
+        lo, size, out = i + 1, 0, []
+
+
+def merge_group_table(table, **spec):
+    """``applyInArrow`` form of ``merge_partial_batches``: the table is
+    one group, merged into a one-row table (``spec`` as there, minus
+    ``keys``)."""
+    import pyarrow as pa
+    return pa.Table.from_batches(
+        list(merge_partial_batches(table.to_batches(), [], **spec)))
+
+
+def merge_filter_list(family: str, blobs: list[bytes]) -> bytes:
+    """Union of one group's partial filter blobs, in the given order
+    (``merge_partial_batches`` passes them sorted by bytes)."""
+    cls = FAMILIES[family]
+    acc = cls.deserialize(blobs[0])
+    if hasattr(acc, "absorb"):
+        # in-place vectorized union (TCF) in BALANCED PAIRWISE
+        # rounds. Balance is load-bearing, not a nicety: a path
+        # stores only log_side_size+HEAD+tail bits, so absorbing
+        # into a table more than tail-width levels wider forces the
+        # missing-bits enumeration (2^(diff-tail) tail-less entries
+        # per item — occupancy and FPP inflate, which grows the
+        # accumulator further; a linear fold over 64 partials
+        # measured 15k keys/s with a 4x-oversized blob). Merging
+        # equals with equals keeps diff within the tail width at
+        # every round, so the enumeration never triggers.
+        fs = [acc] + [cls.deserialize(b) for b in blobs[1:]]
+        while len(fs) > 1:
+            fs.sort(key=lambda f: (f.log_side_size, f.occupied))
+            nxt = []
+            for i in range(0, len(fs) - 1, 2):
+                fs[i + 1].absorb(fs[i])
+                nxt.append(fs[i + 1])
+            if len(fs) % 2:
+                nxt.append(fs[-1])
+            fs = nxt
+        acc = fs[0]
+    else:
+        for b in blobs[1:]:
+            acc = acc.union(cls.deserialize(b))
+    return acc.serialize()
 
 
 def _result_schema(df: DataFrame, group_cols: list[str]) -> StructType:
@@ -250,28 +390,7 @@ def build_filters(df: DataFrame, group_cols: list[str] | None,
                 # (task, group), which dominated many-group builds
                 keys = _keys_from_series(pdf[key_col])
                 gvals = [pdf[c].to_numpy() for c in group_cols]
-                invs, sizes = [], []
-                for col in gvals:
-                    inv, u = pd.factorize(col, use_na_sentinel=False)
-                    invs.append(inv.astype(np.int64))
-                    sizes.append(max(len(u), 1))
-                prod = 1
-                for s in sizes:
-                    prod *= s
-                if prod < (1 << 62):
-                    gkey = np.zeros(len(pdf), dtype=np.int64)
-                    for inv, s in zip(invs, sizes):
-                        gkey = gkey * np.int64(s) + inv
-                    order = np.argsort(gkey, kind="stable")
-                    gs = gkey[order]
-                    bounds = np.flatnonzero(gs[1:] != gs[:-1]) + 1
-                else:  # see _grouped_bitor_assemble: lexsort fallback
-                    order = np.lexsort(invs[::-1])
-                    diff = np.zeros(len(pdf) - 1, dtype=bool)
-                    for inv in invs:
-                        s = inv[order]
-                        diff |= s[1:] != s[:-1]
-                    bounds = np.flatnonzero(diff) + 1
+                order, bounds = group_segments(gvals, len(pdf))
                 for seg in np.split(order, bounds):
                     g = tuple(col[seg[0]] for col in gvals)
                     f = acc.get(g)
@@ -317,10 +436,9 @@ def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
     made local[32] *slower* than local[8]). The tree caps per-task
     merge input at ~max(n/fanin, fanin) blobs.
 
-    Determinism: within every merge the blobs are sorted by bytes, and
-    the bucketing is content-derived — so OR-merge families stay
-    byte-identical under any scheduling (the associativity contract);
-    TCF union remains probe-equivalent.
+    Determinism: every route merges through ``merge_partial_batches``
+    (see its merge-order contract), and the bucketing is
+    content-derived, so the tree shape is a function of the data.
 
     ``est_bytes`` (the caller's plan-time per-partial size estimate)
     routes SMALL merges — est × defaultParallelism within
@@ -330,9 +448,7 @@ def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
     grouped merges. The tree exists for tasks × MB-GB partial volumes;
     below the threshold its extra exchange and cores-wide Python
     stages dominate the work (a 5-group KB-blob merge measured ~128
-    Python tasks through the tree). Results are identical: the same
-    sorted-blob ``merge_rows`` runs either way, so OR families stay
-    byte-identical and TCF stays probe-equivalent.
+    Python tasks through the tree).
     """
     schema = partials.schema
     small = False
@@ -343,132 +459,73 @@ def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
             par = 32
         small = est_bytes * max(par, 1) <= _SMALL_MERGE_MAX
 
-    def merge_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        fam = pdf["family"].iloc[0]
-        cls = FAMILIES[fam]
-        blobs = sorted(pdf["filter"], key=bytes)
-        acc = cls.deserialize(blobs[0])
-        if hasattr(acc, "absorb"):
-            # in-place vectorized union (TCF) in BALANCED PAIRWISE
-            # rounds. Balance is load-bearing, not a nicety: a path
-            # stores only log_side_size+HEAD+tail bits, so absorbing
-            # into a table more than tail-width levels wider forces the
-            # missing-bits enumeration (2^(diff-tail) tail-less entries
-            # per item — occupancy and FPP inflate, which grows the
-            # accumulator further; a linear fold over 64 partials
-            # measured 15k keys/s with a 4x-oversized blob). Merging
-            # equals with equals keeps diff within the tail width at
-            # every round, so the enumeration never triggers.
-            fs = [acc] + [cls.deserialize(b) for b in blobs[1:]]
-            while len(fs) > 1:
-                fs.sort(key=lambda f: (f.log_side_size, f.occupied))
-                nxt = []
-                for i in range(0, len(fs) - 1, 2):
-                    fs[i + 1].absorb(fs[i])
-                    nxt.append(fs[i + 1])
-                if len(fs) % 2:
-                    nxt.append(fs[-1])
-                fs = nxt
-            acc = fs[0]
-        else:
-            for b in blobs[1:]:
-                acc = acc.union(cls.deserialize(b))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["family"] = [fam]
-        out["params"] = [pdf["params"].iloc[0]]
-        out["n_keys"] = [int(pdf["n_keys"].sum())]
-        out["n_partials"] = [int(pdf["n_partials"].sum())]
-        out["filter"] = [acc.serialize()]
-        return pd.DataFrame(out)
+    spec = dict(tag="family", count="n_keys", blob="filter",
+                merge=merge_filter_list)
 
-    if small and not group_cols:
-        # single-level global merge: every partial row (≤ tasks × est
-        # bytes, under the threshold by construction) moves through one
-        # 1-partition exchange into ONE merge task — no __mb level, no
-        # cores-wide Python stage
-        def merge_flat(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            yield merge_rows(pd.concat(pdfs, ignore_index=True))
-        return partials.repartition(1).mapInPandas(merge_flat,
-                                                   schema=schema)
+    def merging(keys, names):
+        return functools.partial(merge_partial_batches, keys=keys,
+                                 names=names, **spec)
 
     bucket = F.pmod(F.xxhash64("filter"), F.lit(fanin)).alias("__mb")
     level1_in = partials.select("*", bucket)
     l1_schema = level1_in.schema
 
-    def merge_l1(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge_rows(pdf.drop(columns="__mb"))
-        out["__mb"] = [int(pdf["__mb"].iloc[0])]
-        return out
+    if not group_cols:
+        if not small:
+            # tree level 1: one __mb bucket per Python call, so a task
+            # holds one bucket's MB-GB blobs at a time
+            partials = level1_in.groupBy("__mb").applyInArrow(
+                functools.partial(merge_group_table,
+                                  names=l1_schema.names, **spec),
+                schema=l1_schema).drop("__mb")
+        # the final (or, for small merges, only) level: every row moves
+        # through one 1-partition exchange into ONE merge task — no
+        # cores-wide Python stage
+        return partials.repartition(1).mapInArrow(
+            merging([], schema.names), schema=schema)
 
-    if group_cols:
-        # partition-local merging: groupBy().applyInPandas costs one
-        # Python call per (group, bucket) — measured 20.8 s of a 27 s
-        # query at 10^3 groups (≈17k calls). Repartitioning on the
-        # same keys co-locates each merge group, and ONE mapInPandas
-        # call per partition loops the groups in pandas — identical
-        # blobs, identical sorted merge order, so the output stays
-        # byte-identical; Python calls drop to 2× shuffle partitions.
-        #
-        # The repartition carries an EXPLICIT partition count: with
-        # bare repartition(*cols) AQE coalesces the KB-blob exchange
-        # by size (50 MB of partials → 5 partitions measured), which
-        # serializes the per-group Python merges that the repartition
-        # exists to parallelize — a 1000-group merge took 9.1 s
-        # coalesced vs 1.7 s pinned at local[32]. Each partition also
-        # accumulates its merged rows and yields ONE frame instead of
-        # one 1-row frame (= one Arrow batch) per group.
-        l1_keys = [*group_cols, "__mb"]
-        spark = partials.sparkSession
-        try:
-            nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            nparts = spark.sparkContext.defaultParallelism
+    # partition-local merging: groupBy().applyInPandas costs one
+    # Python call per (group, bucket) — measured 20.8 s of a 27 s
+    # query at 10^3 groups (≈17k calls). Repartitioning on the same
+    # keys co-locates each merge group, and ONE mapInArrow call per
+    # partition merges all its groups (merge_partial_batches) —
+    # identical blobs, identical sorted merge order, so the output
+    # stays byte-identical; Python calls drop to 2× shuffle partitions.
+    #
+    # The repartition carries an EXPLICIT partition count: with bare
+    # repartition(*cols) AQE coalesces the KB-blob exchange by size
+    # (50 MB of partials → 5 partitions measured), which serializes
+    # the per-group Python merges that the repartition exists to
+    # parallelize — a 1000-group merge took 9.1 s coalesced vs 1.7 s
+    # pinned at local[32].
+    l1_keys = [*group_cols, "__mb"]
+    spark = partials.sparkSession
+    try:
+        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        nparts = spark.sparkContext.defaultParallelism
 
-        def _merge_local(keys, keep_mb):
-            def merge_local(batches):
-                pdfs = [p for p in batches if len(p)]
-                if not pdfs:
-                    return
-                pdf = pd.concat(pdfs, ignore_index=True)
-                outs = []
-                for _, g in pdf.groupby(keys, sort=False, dropna=False):
-                    out = merge_rows(g.drop(columns="__mb")
-                                     if "__mb" in g else g)
-                    if keep_mb:
-                        out["__mb"] = [int(g["__mb"].iloc[0])]
-                    outs.append(out)
-                yield pd.concat(outs, ignore_index=True)
-            return merge_local
-
-        if small:
-            # single-level grouped merge: per-group partial volume is
-            # bounded by tasks × est bytes (under the threshold), so
-            # one task per group suffices — skip the __mb fan-in level
-            # (its exchange + cores-wide Python stage cost more than
-            # the merges below the threshold). The partition count is
-            # UNPINNED here on purpose: per-task merge cost in this
-            # regime scales with bytes (the partition-local pandas
-            # loop), not per-group Python calls, so AQE coalescing the
-            # KB-blob exchange down to a task or two is the right
-            # outcome — the pinned count stays reserved for the heavy
-            # tree where coalescing serialized MB-blob merges.
-            return partials.repartition(*group_cols) \
-                .mapInPandas(_merge_local(list(group_cols), False),
-                             schema=schema)
-        level1 = level1_in.repartition(nparts, *l1_keys) \
-            .mapInPandas(_merge_local(l1_keys, True), schema=l1_schema)
-        return level1.drop("__mb").repartition(nparts, *group_cols) \
-            .mapInPandas(_merge_local(list(group_cols), False),
-                         schema=schema)
-    level1 = level1_in.groupBy("__mb").applyInPandas(merge_l1,
-                                                     schema=l1_schema)
-    return (level1.withColumn("__g", F.lit(0)).groupBy("__g")
-            .applyInPandas(
-                lambda pdf: merge_rows(pdf.drop(columns=["__g", "__mb"])),
-                schema=schema))
+    if small:
+        # single-level grouped merge: per-group partial volume is
+        # bounded by tasks × est bytes (under the threshold), so one
+        # task per group suffices — skip the __mb fan-in level (its
+        # exchange + cores-wide Python stage cost more than the merges
+        # below the threshold). The partition count is UNPINNED here on
+        # purpose: AQE coalesces the KB-blob exchange to a task or two.
+        # That task's cost scales with the number of groups, not bytes
+        # (7.7k 96-byte partials in 2,000 groups, one core of a 4-core
+        # Xeon VM: 1.06 s as a pandas groupby loop building a frame per
+        # group, 0.043 s segmented once), which is why
+        # merge_partial_batches keeps per-group Python work to one
+        # merge call; the pinned count stays
+        # reserved for the heavy tree, where coalescing serialized
+        # MB-blob merges.
+        return partials.repartition(*group_cols).mapInArrow(
+            merging(group_cols, schema.names), schema=schema)
+    level1 = level1_in.repartition(nparts, *l1_keys).mapInArrow(
+        merging(l1_keys, l1_schema.names), schema=l1_schema)
+    return level1.drop("__mb").repartition(nparts, *group_cols) \
+        .mapInArrow(merging(group_cols, schema.names), schema=schema)
 
 
 def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
@@ -626,43 +683,18 @@ def _grouped_bitor_assemble(proj: DataFrame, group_cols: list[str],
             cnt = batch.column("cnt").to_numpy(zero_copy_only=False)
             ps = [batch.column(f"p{i}").to_numpy(zero_copy_only=False)
                   .view(np.uint64) for i in range(4)]
-            import numpy as _np
-            # collision-free per-column factorization → combined code.
-            # pd.factorize (use_na_sentinel=False) assigns null group
+            # pd.factorize (inside group_segments) gives null group
             # values a real code — np.unique would try to SORT an
-            # object array containing None and raise TypeError.
-            invs, sizes = [], []
-            for col in gvals:
-                inv, u = pd.factorize(_np.asarray(col, dtype=object),
-                                      use_na_sentinel=False)
-                invs.append(inv.astype(_np.int64))
-                sizes.append(max(len(u), 1))
-            prod = 1
-            for s in sizes:
-                prod *= s
-            if prod < (1 << 62):
-                gkey = _np.zeros(batch.num_rows, dtype=_np.int64)
-                for inv, s in zip(invs, sizes):
-                    gkey = gkey * _np.int64(s) + inv
-                order = _np.argsort(gkey, kind="stable")
-                gs = gkey[order]
-                bounds = _np.flatnonzero(gs[1:] != gs[:-1]) + 1
-            else:
-                # combined code would overflow int64 (product of
-                # per-column cardinalities ≥ 2^62): lexsort the code
-                # TUPLE instead — same segmentation, no overflow
-                order = _np.lexsort(invs[::-1])
-                diff = _np.zeros(batch.num_rows - 1, dtype=bool)
-                for inv in invs:
-                    s = inv[order]
-                    diff |= s[1:] != s[:-1]
-                bounds = _np.flatnonzero(diff) + 1
-            for seg in _np.split(order, bounds):
+            # object array containing None and raise TypeError
+            order, bounds = group_segments(
+                [np.asarray(col, dtype=object) for col in gvals],
+                batch.num_rows)
+            for seg in np.split(order, bounds):
                 g = tuple(col[seg[0]] for col in gvals)
                 sl = slices.get(g)
                 if sl is None:
-                    sl = slices[g] = _np.zeros(num_buckets * 4,
-                                               dtype=_np.uint64)
+                    sl = slices[g] = np.zeros(num_buckets * 4,
+                                              dtype=np.uint64)
                     counts[g] = 0
                 m = sl.reshape(-1, 4)
                 idx = b[seg]

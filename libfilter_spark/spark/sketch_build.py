@@ -8,16 +8,18 @@ t-digest consume float64 value columns.
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType)
 
-from .build import _SMALL_MERGE_MAX, _keys_from_series
+from .build import (_SMALL_MERGE_MAX, _keys_from_series, group_segments,
+                    merge_group_table, merge_partial_batches)
 from ..sketches import SKETCHES
 
 _KEY_SKETCHES = {"hll", "countmin"}
@@ -42,6 +44,16 @@ def estimate_sketch_bytes(kind: str, params: dict) -> int:
     if kind == "tdigest":
         return int(params.get("delta", 100.0)) * 8 * 16 + 64
     return 1 << 20
+
+
+def merge_sketch_list(kind: str, blobs: list[bytes]) -> bytes:
+    """Merge of one group's partial sketch blobs, in the given order
+    (``merge_partial_batches`` passes them sorted by bytes)."""
+    cls = SKETCHES[kind]
+    acc = cls.deserialize(blobs[0])
+    for b in blobs[1:]:
+        acc = acc.merge(cls.deserialize(b))
+    return acc.serialize()
 
 
 def _values(kind: str, s: pd.Series):
@@ -74,14 +86,19 @@ def build_sketches(df: DataFrame, group_cols: list[str] | None,
             if len(pdf) == 0:
                 continue
             if group_cols:
-                for g, vals in pdf.groupby(group_cols, sort=False)[value_col]:
-                    g = g if isinstance(g, tuple) else (g,)
+                # values converted ONCE per batch, then segmented like
+                # the filter partials (null group values kept)
+                vals = _values(kind, pdf[value_col])
+                gvals = [pdf[c].to_numpy() for c in group_cols]
+                order, bounds = group_segments(gvals, len(pdf))
+                for seg in np.split(order, bounds):
+                    g = tuple(col[seg[0]] for col in gvals)
                     sk = acc.get(g)
                     if sk is None:
                         sk = acc[g] = _create(kind, params)
                         counts[g] = 0
-                    sk.update_batch(_values(kind, vals))
-                    counts[g] += len(vals)
+                    sk.update_batch(vals[seg])
+                    counts[g] += len(seg)
             else:
                 g = ()
                 sk = acc.get(g)
@@ -101,60 +118,35 @@ def build_sketches(df: DataFrame, group_cols: list[str] | None,
 
     partials = proj.mapInPandas(partial, schema=schema)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cls = SKETCHES[pdf["kind"].iloc[0]]
-        blobs = sorted(pdf["sketch"], key=bytes)
-        acc = cls.deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc = acc.merge(cls.deserialize(b))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["kind"] = [pdf["kind"].iloc[0]]
-        out["params"] = [pdf["params"].iloc[0]]
-        out["n_rows"] = [int(pdf["n_rows"].sum())]
-        out["n_partials"] = [int(pdf["n_partials"].sum())]
-        out["sketch"] = [acc.serialize()]
-        return pd.DataFrame(out)
-
     # small-merge routing (round 7, mirrors build.merge_filter_blobs):
     # sketch partials are KB-sized lattice state, so when the plan-time
     # estimate × defaultParallelism fits the small-merge budget the
-    # final merge runs single-level — one 1-partition exchange + one
-    # Python task globally, or one grouped exchange + a per-partition
-    # Python loop (instead of one applyInPandas call per group).
-    # Results are identical: the same sorted-blob merge runs either way
-    # and every sketch merge is order-free lattice state (HLL/CMS
-    # byte-identical; KLL/t-digest estimate-equivalent, as before).
+    # final merge runs single-level — one grouped exchange (unpinned:
+    # AQE coalesces it to a task or two) and one mapInArrow call per
+    # partition. That task's cost scales with the number of groups,
+    # not bytes (7.7k partials in 2,000 groups, one core of a 4-core
+    # Xeon VM: 1.10 s for HLL p=10 and 1.20 s for KLL k=200 as a pandas
+    # groupby loop, 0.047 s and 0.074 s segmented once). A global
+    # merge is one group, so it always runs as one 1-partition task.
+    # Every route goes through merge_partial_batches (see its
+    # merge-order contract).
+    spec = dict(names=schema.names, tag="kind", count="n_rows",
+                blob="sketch", merge=merge_sketch_list)
     try:
         par = partials.sparkSession.sparkContext.defaultParallelism
     except Exception:
         par = 32
     small = (estimate_sketch_bytes(kind, params) * max(par, 1)
              <= _SMALL_MERGE_MAX)
-    if small and not group_cols:
-        def merge_flat(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            yield merge(pd.concat(pdfs, ignore_index=True))
-        return partials.repartition(1).mapInPandas(merge_flat,
-                                                   schema=schema)
-    if small and group_cols:
-        # unpinned partition count: per-task merge cost here scales
-        # with bytes (partition-local pandas loop), so AQE coalescing
-        # the KB-blob exchange to a task or two is the right outcome
-        def merge_local(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            outs = [merge(g) for _, g in
-                    pdf.groupby(group_cols, sort=False, dropna=False)]
-            yield pd.concat(outs, ignore_index=True)
-        return partials.repartition(*group_cols) \
-            .mapInPandas(merge_local, schema=schema)
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(merge,
-                                                           schema=schema)
-    return (partials.withColumn("__g", F.lit(0)).groupBy("__g")
-            .applyInPandas(lambda p: merge(p.drop(columns="__g")),
-                           schema=schema))
+    if not group_cols:
+        return partials.repartition(1).mapInArrow(
+            functools.partial(merge_partial_batches, keys=[], **spec),
+            schema=schema)
+    if small:
+        return partials.repartition(*group_cols).mapInArrow(
+            functools.partial(merge_partial_batches, keys=group_cols,
+                              **spec), schema=schema)
+    # large sketches (MB-GB): one group per Python call, so a task
+    # holds one group's blobs at a time
+    return partials.groupBy(*group_cols).applyInArrow(
+        functools.partial(merge_group_table, **spec), schema=schema)
