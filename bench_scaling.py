@@ -130,50 +130,6 @@ for family in ("taffy_block", "taffy_cuckoo"):
         "filter_bytes": sum(len(bytes(r["filter"])) for r in rows)}
     forest_df.unpersist()
 
-# taffy_block_jvm: the bit_or-aggregation forest engine on the FULL
-# key stream — ZERO keys cross into Python (a control experiment
-# showed the Arrow IPC stream is ~the entire >=8-core cost of the
-# streamed engine: raw kernel inserts scale 8.3->27.5 Mk/s at 8->32
-# workers while the streamed build plateaus ~2.3 Mk/s). At the 4M
-# family size the streamed engine still wins absolutely (measured
-# crossover sits past 20M keys/2 cores); this row runs at the
-# pipeline's n where the aggregation engine's regime holds.
-best = float("inf")
-rows = None
-for _ in range(2):
-    t0 = time.perf_counter()
-    forest = build_filter_forest(keys, "key", "taffy_block",
-                                 ndv=n, fpp=0.004,
-                                 n_shards=4 * cpus, engine="jvm")
-    rows = forest.collect()
-    best = min(best, time.perf_counter() - t0)
-forest_df = spark.createDataFrame(rows, forest.schema).cache()
-forest_df.count()
-# probe the FULL key set (probe_n == n): a 4M-key probe of this
-# 110 MB forest measures per-worker setup (broadcast unpickle +
-# state assembly/attach), not probe throughput — the row is then
-# directly comparable with the pipeline probe above, which also
-# probes all n keys. min-of-3 so one cold/throttled trial can't
-# dominate (the shm-published state makes later trials warm).
-pbest = float("inf")
-for _ in range(3):
-    t0 = time.perf_counter()
-    found = probe_with_forest(keys, forest_df, "key") \
-        .where("maybe_seen").count()
-    pbest = min(pbest, time.perf_counter() - t0)
-    assert found == n, (found, n)
-absent_jvm = (spark.range(n, n + n_taffy, numPartitions=2 * cpus)
-              .withColumn("content", F.col("id").cast("string")))
-ajk = with_content_key_bin(absent_jvm, "content").select("key")
-n_fp = probe_with_forest(ajk, forest_df, "key") \
-    .where("maybe_seen").count()
-fam["taffy_block_jvm"] = {
-    "build_keys_per_s": round(n / best),
-    "probe_keys_per_s": round(n / pbest),
-    "n": n, "probe_n": n, "fpp": round(n_fp / n_taffy, 5),
-    "filter_bytes": sum(len(bytes(r["filter"])) for r in rows)}
-forest_df.unpersist()
-
 print(json.dumps({"cpus": cpus, "n": n,
                   "build_s": round(build_s, 3),
                   "probe_s": round(probe_s, 3),
@@ -246,9 +202,7 @@ def main() -> None:
                 m["build_keys_per_s"] = max(a["build_keys_per_s"],
                                             b["build_keys_per_s"])
                 # probe rates merge only across IDENTICAL probe
-                # volumes — records from before the full-volume jvm
-                # probe (probe_n absent) measured per-worker setup at
-                # 4M keys and must not mix with the new measurement
+                # volumes (a row's probe_n, absent = the family size)
                 if a.get("probe_n") == b.get("probe_n"):
                     m["probe_keys_per_s"] = max(a["probe_keys_per_s"],
                                                 b["probe_keys_per_s"])
@@ -302,8 +256,6 @@ def write_reports(results: dict[int, dict], n: int) -> None:
             round(eff_fam(results, "taffy_block"), 3),
         "taffy_cuckoo_build_efficiency_2_to_8":
             round(eff_fam(results, "taffy_cuckoo"), 3),
-        "taffy_block_jvm_build_efficiency_2_to_8":
-            round(eff_fam(results, "taffy_block_jvm"), 3),
         **{f"local[{c}]": r for c, r in results.items()},
     }
     print(json.dumps(result))
@@ -391,7 +343,7 @@ a memory bus.
 Round 5 swept every per-row-plumbing lever (BENCH/forest_ipc.json,
 in-process A/B at 8M keys): fatter Arrow batches (65k→500k rows),
 collect_list packing (~64k keys/row, shuffle-free packing — the
-`arrow_packed` engine, kept and tested), int64 instead of binary
+`arrow_packed` engine, since deleted), int64 instead of binary
 shuffle rows, and shuffle compression off. None reaches 0.70 without
 worsening absolute throughput; binary-key `arrow` stays the fastest
 ABSOLUTE config at every parallelism. The stage decomposition pins
@@ -403,38 +355,6 @@ memory bandwidth that the kernels alone do not saturate. Like the
 8→32 scatter wall below, this is a shared-memory-system artifact the
 2→8 pipeline numbers inherit; each real executor adds its own memory
 channels.
-
-### taffy_block_jvm — the aggregation forest engine ({r2['families'].get('taffy_block_jvm', {}).get('n', 0):,} keys)
-
-For taffy_block the escape hatch ships: pre-sized shards never
-upsize, so the insert runs as the whole-stage-codegen
-``groupBy(shard, bucket).agg(bit_or)`` (the sharded-block engine,
-spark/sharded.py block_groupby_bitor) — ZERO keys cross into Python,
-byte-identical blobs to the streamed engine at equal sizing (tested),
-1.25× level-0 margin for shard-load jitter. Measured crossover vs the
-streamed engine sits past ~20M keys/2 cores (at 4M the stream still
-wins absolutely; at 20M jvm scales 0.73 vs arrow 0.63 from 2→8), so
-this row runs at the pipeline's full n — the regime a 100 TB shard
-actually lives in. Cuckoo families cannot take this path (kick walks
-are stateful Python by design).
-
-Probe-side, the assembled forest matrix is published ONCE per box to
-/dev/shm by a single lock-holding worker and stream-copied by the
-rest (past 32 MB, copy-on-attach): worker churn no longer
-re-pays the broadcast unpickle + assembly (measured 6.2 s → 1.3-1.6 s
-re-probe of the 110 MB forest at local[32]; BENCH/probe_asm_share.json
-records the private / zero-copy / copy-on-attach A/B). The probe
-column probes the FULL n-key set (like the pipeline rows above) —
-a 4M-key probe of a 110 MB forest measures per-worker setup, not
-probe throughput.
-
-| config | TBF-jvm build keys/s | probe keys/s | fpp |
-|---|---|---|---|
-| local[2]  | {r2['families'].get('taffy_block_jvm', {}).get('build_keys_per_s', 0):,} | {r2['families'].get('taffy_block_jvm', {}).get('probe_keys_per_s', 0):,} | {r2['families'].get('taffy_block_jvm', {}).get('fpp', '—')} |
-| local[8]  | {r8['families'].get('taffy_block_jvm', {}).get('build_keys_per_s', 0):,} | {r8['families'].get('taffy_block_jvm', {}).get('probe_keys_per_s', 0):,} | {r8['families'].get('taffy_block_jvm', {}).get('fpp', '—')} |
-| local[32] | {r32['families'].get('taffy_block_jvm', {}).get('build_keys_per_s', 0):,} | {r32['families'].get('taffy_block_jvm', {}).get('probe_keys_per_s', 0):,} | {r32['families'].get('taffy_block_jvm', {}).get('fpp', '—')} |
-
-TBF-jvm build efficiency 2→8: {eff_fam(results, 'taffy_block_jvm'):.3f}.
 
 ### Why 2→8 is the honest N→4N pair on this box
 
@@ -495,7 +415,7 @@ also re-tested the scatter shape itself: one row-wise
 form wins), winner-resolution rounds via last-writer-wins scatter
 (126 — loses), sort+reduceat (284 — loses). The remaining ~50 ns gap
 to C is the per-element `ufunc.at` dispatch, structural to numpy;
-the JVM `bit_or` engine is the scale path that bypasses it entirely.
+the grouped JVM `bit_or` builds bypass it entirely.
 
 ## Round-4 reconciliation & route notes
 
@@ -566,7 +486,7 @@ the JVM `bit_or` engine is the scale path that bypasses it entirely.
   assembled 129 ns/key (2.0×); full-batch kernels tie (~175 ns/key) —
   the win is exactly the per-batch small-segment call overhead.
   100M growth sweep: TCF probe 13.3 → 16.7 Mk/s (fpp bit-identical);
-  this scaling record's TCF/TBF-jvm probe rows also fold in the
+  this scaling record's TCF probe rows also fold in the
   assembled-route reruns.
 """)
 

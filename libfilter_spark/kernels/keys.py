@@ -37,7 +37,7 @@ def keys_from_arrow(arr) -> np.ndarray:
     """pyarrow (binary or int64) Array → uint64 keys, zero-copy where
     the layout allows (fixed 8-byte values, contiguous data buffer).
     Null entries map to key 0 — callers that must distinguish nulls
-    use :func:`keys_and_valid_from_arrow`."""
+    use :func:`keys_and_valid_from_arrow` or :func:`drop_null_keys`."""
     import pyarrow as pa
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -72,6 +72,20 @@ def keys_and_valid_from_arrow(arr) -> tuple[np.ndarray, np.ndarray]:
         arr = arr.combine_chunks()
     valid = ~np.asarray(arr.is_null())
     return keys_from_arrow(arr), valid
+
+
+def drop_null_keys(data, key=0):
+    """Arrow RecordBatch or Table minus the rows whose ``key`` column
+    is null (returned as is when it has none). The Python build routes
+    drop null keys here: a null is not a member, its key-0 surrogate
+    (:func:`keys_from_arrow`) would set a spurious bit, and a JVM
+    ``IS NOT NULL`` filter is pushed below the key projection, which
+    then derives every key twice."""
+    col = data.column(key)
+    if not col.null_count:
+        return data
+    import pyarrow.compute as pc
+    return data.filter(pc.is_valid(col))
 
 
 def sha256_key(content: str | bytes) -> int:

@@ -25,7 +25,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -281,6 +280,15 @@ def _result_schema(df: DataFrame, group_cols: list[str]) -> StructType:
     return StructType(out)
 
 
+def _arrow_schema(schema: StructType):
+    """The Arrow schema of a Spark result schema, for batches a Python
+    stage builds itself."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    return pa.schema([(f.name, to_arrow_type(f.dataType))
+                      for f in schema.fields])
+
+
 def build_filters(df: DataFrame, group_cols: list[str] | None,
                   key_col: str = "key", family: str = "block",
                   ndv: int = 1 << 20, fpp: float = 0.01,
@@ -342,83 +350,57 @@ def build_filters(df: DataFrame, group_cols: list[str] | None,
             pass  # streaming plans have no static partitioning to widen
     partial_schema = _result_schema(proj, group_cols)
 
-    if not group_cols:
-        # GLOBAL partial build goes through mapInArrow: the pandas
-        # conversion would materialize one Python bytes object per
-        # binary key — measured to dominate the Python stage and cap
-        # its multi-worker scaling (see spark/sharded.py build_slice);
-        # keys_from_arrow reads the Arrow buffer zero-copy instead.
-        def arrow_partials(batches):
-            import pyarrow as pa
+    # mapInArrow, not mapInPandas: the pandas conversion would
+    # materialize one Python bytes object per binary key — measured to
+    # dominate the Python stage and cap its multi-worker scaling (see
+    # spark/sharded.py build_slice); keys_from_arrow reads the Arrow
+    # buffer zero-copy instead
+    out_schema = _arrow_schema(partial_schema)
 
-            from ..kernels.keys import keys_from_arrow
-            f = None
-            n = 0
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                if f is None:
-                    f = create_filter(family, ndv, fpp)
-                f.add_hashes(keys_from_arrow(batch.column(0)))
-                n += batch.num_rows
-            if f is not None:
-                yield pa.RecordBatch.from_pydict({
-                    "family": pa.array([family]),
-                    "params": pa.array([params]),
-                    "n_keys": pa.array([n], type=pa.int64()),
-                    "n_partials": pa.array([1], type=pa.int64()),
-                    "filter": pa.array([f.serialize()],
-                                       type=pa.binary())})
+    def partial_builder(batches):
+        import pyarrow as pa
 
-        partials = proj.mapInArrow(
-            arrow_partials,
-            schema="family string, params string, n_keys long, "
-                   "n_partials long, filter binary")
-        return merge_filter_blobs(partials, group_cols,
-                                  est_bytes=est_bytes)
-
-    def partial_builder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..kernels.keys import drop_null_keys, keys_from_arrow
         acc: dict[tuple, object] = {}
         counts: dict[tuple, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            batch = drop_null_keys(batch, key_col)
+            if batch.num_rows == 0:
                 continue
-            if group_cols:
+            keys = keys_from_arrow(batch.column(key_col))
+            if not group_cols:
+                segs = [((), keys)]
+            else:
                 # key conversion ONCE per batch, then numpy group
                 # segmentation — pandas groupby iteration plus a
                 # per-group binary-key conversion measured ~4 ms per
                 # (task, group), which dominated many-group builds
-                keys = _keys_from_series(pdf[key_col])
-                gvals = [pdf[c].to_numpy() for c in group_cols]
-                order, bounds = group_segments(gvals, len(pdf))
-                for seg in np.split(order, bounds):
-                    g = tuple(col[seg[0]] for col in gvals)
-                    f = acc.get(g)
-                    if f is None:
-                        f = acc[g] = create_filter(family, ndv, fpp)
-                        counts[g] = 0
-                    f.add_hashes(keys[seg])
-                    counts[g] += len(seg)
-            else:
-                g = ()
+                gcols = [batch.column(c) for c in group_cols]
+                order, bounds = group_segments(
+                    [c.to_pandas(types_mapper=pd.ArrowDtype)
+                     for c in gcols], batch.num_rows)
+                heads = order[np.r_[0, bounds].astype(np.int64)]
+                segs = zip(zip(*(c.take(heads).to_pylist()
+                                 for c in gcols)),
+                           (keys[seg] for seg in np.split(order, bounds)))
+            for g, k in segs:
                 f = acc.get(g)
                 if f is None:
                     f = acc[g] = create_filter(family, ndv, fpp)
                     counts[g] = 0
-                f.add_hashes(_keys_from_series(pdf[key_col]))
-                counts[g] += len(pdf)
+                f.add_hashes(k)
+                counts[g] += len(k)
         if acc:
-            rows = {}
-            for i, c in enumerate(group_cols):
-                rows[c] = [g[i] for g in acc]
-            rows["family"] = [family] * len(acc)
-            rows["params"] = [params] * len(acc)
-            rows["n_keys"] = [counts[g] for g in acc]
-            rows["n_partials"] = [1] * len(acc)
-            rows["filter"] = [f.serialize() for f in acc.values()]
-            yield pd.DataFrame(rows)
+            cols = {c: [g[i] for g in acc]
+                    for i, c in enumerate(group_cols)}
+            cols["family"] = [family] * len(acc)
+            cols["params"] = [params] * len(acc)
+            cols["n_keys"] = list(counts.values())
+            cols["n_partials"] = [1] * len(acc)
+            cols["filter"] = [f.serialize() for f in acc.values()]
+            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
 
-    partials = proj.mapInPandas(partial_builder, schema=partial_schema)
+    partials = proj.mapInArrow(partial_builder, schema=partial_schema)
     return merge_filter_blobs(partials, group_cols, est_bytes=est_bytes)
 
 
@@ -543,34 +525,40 @@ def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
     proj = df.select(*group_cols, key_col)
     schema = _result_schema(proj, group_cols)
 
-    # huge grouped BLOCK builds take the JVM bit_or engine past the
-    # same ~10M-keys/group crossover as the global sharded build: the
-    # insert runs as groupBy(group, bucket).agg(bit_or) under
-    # whole-stage codegen and ZERO keys cross into Python — the
-    # streamed applyInArrow pass below was measured as the scaling
-    # ceiling for thin-row Python stages. Shuffle volume: one ~40 B
-    # row per distinct (group, bucket) ≈ filter bytes (+ the group key
-    # per row), map-side combined.
+    # huge grouped BLOCK builds (ndv ≥ 10M per group) take the JVM
+    # bit_or engine: the insert runs as groupBy(group, bucket)
+    # .agg(bit_or) under whole-stage codegen and ZERO keys cross into
+    # Python. Shuffle volume: one ~40 B row per distinct (group,
+    # bucket) ≈ filter bytes (+ the group key per row), map-side
+    # combined. It beat the applyInArrow pass below in 3 of 3 pairs at
+    # 2 groups × 10M keys on a 4-core Xeon VM (local[4], medians
+    # 11.13 vs 24.58 s; BENCH/engine_ab.json).
     if family == "block" and group_cols and ndv >= 10_000_000:
         return _build_grouped_block_jvm(proj, group_cols, key_col,
                                         ndv, fpp, params, schema)
     # huge grouped TAFFY-BLOCK builds take the same engine: a
     # pre-sized TBF never upsizes, so its state is one level-0 block
     # array plus (ndv0, ttl, last_ndv) bookkeeping — the insert IS the
-    # block bit_or aggregation (see spark/forest.py
-    # _build_tbf_forest_jvm, which proved the equivalence for forest
-    # shards). 1.25x level-0 margin absorbs group-size jitter around
-    # the per-group ndv hint; a group overflowing it errors at
-    # assembly rather than silently mis-building.
+    # block bit_or aggregation (byte-identical to a streamed
+    # create+add_hashes at the same level-0 size, tested). 1.25x
+    # level-0 margin absorbs group-size jitter around the per-group
+    # ndv hint; a group overflowing it errors at assembly rather than
+    # silently mis-building. Same measurement: 3 of 3 pairs, 12.56 vs
+    # 23.96 s.
     if family == "taffy_block" and group_cols and ndv >= 10_000_000:
         return _build_grouped_tbf_jvm(proj, group_cols, key_col,
                                       ndv, fpp, params, schema)
 
+    out_schema = _arrow_schema(schema)
+
     def bulk(table):
-        # applyInArrow + zero-copy key extraction (see arrow_partials)
+        # applyInArrow + zero-copy key extraction (see partial_builder)
         import pyarrow as pa
 
-        from ..kernels.keys import keys_from_arrow
+        from ..kernels.keys import drop_null_keys, keys_from_arrow
+        table = drop_null_keys(table, key_col)
+        if table.num_rows == 0:
+            return out_schema.empty_table()  # all keys null: no row
         keys = keys_from_arrow(table.column(key_col))
         if family == "static_xor":
             keys = np.unique(keys)
@@ -599,11 +587,11 @@ def _build_grouped_block_jvm(proj: DataFrame, group_cols: list[str],
                              key_col: str, ndv: int, fpp: float,
                              params: str, schema) -> DataFrame:
     """Grouped block build with the insert in Tungsten (see
-    spark/sharded.py block_groupby_bitor): per-group filters assemble
+    block_groupby_bitor): per-group filters assemble
     from the reduced nonzero-bucket rows — per-task memory is the
     filters of the groups hashed to it, same bound as the streamed
-    bulk path. Byte-identical to the applyInArrow bulk build on
-    null-free keys (nulls are dropped here, as in every JVM engine)."""
+    bulk path. Byte-identical to the applyInArrow bulk build; both
+    drop null keys."""
     from ..kernels.block import serialize as _ser
     from ..kernels.sizing import BUCKET_BYTES, block_bytes_needed
 
@@ -624,8 +612,8 @@ def _build_grouped_tbf_jvm(proj: DataFrame, group_cols: list[str],
     1.25x margin over the per-group ndv hint (the aggregation is
     orderless, so a group cannot upsize mid-build); groups past the
     margin raise at assembly. Byte-identical to a streamed
-    create+add_hashes build at the same level-0 sizing (the forest jvm
-    engine's equivalence, tests/test_forest_onepass.py)."""
+    create+add_hashes build at the same level-0 sizing
+    (tests/test_probe_routing.py)."""
     from ..filters.taffy_block import (TaffyBlockFilter, _level0_ndv,
                                        _level_bytes)
     from ..kernels import block as K
@@ -657,8 +645,6 @@ def _grouped_bitor_assemble(proj: DataFrame, group_cols: list[str],
     ``groupBy(group, bucket).agg(bit_or)`` (whole-stage codegen, zero
     keys into Python), then assemble each group's reduced
     nonzero-bucket rows into a filter blob via ``make_blob``."""
-    from .sharded import block_groupby_bitor
-
     spark = proj.sparkSession
     try:
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -666,10 +652,10 @@ def _grouped_bitor_assemble(proj: DataFrame, group_cols: list[str],
         nparts = spark.sparkContext.defaultParallelism
     # explicit count: AQE would coalesce a small bucket-row exchange
     # and serialize the per-group assembly (see merge_filter_blobs)
-    agg = block_groupby_bitor(proj, key_col, num_buckets,
-                              lead_cols=group_cols) \
+    agg = block_groupby_bitor(proj, key_col, num_buckets, group_cols) \
         .repartition(nparts, *group_cols)
     out_names = [f.name for f in schema.fields]
+    out_schema = _arrow_schema(schema)
 
     def assemble(batches):
         import pyarrow as pa
@@ -713,9 +699,62 @@ def _grouped_bitor_assemble(proj: DataFrame, group_cols: list[str],
                 cols["n_keys"].append(counts[g])
                 cols["n_partials"].append(1)
                 cols["filter"].append(blob)
-            from pyspark.sql.pandas.types import to_arrow_type
-            pa_schema = pa.schema([(f.name, to_arrow_type(f.dataType))
-                                   for f in schema.fields])
-            yield pa.RecordBatch.from_pydict(cols, schema=pa_schema)
+            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
 
     return agg.mapInArrow(assemble, schema=schema)
+
+
+def block_groupby_bitor(df: DataFrame, key_col: str, num_buckets: int,
+                        lead_cols: list[str]) -> DataFrame:
+    """The JVM bit_or aggregation: the block scatter-OR insert as a
+    whole-stage-codegen ``groupBy(lead..., bucket).agg(bit_or)``, one
+    independent filter per ``lead_cols`` group. Per key, (bucket,
+    8 lane masks) are integer expressions replicating
+    ``block.h:97-125`` exactly:
+
+    - bucket = (h_hi * num_buckets) >> 32 (mulhi range reduction on
+      the upper 32 key bits),
+    - lane i bit = (u32)(h_lo * seed_i) >> 27 — the wrapping 32-bit
+      multiply is emulated in BIGINT with a 16/16 split because ANSI
+      mode forbids overflowing casts,
+    - lane pairs pack into one BIGINT each (bit_or distributes over
+      the packed halves), so the aggregation state is 4 longs/bucket.
+
+    Map-side partial combine runs before the shuffle: volume is one
+    row per DISTINCT (lead..., bucket) per task (≤ filter size), and
+    Python only ever sees the reduced nonzero-bucket rows. Returns
+    (lead..., b, p0..p3, cnt). Null keys are dropped by a JVM filter,
+    which Spark pushes below the key projection, so a derived key is
+    computed twice here."""
+    from ..kernels import block as K
+    if isinstance(df.schema[key_col].dataType, BinaryType):
+        b_expr = (f"shiftright(cast(conv(hex(substring({key_col},1,4)),"
+                  f"16,10) as bigint) * {num_buckets}, 32)")
+        hlo_expr = (f"cast(conv(hex(substring({key_col},5,4)),16,10) "
+                    "as bigint)")
+    else:
+        b_expr = (f"shiftright(shiftrightunsigned(cast({key_col} as "
+                  f"bigint), 32) * {num_buckets}, 32)")
+        hlo_expr = f"cast({key_col} as bigint) & 4294967295"
+    base = (df.where(F.col(key_col).isNotNull())
+            .select(*lead_cols,
+                    F.expr(b_expr).alias("b"),
+                    F.expr(hlo_expr).alias("hlo"))
+            .withColumn("a0", F.expr("hlo & 65535"))
+            .withColumn("a1", F.expr("shiftright(hlo, 16)")))
+
+    def mask(seed: int) -> str:
+        # (hlo * seed) mod 2^32 via 16/16 split, then top-5 bits
+        return ("shiftleft(cast(1 as bigint), cast(shiftright("
+                f"(a0 * {seed} + shiftleft((a1 * {seed}) & 65535, 16))"
+                " & 4294967295, 27) as int))")
+
+    seeds = [int(s) for s in K.SEEDS]
+    pairs = [F.expr(f"{mask(seeds[2 * i])} | "
+                    f"shiftleft({mask(seeds[2 * i + 1])}, 32)")
+             .alias(f"p{i}") for i in range(4)]
+    gb = [*lead_cols, "b"]
+    return (base.select(*gb, *pairs)
+            .groupBy(*gb)
+            .agg(*[F.bit_or(f"p{i}").alias(f"p{i}") for i in range(4)],
+                 F.count(F.lit(1)).alias("cnt")))

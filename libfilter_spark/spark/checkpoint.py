@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from .build import create_filter, estimate_filter_bytes, merge_filter_blobs
+from .build import (_arrow_schema, create_filter, estimate_filter_bytes,
+                    merge_filter_blobs)
 
 SALT_COL = "__salt"
 
@@ -67,14 +68,18 @@ def build_partials_salted(df: DataFrame, group_cols: list[str],
     params = json.dumps({"ndv": int(ndv), "fpp": float(fpp)})
     salted = with_salt(df.select(*group_cols, key_col), key_col, n_salts)
     schema = _partial_schema(salted, group_cols)
+    out_schema = _arrow_schema(schema)
 
     def build(table):
         # applyInArrow + zero-copy keys (a pandas grouped map would
         # materialize one Python bytes object per key)
         import pyarrow as pa
 
-        from ..kernels.keys import keys_from_arrow
+        from ..kernels.keys import drop_null_keys, keys_from_arrow
         t0 = time.perf_counter()
+        table = drop_null_keys(table, key_col)
+        if table.num_rows == 0:
+            return out_schema.empty_table()  # all keys null: no unit
         f = create_filter(family, ndv, fpp)
         keys = keys_from_arrow(table.column(key_col))
         f.add_hashes(keys)

@@ -33,7 +33,7 @@ from pyspark.sql.types import (BinaryType, LongType, StringType,
 from ..filters import FAMILIES
 from .sharded import SHARD_COL, repartition_by_shard
 
-# one row per built shard — shared by every forest engine
+# one row per built shard
 _FOREST_SCHEMA = StructType([
     StructField(SHARD_COL, LongType()),
     StructField("family", StringType()),
@@ -42,40 +42,6 @@ _FOREST_SCHEMA = StructType([
     StructField("n_partials", LongType()),
     StructField("filter", BinaryType()),
 ])
-
-
-def _bufs_to_batch(bufs: dict, cls, per_shard: int, fpp: float,
-                   family: str, params: str, freeze: bool):
-    """Shared tail of the streamed forest engines: per-shard key
-    buffers → built filters → the task's single output RecordBatch
-    (None when the task saw no rows). Inserting ONCE per shard at
-    stream end is deliberate — add_hashes pre-sizes to a low-load
-    configuration when it knows the full count, where the per-batch
-    incremental pattern was measured 1.8× (TCF) to 2.5× (MTCF) slower
-    per key (every call runs the filter at its ~0.9-occupancy growth
-    edge). Transient cost: the task's key share at 8 B/key, bounded by
-    the same shard sizing that bounds the filter."""
-    import numpy as np
-    import pyarrow as pa
-
-    filters: dict[int, object] = {}
-    counts: dict[int, int] = {}
-    for s, chunks in bufs.items():
-        keys = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        f = filters[s] = cls.create(per_shard, fpp)
-        f.add_hashes(keys)
-        counts[s] = len(keys)
-    if not filters:
-        return None
-    out_fam, blobs = _freeze_blobs(family, filters.values(), freeze)
-    return pa.RecordBatch.from_pydict({
-        SHARD_COL: pa.array(list(filters), type=pa.int64()),
-        "family": pa.array([out_fam] * len(filters)),
-        "params": pa.array([params] * len(filters)),
-        "n_keys": pa.array([counts[s] for s in filters],
-                           type=pa.int64()),
-        "n_partials": pa.array([1] * len(filters), type=pa.int64()),
-        "filter": pa.array(blobs, type=pa.binary())})
 
 
 def with_shard(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
@@ -106,20 +72,21 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     per batch with the bit-exact numpy replica of Spark's xxhash64
     (kernels/keys.py shard_of_keys, verified against F.xxhash64).
 
-    ``engine``: ``arrow`` (the ``auto`` default) streams keys into
-    Python — works for every family, required for the cuckoo families
-    whose kick walks are inherently Python-side. ``jvm`` (taffy_block
-    only) runs the insert as the whole-stage-codegen bit_or
-    aggregation — ZERO keys cross into Python, removing the Arrow-IPC
-    stream that a control experiment showed is ~the entire ≥8-core
-    build cost (raw kernel inserts scale 8.3→27.5 Mk/s at 8→32
-    workers while the streamed build plateaus at ~2.3 Mk/s). The jvm
-    engine pre-sizes level 0 with a 1.25× margin (aggregation is
-    orderless, so a shard cannot upsize mid-build; the margin absorbs
-    xxhash balance jitter — overflow past it errors rather than
-    silently mis-building), trading ~25% level-0 bytes for the
-    JVM-scaling build; sizes/fpp therefore differ from the arrow
-    engine's exact schedule, which remains the default.
+    Each shard is created once, at stream end, sized for its share:
+    ``ndv // n_shards`` keys, and for ``taffy_block`` a level 0 of
+    1.25 × that share + 64, so xxhash load jitter seldom grows a
+    second level and every shard keeps one level-0 size (the
+    assembled ``_TbfForestProbe`` needs both). A shard past the margin
+    grows a level like any taffy_block.
+
+    ``engine`` accepts ``"auto"`` and ``"arrow"`` only, both this
+    streamed build. A JVM ``bit_or``-aggregation taffy_block build
+    with the same output lost every pair to it on a 4-core Xeon VM at
+    local[4] (3 interleaved pairs per size, medians 2.83 vs 2.05 s at
+    3M keys, 6.57 vs 4.93 s at 10M, 12.11 vs 8.78 s at 20M;
+    BENCH/engine_ab.json), and a ``collect_list``-packed transfer was
+    slower at local[2] and local[8] (11.43 vs 10.34 s, 5.53 vs
+    4.46 s; BENCH/forest_ipc.json).
 
     ``freeze=True`` (taffy_cuckoo only) serializes each shard FROZEN
     (``taffy-cuckoo.c:127-160``: tails dropped, 4×10-bit fingerprints
@@ -140,7 +107,6 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     ``probe_only=False`` (or ``freeze=False``) to keep live shards
     (full tails: lower FPP, later absorb/upsize possible).
     """
-    from pyspark.sql.types import BinaryType as _Bin
     spark = df.sparkSession
     if freeze is None:
         freeze = probe_only and family == "taffy_cuckoo"
@@ -156,221 +122,64 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     params = json.dumps({"ndv": int(ndv), "fpp": float(fpp),
                          "n_shards": int(n_shards),
                          "routing": "xxhash64"})
+    if engine not in ("auto", "arrow"):
+        raise ValueError(f"unknown forest engine {engine!r}: the "
+                         "streamed 'arrow' build is the only one")
     cls = FAMILIES[family]
     per_shard = max(64, ndv // n_shards)
-    if engine == "auto":
-        # arrow stays the auto default over arrow_packed DELIBERATELY
-        # (round-6, verdict-r5 task 7): the round-5 IPC lever sweep
-        # (BENCH/forest_ipc.json, 8M-key TCF forest, in-process
-        # min-of-2 per variant) measured arrow FASTEST ABSOLUTE at
-        # every parallelism — 10.34 s vs packed 11.43 s at local[2],
-        # 4.46 s vs 5.53 s at local[8] — with packed_big winning only
-        # the 2→8 efficiency RATIO (0.638 vs 0.58) by slowing its
-        # local[2] baseline, not by being faster at 8. A ratio-based
-        # crossover would therefore always pick the slower engine.
-        # arrow_packed is kept as an explicit opt-in for executor
-        # shapes where per-row Arrow cost dominates end-to-end time
-        # (it ships ~64k keys per row instead of one per row).
-        engine = "arrow"
-    if engine == "jvm":
-        if family != "taffy_block":
-            raise ValueError(
-                "the jvm forest engine covers taffy_block only (cuckoo "
-                "kick walks are Python-side by design)")
-        return _build_tbf_forest_jvm(df, key_col, n_shards, per_shard,
-                                     fpp, params)
-    if engine == "arrow_packed":
-        return _build_forest_arrow_packed(df, key_col, family, cls,
-                                          n_shards, per_shard, fpp,
-                                          params, freeze)
-    if engine != "arrow":
-        raise ValueError(f"unknown forest engine {engine!r}")
-    is_binary = isinstance(df.schema[key_col].dataType, _Bin)
+    # taffy_block: the 1.25x level-0 margin (see the docstring) keeps
+    # every shard at one level; sized at exactly its share, about half
+    # the shards grew a second one (128k keys against a 125k share:
+    # 668,984 B in two levels, 228,944 B in one with the margin)
+    size = int(per_shard * 1.25) + 64 if family == "taffy_block" \
+        else per_shard
+    is_binary = isinstance(df.schema[key_col].dataType, BinaryType)
     routed = repartition_by_shard(
         with_shard(df.select(key_col), key_col, n_shards), n_shards) \
         .select(key_col)
+
     def build_stream(batches):
         import numpy as np
+        import pyarrow as pa
 
-        from ..kernels.keys import keys_and_valid_from_arrow, shard_of_keys
+        from ..kernels.keys import (drop_null_keys, keys_from_arrow,
+                                    shard_of_keys)
         bufs: dict[int, list] = {}
         for batch in batches:
+            batch = drop_null_keys(batch)
             if batch.num_rows == 0:
                 continue
-            # null keys dropped here, not by a JVM IS NOT NULL filter
-            # (Spark pushes it below the key projection and derives
-            # every key twice): probes report null keys non-members, and
-            # the key-0 surrogate would add a spurious bit
-            keys, valid = keys_and_valid_from_arrow(batch.column(0))
-            if not valid.all():
-                keys = keys[valid]
+            keys = keys_from_arrow(batch.column(0))
             shards = shard_of_keys(keys, n_shards, binary=is_binary)
             for s in np.unique(shards):
                 bufs.setdefault(int(s), []).append(keys[shards == s])
-        out = _bufs_to_batch(bufs, cls, per_shard, fpp, family, params,
-                             freeze)
-        if out is not None:
-            yield out
+        if not bufs:
+            return
+        # insert ONCE per shard at stream end: add_hashes pre-sizes to a
+        # low-load configuration when it knows the full count, where
+        # per-batch inserts measured 1.8x (TCF) to 2.5x (MTCF) slower
+        # per key (every call runs the filter at its ~0.9-occupancy
+        # growth edge). Transient cost: the task's keys at 8 B/key.
+        counts, blobs = [], []
+        for chunks in bufs.values():
+            keys = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
+            f = cls.create(size, fpp)
+            f.add_hashes(keys)
+            counts.append(len(keys))
+            # frozen: the TCF's read-only SWAR form; the family column
+            # flips so probes deserialize the right class per row
+            blobs.append((f.freeze() if freeze else f).serialize())
+        n = len(bufs)
+        yield pa.RecordBatch.from_pydict({
+            SHARD_COL: pa.array(list(bufs), type=pa.int64()),
+            "family": pa.array(
+                ["frozen_taffy_cuckoo" if freeze else family] * n),
+            "params": pa.array([params] * n),
+            "n_keys": pa.array(counts, type=pa.int64()),
+            "n_partials": pa.array([1] * n, type=pa.int64()),
+            "filter": pa.array(blobs, type=pa.binary())})
 
     return routed.mapInArrow(build_stream, schema=_FOREST_SCHEMA)
-
-
-def _freeze_blobs(family: str, filters, freeze: bool):
-    """Serialize built shard filters, frozen when requested (TCF →
-    frozen SWAR form; the family column flips so probes deserialize
-    the right class per row)."""
-    if not freeze:
-        return family, [f.serialize() for f in filters]
-    return "frozen_taffy_cuckoo", [f.freeze().serialize()
-                                   for f in filters]
-
-
-def _build_forest_arrow_packed(df: DataFrame, key_col: str, family: str,
-                               cls, n_shards: int, per_shard: int,
-                               fpp: float, params: str,
-                               freeze: bool = False) -> DataFrame:
-    """Streamed forest build with PACKED Arrow transfer: after the
-    shard shuffle, a same-partition ``groupBy(__shard, __salt)
-    .agg(collect_list(key))`` packs ~64k keys into each row, so the
-    JVM→Python stream carries a few fat array rows per task instead of
-    millions of thin rows (the measured ≥8-core ceiling of the
-    row-streamed engine is the per-row Arrow/IPC cost, not the
-    kernels). No second shuffle: HashPartitioning(__shard) already
-    satisfies the aggregation's clustered distribution on
-    (__shard, __salt), so the packing runs inside the builder task.
-    The shard id rides along one-per-packed-row — Python never
-    recomputes the routing hash. Per-group agg state is
-    ~64k keys × key bytes; per-task state is its partition's keys in
-    the JVM hash-agg (spillable), bounded by the shard sizing.
-
-    This engine alone stays on hash partitioning: the aggregation
-    reuses ``HashPartitioning(__shard)``, and routing by shard id
-    (``repartition_by_shard``) adds a second Exchange to the plan."""
-    import numpy as np
-
-    routed = with_shard(
-        df.select(key_col).where(F.col(key_col).isNotNull()),
-        key_col, n_shards).repartition(n_shards, SHARD_COL)
-    salts = max(1, -(-int(per_shard) // 65536))
-    packed = (routed
-              .withColumn("__salt", F.pmod(F.hash(F.col(key_col)),
-                                           F.lit(salts)))
-              .groupBy(SHARD_COL, "__salt")
-              .agg(F.collect_list(F.col(key_col)).alias("__keys"))
-              .drop("__salt"))
-    def build_packed(batches):
-        import pyarrow as pa
-
-        from ..kernels.keys import keys_from_arrow
-        bufs: dict[int, list] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            shards = batch.column(0).to_numpy(zero_copy_only=False)
-            lists = batch.column(1)
-            if isinstance(lists, pa.ChunkedArray):
-                lists = lists.combine_chunks()
-            flat = keys_from_arrow(lists.flatten())
-            offs = lists.offsets.to_numpy(zero_copy_only=False) \
-                - (lists.offsets[0].as_py() or 0)
-            for i in range(batch.num_rows):
-                s = int(shards[i])
-                bufs.setdefault(s, []).append(
-                    flat[offs[i]:offs[i + 1]].copy())
-        out = _bufs_to_batch(bufs, cls, per_shard, fpp, family, params,
-                             freeze)
-        if out is not None:
-            yield out
-
-    return packed.mapInArrow(build_packed, schema=_FOREST_SCHEMA)
-
-
-def _build_tbf_forest_jvm(df: DataFrame, key_col: str, n_shards: int,
-                          per_shard: int, fpp: float,
-                          params: str) -> DataFrame:
-    """taffy_block forest with the insert in Tungsten: a PRE-SIZED TBF
-    shard never upsizes, so its state is one level-0 block array plus
-    (ndv0, ttl = ndv0 − n, last_ndv = ndv0) bookkeeping — and level-0
-    insertion is the block scatter-OR, i.e. the shared
-    ``groupBy(shard, bucket).agg(bit_or)`` aggregation
-    (spark/sharded.py block_groupby_bitor). Python sees only the
-    reduced nonzero-bucket rows and emits blobs BYTE-IDENTICAL to the
-    arrow engine's ``create(per_shard) + add_hashes`` (asserted in
-    tests). Shards whose key count would exceed the level-0 capacity
-    (a real TBF would upsize) raise — raise ``ndv`` or use
-    ``engine='arrow'``."""
-    import numpy as np
-
-    from ..filters.taffy_block import (TaffyBlockFilter, _level0_ndv,
-                                       _level_bytes)
-    from ..kernels import block as K
-    from .sharded import block_groupby_bitor
-
-    # 1.25x margin: the bit_or aggregation is orderless, so a shard
-    # cannot upsize mid-build; the margin absorbs xxhash load jitter
-    # (P(load > 1.25x mean) is e^-O(mean) — negligible past a few
-    # thousand keys/shard). ndv stays a hint; a hint low enough to
-    # blow the margin errors at assembly instead of mis-building.
-    ndv0 = _level0_ndv(int(per_shard * 1.25) + 64, fpp)
-    num_buckets = K.num_buckets_for(_level_bytes(ndv0, fpp, 0))
-    shard_expr = F.pmod(F.xxhash64(F.col(key_col)),
-                        F.lit(n_shards)).cast("long")
-    agg = repartition_by_shard(
-        block_groupby_bitor(df.select(key_col), key_col, num_buckets,
-                            shard_expr=shard_expr), n_shards)
-    schema = (f"{SHARD_COL} long, family string, params string, "
-              "n_keys long, n_partials long, filter binary")
-
-    def assemble(batches):
-        import pyarrow as pa
-        slices: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            s = batch.column(SHARD_COL).to_numpy(zero_copy_only=False)
-            b = batch.column("b").to_numpy(zero_copy_only=False)
-            cnt = batch.column("cnt").to_numpy(zero_copy_only=False)
-            ps = [batch.column(f"p{i}").to_numpy(zero_copy_only=False)
-                  .view(np.uint64) for i in range(4)]
-            for sh in np.unique(s):
-                sh = int(sh)
-                sl = slices.get(sh)
-                if sl is None:
-                    sl = slices[sh] = np.zeros(num_buckets * 4,
-                                               dtype=np.uint64)
-                    counts[sh] = 0
-                sel = s == sh
-                m = sl.reshape(-1, 4)
-                idx = b[sel]
-                for i in range(4):
-                    # buckets are distinct post-agg within a shard
-                    m[idx, i] = ps[i][sel]
-                counts[sh] += int(cnt[sel].sum())
-        if slices:
-            blobs = []
-            for sh, sl in slices.items():
-                n = counts[sh]
-                if n > ndv0:
-                    raise ValueError(
-                        f"forest shard {sh} got {n} keys > level-0 "
-                        f"capacity {ndv0}; a real taffy_block would "
-                        "upsize — raise ndv or use engine='arrow'")
-                level0 = np.ascontiguousarray(sl.view(np.uint32))
-                f = TaffyBlockFilter(ndv0, fpp, [level0],
-                                     ttl=ndv0 - n, last_ndv=ndv0)
-                blobs.append(f.serialize())
-            yield pa.RecordBatch.from_pydict({
-                SHARD_COL: pa.array(list(slices), type=pa.int64()),
-                "family": pa.array(["taffy_block"] * len(slices)),
-                "params": pa.array([params] * len(slices)),
-                "n_keys": pa.array([counts[s] for s in slices],
-                                   type=pa.int64()),
-                "n_partials": pa.array([1] * len(slices),
-                                       type=pa.int64()),
-                "filter": pa.array(blobs, type=pa.binary())})
-
-    return agg.mapInArrow(assemble, schema=schema)
 
 
 def freeze_filters(filters_df: DataFrame,
@@ -442,9 +251,8 @@ def probe_with_forest(df: DataFrame, forest_df: DataFrame,
 def forest_semi_join(probe_df: DataFrame, build_df: DataFrame,
                      forest_df: DataFrame,
                      key_col: str = "key") -> DataFrame:
-    """Exact semi-join accelerated by the forest: forest probe prunes
-    the probe side before the shuffle, exact left-semi verifies."""
-    candidates = (probe_with_forest(probe_df, forest_df, key_col)
-                  .where(F.col("maybe_seen")).drop("maybe_seen"))
-    build_keys = build_df.select(key_col).dropDuplicates([key_col])
-    return candidates.join(build_keys, on=key_col, how="left_semi")
+    """Exact semi-join accelerated by the forest: ``filter_semi_join``
+    with the forest as a global filters frame (its probe routes keys
+    to their shard)."""
+    from .probe import filter_semi_join
+    return filter_semi_join(probe_df, build_df, forest_df, None, key_col)

@@ -278,7 +278,8 @@ class _BlockSliceProbe(_Assembled, BlockFilter):
 
 class _TbfForestProbe(_Assembled):
     """Assembled probe view of a SINGLE-LEVEL taffy_block forest (the
-    jvm engine's shape: pre-sized shards that never upsized). All
+    default build's shape: shards pre-sized with a margin that never
+    upsized). All
     shards share one level-0 bucket count, so the whole forest
     concatenates into one (S × nb, 4) u64 matrix and a batch probes in
     ONE vectorized pass: global bucket = shard × nb + level-0 bucket.

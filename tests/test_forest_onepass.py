@@ -51,57 +51,44 @@ def test_one_pass_forest_zero_fn_and_one_row_per_shard(spark):
             .where("maybe_seen").count()
         assert found == n, (family, found)
         forest.unpersist()
-    # null keys are dropped at build and non-members at probe
+    # null keys are dropped at build (same per-shard counts for every
+    # family) and non-members at probe
     nulls = spark.createDataFrame([(None,)], keys.schema)
+    for family in ("taffy_cuckoo", "taffy_block",
+                   "minimal_taffy_cuckoo"):
+        counts = [{r["__shard"]: r["n_keys"] for r in build_filter_forest(
+            src, "key", family, ndv=n, n_shards=4).collect()}
+            for src in (keys, keys.unionByName(nulls))]
+        assert counts[0] == counts[1] and sum(counts[1].values()) == n
     forest = build_filter_forest(keys.unionByName(nulls), "key",
                                  "taffy_cuckoo", ndv=n, n_shards=4)
     forest.cache()
-    assert sum(r["n_keys"] for r in forest.collect()) == n
     got = probe_with_forest(keys.unionByName(nulls), forest, "key")
     assert got.where("maybe_seen").count() == n
     assert got.count() == n + 1
     forest.unpersist()
-
-
-def test_packed_forest_engine_matches_streamed(spark):
-    """Round-5: the collect_list-packed engine (fat Arrow rows) must
-    agree with the row-streamed engine on shard assignment and key
-    counts for every family, with zero FN through the shared probe
-    route and exactly one shuffle in the plan."""
-    from libfilter_spark.spark.forest import (build_filter_forest,
-                                              probe_with_forest)
-    from libfilter_spark.spark.keys import with_content_key_bin
-    n = 40_000
-    df = spark.range(n).withColumn("content", F.col("id").cast("string"))
-    keys = with_content_key_bin(df, "content").select("key")
-    nulls = spark.createDataFrame([(None,)], keys.schema)
-    with_null = keys.unionByName(nulls)
-    for family in ("taffy_cuckoo", "taffy_block",
-                   "minimal_taffy_cuckoo"):
-        packed = build_filter_forest(with_null, "key", family, ndv=n,
-                                     fpp=0.01, n_shards=8,
-                                     engine="arrow_packed").cache()
-        rows = packed.collect()
-        stream = build_filter_forest(keys, "key", family, ndv=n,
-                                     fpp=0.01, n_shards=8,
-                                     engine="arrow")
-        srows = stream.collect()
-        assert ({r["__shard"]: r["n_keys"] for r in rows}
-                == {r["__shard"]: r["n_keys"] for r in srows})
-        found = probe_with_forest(keys, packed, "key") \
-            .where("maybe_seen").count()
-        assert found == n, (family, found)
-        packed.unpersist()
-    plan = build_filter_forest(
-        keys, "key", "taffy_cuckoo", ndv=n, n_shards=8,
-        engine="arrow_packed")._jdf.queryExecution() \
+    # one shuffle: the shard routing exchange
+    plan = build_filter_forest(keys, "key", "taffy_cuckoo", ndv=n,
+                               n_shards=8)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert plan.count("Exchange") == 1  # packing agg reuses the shard
-    # shuffle's partitioning — no second exchange
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_forest_engine_rejects_deleted_engines(spark):
+    """The streamed build is the forest's one engine: ``auto`` and
+    ``arrow`` name it; any other engine raises, naming the value."""
+    import pytest as _pytest
+
+    from libfilter_spark.spark.forest import build_filter_forest
+    keys = spark.range(10).select(F.col("id").alias("key"))
+    for engine in ("jvm", "arrow_packed"):
+        with _pytest.raises(ValueError, match=engine):
+            build_filter_forest(keys, "key", "taffy_block", ndv=10,
+                                engine=engine)
 
 
 def test_assembled_tbf_forest_probe_matches_grouped(spark):
-    """Round-5: a single-level taffy_block forest (the jvm engine's
+    """Round-5: a single-level taffy_block forest (the default build's
     shape) probes through the assembled one-matrix fast path; answers
     must equal the grouped shard route for binary AND long keys,
     including absent keys and nulls; a grown multi-level forest must
@@ -120,8 +107,7 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
         keys = keyfn(df, "content").select("key")
         akeys = keyfn(absent, "content").select("key")
         forest = build_filter_forest(keys, "key", "taffy_block", ndv=n,
-                                     fpp=0.01, n_shards=8,
-                                     engine="jvm").cache()
+                                     fpp=0.01, n_shards=8).cache()
         rows = forest.collect()
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
         assert P._TbfForestProbe.eligible(8, blobs)  # fast path eligible
@@ -146,8 +132,7 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
     keys = with_content_key_bin(df, "content").select("key")
     akeys = with_content_key_bin(absent, "content").select("key")
     grown = build_filter_forest(keys, "key", "taffy_block",
-                                ndv=8 * 64, fpp=0.01, n_shards=8,
-                                engine="arrow").cache()
+                                ndv=8 * 64, fpp=0.01, n_shards=8).cache()
     gb = {int(r["__shard"]): bytes(r["filter"])
           for r in grown.collect()}
     assert not P._TbfForestProbe.eligible(8, gb)
@@ -247,13 +232,6 @@ def test_frozen_tcf_forest(spark):
     s = probe_with_filters(keys, frozen, None, "key",
                            via="shuffle").where("maybe_seen").count()
     assert s == n
-    # packed engine freezes identically (counts; layout may differ)
-    fp = build_filter_forest(keys, "key", "taffy_cuckoo", ndv=n,
-                             fpp=0.01, n_shards=8, freeze=True,
-                             engine="arrow_packed").cache()
-    assert probe_with_forest(keys, fp, "key") \
-        .where("maybe_seen").count() == n
-    fp.unpersist()
     import pytest as _pytest
     with _pytest.raises(ValueError, match="freeze"):
         build_filter_forest(keys, "key", "taffy_block", freeze=True)
@@ -262,45 +240,54 @@ def test_frozen_tcf_forest(spark):
 
 
 def test_tbf_forest_jvm_engine_byte_identical(spark):
-    """The jvm (bit_or aggregation) taffy_block forest engine must be
-    byte-identical to the arrow (streamed numpy) engine at the SAME
-    level-0 sizing, shard by shard, for binary AND long key columns.
-    (The jvm engine's public sizing carries a 1.25x jitter margin, so
-    the arrow side here is given the equivalent inflated ndv.)"""
-    from libfilter_spark.spark.forest import build_filter_forest
+    """The default taffy_block forest keeps the deleted jvm engine's
+    shape: every shard byte-identical to that engine's blob (the
+    shard's keys scattered into ONE level-0 array sized for 1.25x the
+    per-shard share + 64, ttl = ndv0 - n_keys), for binary AND long key
+    columns, probing zero-FN; a shard past the margin grows a level
+    instead of raising."""
+    from libfilter_spark.filters.taffy_block import (TaffyBlockFilter,
+                                                     _level0_ndv,
+                                                     _level_bytes)
+    from libfilter_spark.kernels import block as K
+    from libfilter_spark.kernels.keys import sha256_keys
+    from libfilter_spark.spark.forest import (build_filter_forest,
+                                              probe_with_forest)
     from libfilter_spark.spark.keys import (with_content_key,
                                             with_content_key_bin)
-    n, shards = 30_000, 8
-    ndv0_jvm = int((n // shards) * 1.25) + 64  # the jvm engine's margin
+    n, shards, fpp = 30_000, 8, 0.01
+    ndv0 = _level0_ndv(int((n // shards) * 1.25) + 64, fpp)
+    nb = K.num_buckets_for(_level_bytes(ndv0, fpp, 0))
+    all_keys = sha256_keys([str(i) for i in range(n)])
     df = spark.range(n).withColumn("content", F.col("id").cast("string"))
-    for keys in (with_content_key_bin(df, "content").select("key"),
-                 with_content_key(df, "content",
-                                  hex_col=None).select("key")):
-        frames = {}
-        for engine, ndv in (("jvm", n), ("arrow", ndv0_jvm * shards)):
-            fr = build_filter_forest(keys, "key", "taffy_block", ndv=ndv,
-                                     fpp=0.01, n_shards=shards,
-                                     engine=engine)
-            frames[engine] = {r["__shard"]: (bytes(r["filter"]),
-                                             r["n_keys"])
-                              for r in fr.collect()}
-        assert frames["jvm"] == frames["arrow"]
-        # and the jvm forest probes zero-FN through the shared route
+    for binary, keys in (
+            (True, with_content_key_bin(df, "content").select("key")),
+            (False, with_content_key(df, "content",
+                                     hex_col=None).select("key"))):
         fr = build_filter_forest(keys, "key", "taffy_block", ndv=n,
-                                 fpp=0.01, n_shards=shards,
-                                 engine="jvm").cache()
-        from libfilter_spark.spark.forest import probe_with_forest
+                                 fpp=fpp, n_shards=shards).cache()
+        got = {r["__shard"]: (bytes(r["filter"]), r["n_keys"])
+               for r in fr.collect()}
+        sh = shard_of_keys(all_keys, shards, binary=binary)
+        expect = {}
+        for s in range(shards):
+            level0 = K.empty(nb)
+            K.add_hashes(level0, all_keys[sh == s])
+            m = int((sh == s).sum())
+            expect[s] = (TaffyBlockFilter(ndv0, fpp, [level0],
+                                          ttl=ndv0 - m,
+                                          last_ndv=ndv0).serialize(), m)
+        assert got == expect, binary
         assert probe_with_forest(keys, fr, "key") \
             .where("maybe_seen").count() == n
         fr.unpersist()
-    # capacity overflow raises instead of silently under-building
-    import pytest as _pytest
+    # past the margin a shard grows a level (the jvm engine raised)
     tiny = build_filter_forest(
         with_content_key_bin(df, "content").select("key"),
-        "key", "taffy_block", ndv=64, fpp=0.01, n_shards=2,
-        engine="jvm")
-    with _pytest.raises(Exception, match="level-0 capacity"):
-        tiny.collect()
+        "key", "taffy_block", ndv=64, fpp=fpp, n_shards=2).collect()
+    assert all(len(TaffyBlockFilter.deserialize(bytes(r["filter"]))
+                   .levels) > 1 for r in tiny)
+    assert sum(r["n_keys"] for r in tiny) == n
 
 
 def test_assembled_frozen_tcf_probe_unit():

@@ -1,5 +1,5 @@
 """Probe routing: broadcast vs shuffle-cogroup equivalence, the
-auto-budget fallback, and engine null-key parity (round-4 items)."""
+auto-budget fallback, and the grouped build engines (round-4 items)."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -78,25 +78,6 @@ def test_probe_global_shuffle_route(spark):
                                      via="shuffle").collect()}
     assert b == s and len(b) == 2_000
     assert all(b[str(i)] for i in range(1_000))
-
-
-def test_sharded_engines_agree_on_null_keys(spark):
-    """Round-3 ADVICE low: the arrow engine must drop null keys like
-    the jvm engine (no spurious key-0 membership bit)."""
-    from libfilter_spark.spark.sharded import build_block_shards
-    base = spark.range(5_000).select(
-        F.col("id").cast("string").alias("content"))
-    keys = with_content_key_bin(base, "content").select("key")
-    nulls = spark.createDataFrame([(None,), (None,)], keys.schema)
-    with_nulls = keys.unionByName(nulls)
-    frames = {}
-    for engine in ("jvm", "arrow"):
-        sh = build_block_shards(with_nulls, ndv=5_000, fpp=0.01,
-                                n_shards=4, engine=engine)
-        frames[engine] = {r["__shard"]: (bytes(r["filter"]), r["n_keys"])
-                          for r in sh.collect()}
-    assert frames["jvm"] == frames["arrow"]
-    assert sum(n for _, n in frames["jvm"].values()) == 5_000
 
 
 def test_build_strategy_override_pins_partials(spark, monkeypatch):
@@ -475,8 +456,7 @@ def test_shared_assembly_spark_end_to_end(spark, monkeypatch):
         for frame in (
                 build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4),
                 build_filter_forest(keys, "key", "taffy_block", ndv=n,
-                                    fpp=0.01, n_shards=4,
-                                    engine="jvm")):
+                                    fpp=0.01, n_shards=4)):
             got = {r["content"]: r["maybe_seen"]
                    for r in probe_with_filters(probe_keys, frame,
                                                None).collect()}
@@ -747,7 +727,8 @@ def test_grouped_jvm_many_group_cols_no_overflow(spark):
     groups into one filter slice. Ten ~hundred-unique columns force
     the lexsort fallback; every build key must still probe true in
     its own group (a merged slice would also create cross-group false
-    positives at far above the configured fpp)."""
+    positives at far above the configured fpp). The grouped partials
+    route segments its batches the same way and must agree."""
     import json as _json
 
     from libfilter_spark.spark.build import (_build_grouped_block_jvm,
@@ -774,6 +755,12 @@ def test_grouped_jvm_many_group_cols_no_overflow(spark):
     found = probe_with_filters(keys, filters, gcols) \
         .where("maybe_seen").count()
     assert found == n
+    partials = build_filters(keys, gcols, ndv=64, fpp=0.01,
+                             strategy="partials")
+    assert sorted((tuple(r[c] for c in gcols), bytes(r["filter"]),
+                   r["n_keys"]) for r in partials.collect()) == \
+        sorted((tuple(r[c] for c in gcols), bytes(r["filter"]),
+                r["n_keys"]) for r in filters.collect())
     filters.unpersist()
 
 

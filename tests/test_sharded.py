@@ -13,43 +13,25 @@ from libfilter_spark.spark.sharded import (build_block_filter_sharded,
 
 
 def test_sharded_build_byte_identical(spark):
-    n = 20_000
-    df = spark.range(n).withColumn("content", F.col("id").cast("string"))
-    keys = with_content_key_bin(df, "content").select("key")
-    local = BlockFilter.create_with_ndv_fpp(n, 0.01)
-    local.add_hashes(sha256_keys([str(i) for i in range(n)]))
-    expect = local.serialize()
-    for shards in (1, 3, 8):
-        blob = build_block_filter_sharded(keys, ndv=n, fpp=0.01,
-                                          n_shards=shards)
-        assert blob == expect, f"shards={shards} differs"
-
-
-def test_sharded_build_engines_byte_identical(spark):
-    """Both build engines — JVM bit_or aggregation and Arrow/numpy
-    scatter — produce byte-identical shard frames (same slices, same
-    per-shard key counts), for binary AND int64 key columns."""
+    """Byte parity with the local kernel at several shard counts, for
+    binary AND int64 key columns; every key counted once."""
     from libfilter_spark.spark.sharded import (assemble_block_shards,
                                                build_block_shards)
     n = 20_000
-    df = spark.range(n).withColumn("content", F.col("id").cast("string"))
-    bin_keys = with_content_key_bin(df, "content").select("key")
-    from libfilter_spark.spark.keys import with_content_key
-    long_keys = with_content_key(df, "content",
-                                 hex_col=None).select("key")
     local = BlockFilter.create_with_ndv_fpp(n, 0.01)
     local.add_hashes(sha256_keys([str(i) for i in range(n)]))
     expect = local.serialize()
-    for keys in (bin_keys, long_keys):
-        frames = {}
-        for engine in ("jvm", "arrow"):
-            sh = build_block_shards(keys, ndv=n, fpp=0.01, n_shards=6,
-                                    engine=engine)
-            rows = {r["__shard"]: (bytes(r["filter"]), r["n_keys"])
-                    for r in sh.collect()}
-            frames[engine] = rows
-            assert assemble_block_shards(sh) == expect, engine
-        assert frames["jvm"] == frames["arrow"]
+    for binary in (True, False):
+        keys = _content_keys(spark, n, binary)
+        for shards in (1, 3, 6, 8):
+            sh = build_block_shards(keys, ndv=n, fpp=0.01,
+                                    n_shards=shards).cache()
+            assert assemble_block_shards(sh) == expect, (binary, shards)
+            assert sh.agg(F.sum("n_keys")).first()[0] == n
+            sh.unpersist()
+    blob = build_block_filter_sharded(_content_keys(spark, n), ndv=n,
+                                      fpp=0.01, n_shards=3)
+    assert blob == expect
 
 
 def test_sharded_probe_round_trip(spark):
@@ -302,16 +284,12 @@ def test_shard_routed_builds_one_shard_per_partition(spark):
     from libfilter_spark.spark.sharded import SHARD_COL, build_block_shards
     n = 20_000
     keys = _content_keys(spark, n)
-    builds = [(f"block/{engine}/{k}",
-               build_block_shards(keys, ndv=n, fpp=0.01, n_shards=k,
-                                  engine=engine), k)
-              for k in (3, 4, 8) for engine in ("arrow", "jvm")]
-    builds += [("forest/arrow", build_filter_forest(
-                    keys, "key", "taffy_cuckoo", ndv=n, fpp=0.01,
-                    n_shards=4, engine="arrow"), 4),
-               ("forest/jvm", build_filter_forest(
-                    keys, "key", "taffy_block", ndv=n, fpp=0.01,
-                    n_shards=4, engine="jvm"), 4)]
+    builds = [(f"block/{k}",
+               build_block_shards(keys, ndv=n, fpp=0.01, n_shards=k), k)
+              for k in (3, 4, 8)]
+    builds += [(f"forest/{family}", build_filter_forest(
+                    keys, "key", family, ndv=n, fpp=0.01, n_shards=4), 4)
+               for family in ("taffy_cuckoo", "taffy_block")]
     for name, out, k in builds:
         rows = out.select(SHARD_COL,
                           F.spark_partition_id().alias("pid")).collect()
@@ -321,36 +299,44 @@ def test_shard_routed_builds_one_shard_per_partition(spark):
 
 
 def test_sharded_build_null_keys_dropped(spark):
-    """Null keys are not members: both engines, binary and int64 keys,
-    build the same shard frame with nulls in the input as without."""
+    """Null keys are not members: binary and int64 keys build the same
+    shard frame with nulls in the input as without."""
     from libfilter_spark.spark.sharded import SHARD_COL, build_block_shards
     n = 20_000
     for binary in (True, False):
         keys = _content_keys(spark, n, binary)
         nulls = spark.range(300).select(
             F.lit(None).cast(keys.schema["key"].dataType).alias("key"))
-        for engine in ("arrow", "jvm"):
-            frames = []
-            for src in (keys, keys.unionByName(nulls)):
-                sh = build_block_shards(src, ndv=n, fpp=0.01, n_shards=4,
-                                        engine=engine)
-                frames.append(sorted(
-                    (r[SHARD_COL], r["n_keys"], bytes(r["filter"]))
-                    for r in sh.collect()))
-            assert frames[0] == frames[1], (binary, engine)
-            assert sum(r[1] for r in frames[1]) == n
+        frames = []
+        for src in (keys, keys.unionByName(nulls)):
+            sh = build_block_shards(src, ndv=n, fpp=0.01, n_shards=4)
+            frames.append(sorted(
+                (r[SHARD_COL], r["n_keys"], bytes(r["filter"]))
+                for r in sh.collect()))
+        assert frames[0] == frames[1], binary
+        assert sum(r[1] for r in frames[1]) == n
 
 
 def test_streamed_builds_derive_each_key_once(spark):
-    """The streamed builds drop null keys in Python, so no JVM filter
-    is pushed below the key projection to derive every key twice."""
+    """Every Python build drops null keys itself, so no JVM filter is
+    pushed below the key projection to derive every key twice: one
+    ``sha2`` in the physical plan of the sharded, forest, partials
+    (global and grouped) and grouped-bulk builds."""
+    from libfilter_spark.spark.build import build_filters
     from libfilter_spark.spark.forest import build_filter_forest
     from libfilter_spark.spark.sharded import build_block_shards
     n = 1_000
     keys = _content_keys(spark, n)
-    for out in (build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4,
-                                   engine="arrow"),
+    gkeys = with_content_key_bin(
+        spark.range(n).select((F.col("id") % 4).alias("g"),
+                              F.col("id").cast("string").alias("content")),
+        "content").select("g", "key")
+    for out in (build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4),
                 build_filter_forest(keys, "key", "taffy_cuckoo", ndv=n,
-                                    fpp=0.01, n_shards=4, engine="arrow")):
+                                    fpp=0.01, n_shards=4),
+                build_filters(keys, None, ndv=n, strategy="partials"),
+                build_filters(gkeys, ["g"], ndv=n, strategy="partials"),
+                build_filters(gkeys, ["g"], ndv=n,
+                              strategy="grouped_bulk")):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("sha2(") == 1, plan
