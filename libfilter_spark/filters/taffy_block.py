@@ -189,13 +189,12 @@ class TaffyBlockFilter:
     @classmethod
     def deserialize_view(cls, buf) -> "TaffyBlockFilter":
         """Zero-copy probe-only deserialization: levels are read-only
-        uint32 VIEWS into ``buf`` (bytes, memoryview, or a /dev/shm
-        memmap — the broadcast-probe path shares ONE page-cached copy
-        across N python workers instead of N private multi-100-MB
-        deserialized stacks). Level offsets in the serialized layout
-        are 8-aligned by construction (40 B header, 8 B length
-        prefixes, 32 B-multiple level blobs), so the kernel's uint64
-        lane views apply directly. Do NOT mutate (add_hashes) a viewed
+        uint32 VIEWS into ``buf`` (bytes, memoryview or numpy buffer).
+        The assembled forest probes read each shard's levels this way
+        and copy them once, into their concatenated matrices. Level
+        offsets in the serialized layout are 8-aligned by construction
+        (40 B header, 8 B length prefixes, 32 B-multiple level blobs),
+        so the kernel's uint64 lane views apply directly. Do NOT mutate (add_hashes) a viewed
         filter — probe only."""
         mv = memoryview(buf)
         if bytes(mv[:4]) != _MAGIC:

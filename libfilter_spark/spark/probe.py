@@ -16,7 +16,6 @@ import json
 import os
 import threading
 import warnings
-from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -57,29 +56,6 @@ _MEMO_MAX = 24  # a cached-frame probe records two entries
 # cogroup — filters stay distributed, probe keys shuffle to them.
 _BROADCAST_MAX = int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
 
-# Global shard-frame probes ASSEMBLE per-worker state (see _Assembled).
-# Past this size the assembled state is published ONCE per box to
-# /dev/shm by a single lock-holding worker and copied by the rest —
-# without it, every python worker privately assembles ~map_bytes of
-# state (and unpickles the broadcast first), and worker churn re-pays
-# that repeatedly: measured on a 110 MB / 50M-key TBF-jvm forest at
-# local[32], cold 4M-key probe 17.2 s and post-churn re-probes 6.2 s vs
-# 1.2 s warm. Attachers COPY the published state into private memory:
-# gathers from the shared tmpfs mapping measured ~60% slower on a warm
-# 50M-key probe (5.26 s vs 3.25 s), while cold start still improves
-# 3.4x because one streaming read replaces unpickle + re-assembly.
-_SHM_ASM_MIN = 32 << 20
-# how long a non-assembling worker waits for the publisher before
-# falling back to private assembly, and when a lock counts as stale
-# (its holder died mid-assembly). Stale is deliberately LONGER than
-# the wait: a slow-but-alive publisher must not trigger a takeover
-# stampede (waiters give up and assemble privately instead); takeover
-# only heals locks of dead publishers for workers that arrive later.
-_ASM_WAIT_S = 120.0
-_ASM_LOCK_STALE_S = 300.0
-# first word of every published image (see _Assembled.to_raw)
-_RAW_MAGIC = 0x4C46_4153_4D02
-
 
 def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
     """Small filters DataFrame → {group_tuple: (family, blob)}."""
@@ -89,8 +65,26 @@ def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
 
 
 def _filter_map(rows: list, group_cols: list[str]) -> dict:
-    return {tuple(r[c] for c in group_cols): (r["family"], bytes(r["filter"]))
+    fmap = {tuple(r[c] for c in group_cols): (r["family"], bytes(r["filter"]))
             for r in rows}
+    if len(fmap) != len(rows):
+        raise _duplicate_rows(group_cols, [tuple(r[c] for c in group_cols)
+                                           for r in rows])
+    return fmap
+
+
+def _duplicate_rows(cols: list[str], keys: list) -> ValueError:
+    """A filters frame holds one row per group (or shard). A map of
+    its rows would keep only the last of two rows for one group and
+    miss the other's keys, so every probe route rejects duplicates
+    (``keys``: one ``cols`` tuple per row)."""
+    from collections import Counter
+    dups = sorted((k for k, n in Counter(keys).items() if n > 1), key=repr)
+    where = "; ".join(", ".join(f"{c}={v!r}" for c, v in zip(cols, k))
+                      for k in dups[:5]) or "the global filter"
+    return ValueError(
+        f"filters frame has more than one row for {where}: build once "
+        "from the union of the inputs instead of unioning filter frames")
 
 
 def _is_cached(df: DataFrame) -> bool:
@@ -179,10 +173,11 @@ class _Assembled:
     ``find_hashes`` calls.
 
     A kind declares the ``family`` of its shard rows and implements
-    ``eligible`` (the driver's cheap header check), ``_build``,
-    ``_image``/``_sizes``/``_from_parts`` (the /dev/shm image) and
+    ``eligible`` (the driver's cheap header check), ``_build`` and
     ``find(keys, binary)`` — ``binary`` tells the forests' xxhash64
-    routing replica how the key column was hashed."""
+    routing replica how the key column was hashed. Every python worker
+    builds its own object from the broadcast and keeps it in
+    ``_FILTER_CACHE``; nothing is shared across processes."""
 
     family = ""
 
@@ -198,36 +193,6 @@ class _Assembled:
     def payload(n_shards: int, blobs: dict):
         """What the broadcast carries for this kind (see _split)."""
         return n_shards, blobs
-
-    def to_raw(self) -> np.ndarray:
-        """Flat u64 image for the /dev/shm publisher: [magic, n_shards,
-        len(dims), dims…, arrays…]. The dims fix every array's size, so
-        from_raw can demand the exact image size."""
-        dims, arrays = self._image()
-        head = np.array([_RAW_MAGIC, self.n_shards, len(dims), *dims],
-                        dtype=np.uint64)
-        return np.concatenate(
-            [head] + [np.ascontiguousarray(a).reshape(-1).view(np.uint64)
-                      for a in arrays])
-
-    @classmethod
-    def from_raw(cls, n_shards: int, raw: np.ndarray):
-        """Inverse of to_raw; None unless the header carries the magic
-        and this ``n_shards`` and the image is exactly as long as its
-        dims imply (truncated or foreign file ⇒ the caller assembles
-        privately)."""
-        if raw.size < 3 or int(raw[0]) != _RAW_MAGIC \
-                or int(raw[1]) != n_shards:
-            return None
-        head = 3 + int(raw[2])
-        dims = [int(x) for x in raw[3:head]]
-        sizes = cls._sizes(n_shards, dims) \
-            if len(dims) == head - 3 else None
-        if sizes is None or raw.size != head + sum(sizes):
-            return None
-        ends = list(accumulate([head, *sizes]))
-        return cls._from_parts(n_shards, dims,
-                               [raw[a:b] for a, b in zip(ends, ends[1:])])
 
 
 class _BlockSliceProbe(_Assembled, BlockFilter):
@@ -260,17 +225,6 @@ class _BlockSliceProbe(_Assembled, BlockFilter):
     def payload(n_shards: int, blobs: dict):
         # a bare blob list: every slice carries its own bucket range
         return list(blobs.values())
-
-    def _image(self):
-        return [self.state.size // K.WORDS_PER_BUCKET], [self.state]
-
-    @staticmethod
-    def _sizes(n_shards: int, dims: list):
-        return [4 * dims[0]] if len(dims) == 1 else None
-
-    @classmethod
-    def _from_parts(cls, n_shards: int, dims: list, parts: list):
-        return cls(n_shards, parts[0].view(np.uint32))
 
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         return self.find_hashes(keys)
@@ -313,17 +267,6 @@ class _TbfForestProbe(_Assembled):
             state[s * span:(s + 1) * span] = lvl
         return cls(n_shards, span // K.WORDS_PER_BUCKET,
                    state.view(np.uint64))
-
-    def _image(self):
-        return [self.num_buckets], [self.b64]
-
-    @staticmethod
-    def _sizes(n_shards: int, dims: list):
-        return [4 * n_shards * dims[0]] if len(dims) == 1 else None
-
-    @classmethod
-    def _from_parts(cls, n_shards: int, dims: list, parts: list):
-        return cls(n_shards, dims[0], parts[0])
 
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..kernels.keys import shard_of_keys
@@ -398,24 +341,6 @@ class _TbfForestMultiProbe(_Assembled):
             mats.append(m.view(np.uint64).reshape(-1, 4))
         return cls(n_shards, nbs, offsets, mats)
 
-    def _image(self):
-        return ([len(self.mats), *self.nbs, *(m.shape[0] for m in self.mats)],
-                [self.offsets, *self.mats])
-
-    @staticmethod
-    def _sizes(n_shards: int, dims: list):
-        n = dims[0] if dims else 0
-        if n < 1 or len(dims) != 1 + 2 * n:
-            return None
-        return [n * n_shards, *(4 * r for r in dims[1 + n:])]
-
-    @classmethod
-    def _from_parts(cls, n_shards: int, dims: list, parts: list):
-        n = dims[0]
-        return cls(n_shards, dims[1:1 + n],
-                   parts[0].view(np.int64).reshape(n, n_shards),
-                   [p.reshape(-1, 4) for p in parts[1:]])
-
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..kernels.keys import shard_of_keys
         n = len(keys)
@@ -466,16 +391,6 @@ def _tcf_sig(blob: bytes, magic: bytes, n_shards: int, spans) -> bytes | None:
             or (n_shards - 1).bit_length() + blob[4] + HEAD > 64:
         return None
     return b"".join(blob[s] for s in spans)
-
-
-def _tcf_sizes(n_shards: int, dims: list, stash_arrays: int):
-    """Array sizes of a TCF image with dims [log, ns0, ns1, entropy×8]:
-    present (S), two (S << log)-word sides, then the stash arrays."""
-    if len(dims) != 11 or not 1 <= dims[0] <= 48:
-        return None
-    span = n_shards << dims[0]
-    return [n_shards, span, span,
-            *[dims[1]] * stash_arrays, *[dims[2]] * stash_arrays]
 
 
 class _FrozenTcfForestProbe(_Assembled):
@@ -538,21 +453,6 @@ class _FrozenTcfForestProbe(_Assembled):
                    else np.zeros(0, dtype=np.uint64)
                    for x in stash_parts]
         return cls(n_shards, log, entropy, data, stashes, present)
-
-    def _image(self):
-        return ([self.log, self.stashes[0].size, self.stashes[1].size,
-                 *self.entropy],
-                [self.present.astype(np.uint64), *self.data,
-                 *self.stashes])
-
-    @staticmethod
-    def _sizes(n_shards: int, dims: list):
-        return _tcf_sizes(n_shards, dims, 1)
-
-    @classmethod
-    def _from_parts(cls, n_shards: int, dims: list, parts: list):
-        return cls(n_shards, dims[0], tuple(dims[3:]), parts[1:3],
-                   parts[3:5], parts[0].astype(bool))
 
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..filters.taffy_cuckoo import FP_MASK, HEAD, _has_value_10
@@ -652,28 +552,6 @@ class _LiveTcfForestProbe(_Assembled):
             codes.append(np.ascontiguousarray(arr[:, 0]))
             tails.append(arr[:, 1].astype(np.int64))
         return cls(n_shards, log, entropy, data, codes, tails, present)
-
-    def _image(self):
-        # a 4-slot u16 bucket row is exactly one u64 word
-        return ([self.log, self.stash_codes[0].size,
-                 self.stash_codes[1].size, *self.entropy],
-                [self.present.astype(np.uint64), *self.data,
-                 self.stash_codes[0], self.stash_tails[0],
-                 self.stash_codes[1], self.stash_tails[1]])
-
-    @staticmethod
-    def _sizes(n_shards: int, dims: list):
-        return _tcf_sizes(n_shards, dims, 2)
-
-    @classmethod
-    def _from_parts(cls, n_shards: int, dims: list, parts: list):
-        from ..filters.taffy_cuckoo import SLOTS
-        return cls(n_shards, dims[0], tuple(dims[3:]),
-                   [p.view(np.uint16).reshape(-1, SLOTS)
-                    for p in parts[1:3]],
-                   [parts[3], parts[5]],
-                   [parts[4].view(np.int64), parts[6].view(np.int64)],
-                   parts[0].astype(bool))
 
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         from ..filters.taffy_cuckoo import FP_MASK, HEAD, TAIL
@@ -794,141 +672,6 @@ def _content_token(filter_map: dict) -> str:
     return h.hexdigest()
 
 
-def _blob_bytes(blob) -> int:
-    """Total serialized bytes of one collected entry (bytes, a list of
-    slice blobs, or the (n_shards, {shard: blob}) forest tuple)."""
-    if isinstance(blob, (bytes, bytearray)):
-        return len(blob)
-    if isinstance(blob, tuple):
-        return sum(len(b) for b in blob[1].values())
-    return sum(len(x) for x in blob)
-
-
-def _asm_path(token: str, kind: str) -> str:
-    import hashlib
-    digest = hashlib.sha256((token + kind).encode()).hexdigest()[:24]
-    return f"/dev/shm/libfilter_asm_{digest}.u4"
-
-
-def _attach_assembled(asm_meta: dict):
-    """Attach the ASSEMBLED probe state some worker already published
-    to /dev/shm, read into private memory (see _SHM_ASM_MIN). Returns
-    the probe object, or None when there is no file or it does not
-    match the meta exactly (see _Assembled.from_raw)."""
-    path = _asm_path(asm_meta["token"], asm_meta["kind"])
-    try:
-        # u8 then view: a size that is not a whole number of words
-        # raises instead of being silently rounded down
-        raw = np.fromfile(path, dtype=np.uint8).view(np.uint64)
-    except (OSError, ValueError):
-        return None
-    try:
-        # refresh mtime so the TTL sweep in _publish_assembled never
-        # unlinks state a long-running app is still actively attaching
-        os.utime(path)
-    except OSError:
-        pass
-    return _ASSEMBLED[asm_meta["kind"]].from_raw(
-        int(asm_meta["n_shards"]), raw)
-
-
-def _takeover_stale_lock(lock: str, st: os.stat_result) -> bool:
-    """Remove a STALE publisher lock with compare-and-swap semantics:
-    atomically rename the lock aside (one winner per inode), confirm
-    by inode that what we grabbed IS the stale lock we observed, and
-    only then unlink it. Without the confirm, two waiters can both
-    observe staleness and the slower one unlinks the faster taker's
-    FRESH lock — two publishers then build concurrently (benign but
-    wasteful: identical content, atomic rename). Returns True when the
-    stale lock was removed."""
-    claim = f"{lock}.{os.getpid()}.takeover"
-    try:
-        os.rename(lock, claim)
-    except OSError:
-        return False  # someone else won the rename (or lock vanished)
-    try:
-        if os.stat(claim).st_ino == st.st_ino:
-            os.unlink(claim)
-            return True
-        # we raced a fresh lock into the claim slot — restore it
-        os.rename(claim, lock)
-    except OSError:
-        pass
-    return False
-
-
-def _publish_assembled(asm_meta: dict, build_fn):
-    """Single-assembler publish of the assembled probe state: the
-    first worker to take the lock runs ``build_fn() -> (probe_obj,
-    raw_array)``, publishes the raw array at the shared path (atomic
-    rename), and keeps its private object; the rest WAIT for the file
-    (bounded) instead of burning memory bandwidth on 32 duplicate
-    assemblies, then attach. Returns a probe object, or None when the
-    caller should assemble privately (shm unwritable/full, or the
-    publisher is too slow)."""
-    import glob
-    import time
-
-    path = _asm_path(asm_meta["token"], asm_meta["kind"])
-    lock = path + ".lock"
-    # best-effort TTL sweep so abandoned state and locks don't pin shm
-    for old in glob.glob("/dev/shm/libfilter_asm_*"):
-        try:
-            age = time.time() - os.path.getmtime(old)
-            if age > (600 if old.endswith(".lock") else 3600):
-                os.unlink(old)
-        except OSError:
-            pass
-    deadline = time.monotonic() + _ASM_WAIT_S
-    while True:
-        got = _attach_assembled(asm_meta)
-        if got is not None:
-            return got
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            # pid-stamp the lock so finally can unlink OUR lock only —
-            # a takeover must not have its fresh lock deleted by the
-            # original (slow) publisher's cleanup
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-        except FileExistsError:
-            # publisher in flight: wait for the file, stealing the
-            # lock only if its holder looks dead
-            try:
-                st = os.stat(lock)
-                if time.time() - st.st_mtime > _ASM_LOCK_STALE_S:
-                    _takeover_stale_lock(lock, st)
-                    continue
-            except OSError:
-                continue  # lock vanished → re-check file
-            if time.monotonic() > deadline:
-                return None
-            time.sleep(0.05)
-            continue
-        except OSError:
-            return None  # /dev/shm unwritable
-        tmp = f"{path}.{os.getpid()}.tmp"
-        try:
-            obj, raw = build_fn()
-            raw.tofile(tmp)
-            os.replace(tmp, path)
-            return obj
-        except OSError:
-            # shm full: drop the partial file, caller goes private
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            return None
-        finally:
-            try:
-                with open(lock) as fh:
-                    if fh.read() == str(os.getpid()):
-                        os.unlink(lock)
-            except OSError:
-                pass
-
-
 def _bounded_put(cache: dict, key, value, cap: int):
     """Insert under _CACHE_LOCK, evicting oldest-first past ``cap``.
     An entry a racing thread stored first wins and is returned."""
@@ -941,33 +684,11 @@ def _bounded_put(cache: dict, key, value, cap: int):
         return value
 
 
-def _asm_build_from_map(filter_map: dict):
-    """Publisher-side builder: the global map's assembled entry →
-    (probe object, raw image to publish)."""
-    obj = _assemble(*filter_map[()])
-    return obj, obj.to_raw()
-
-
-def _materialize(bc, asm_meta: dict | None = None) -> dict:
-    # shared-assembly fast path: the token rides in the UDF closure,
-    # so a fresh (churned) worker that finds the published state skips
-    # BOTH the broadcast unpickle (~map_bytes) and private assembly.
-    # On a COLD box the lock race also happens BEFORE the unpickle:
-    # the single lock-holder unpickles + assembles at full memory
-    # bandwidth while the other workers wait for the file and then
-    # copy it, instead of N concurrent unpickle+assembly streams
-    # (the measured 17 s cold 4M-key probe of a 110 MB forest).
-    if asm_meta is not None:
-        cached = _FILTER_CACHE.get(asm_meta["token"])
-        if cached is not None:
-            return cached
-        got = _publish_assembled(
-            asm_meta, lambda: _asm_build_from_map(bc.value[1]))
-        if got is not None:
-            return _bounded_put(_FILTER_CACHE, asm_meta["token"],
-                                {(): got}, _FILTER_CACHE_MAX)
-        # shm unavailable or publisher too slow → private assembly
-
+def _materialize(bc) -> dict:
+    """This worker's {group: probe object} for a broadcast filter map:
+    each python worker unpickles the broadcast and deserializes (or
+    assembles, for an _ASSEMBLED kind) privately, once per content
+    token — later batches and repeat probes of the same map reuse it."""
     token, filter_map = bc.value
     cached = _FILTER_CACHE.get(token)
     if cached is None:
@@ -1077,14 +798,14 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     return _broadcast_probe_udf(df, bc, group_cols, key_col, result_col)
 
 
-def _get_bc(spark, filter_map: dict, token: str | None = None):
+def _get_bc(spark, filter_map: dict):
     """Broadcast a collected filter map under a CONTENT-digest cache
     key, not a per-call uuid — repeated probes of the same filters
     frame then reuse BOTH the driver-side broadcast (no re-dump of a
     100 MB map per call) and the worker-side deserialized/assembled
     state (no workers × map_bytes of rebuild memcpy per call; measured
     as the dominant cost of re-probing a 110 MB assembled forest)."""
-    token = token or _content_token(filter_map)
+    token = _content_token(filter_map)
     sc = spark.sparkContext
     key = ("bc", sc.applicationId, token)
     bc = _MEMO.get(key)
@@ -1126,8 +847,8 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
 
     A CACHED frame pays a one-pass JVM fingerprint aggregation first;
     repeat probes of an unchanged frame then skip the blob collect AND
-    the broadcast dump, reusing the memoized (kind, broadcast, params,
-    shm meta) directly. Uncached frames keep the single-collect flow
+    the broadcast dump, reusing the memoized (kind, broadcast, params)
+    directly. Uncached frames keep the single-collect flow
     (a fingerprint pass would recompute their whole upstream build)."""
     if via == "shuffle":
         return _probe_shards_via_cogroup(df, filters_df, key_col,
@@ -1159,6 +880,9 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
     p = json.loads(rows[0]["params"])
     n_sh = int(p["n_shards"])
     shard_blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
+    if len(shard_blobs) != len(rows):
+        raise _duplicate_rows(["__shard"],
+                              [(int(r["__shard"]),) for r in rows])
     fams = {r["family"] for r in rows}
     kind = next((k for k, cls in _ASSEMBLED.items()
                  if fams == {cls.family} and cls.eligible(n_sh, shard_blobs)),
@@ -1170,74 +894,51 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
     else:
         payload = _ASSEMBLED[kind].payload(n_sh, shard_blobs)
         collected = {(): (kind, payload)}
-    token = _content_token(collected)
-    asm_meta = None
-    # big assembled state → share it across workers via /dev/shm
-    # (single assembler + attach; see _publish_assembled)
-    if kind is not None and os.path.isdir("/dev/shm") \
-            and _blob_bytes(payload) >= _SHM_ASM_MIN:
-        asm_meta = {"token": token, "kind": kind,
-                    "n_shards": _split(payload)[0]}
-    bc = _get_bc(df.sparkSession, collected, token)
+    bc = _get_bc(df.sparkSession, collected)
     if memo_key is not None:
-        _bounded_put(_MEMO, memo_key, (kind, bc, p, asm_meta), _MEMO_MAX)
-    return _probe_from_bc(df, kind, bc, p, asm_meta, key_col, result_col)
+        _bounded_put(_MEMO, memo_key, (kind, bc, p), _MEMO_MAX)
+    return _probe_from_bc(df, kind, bc, p, key_col, result_col)
 
 
 def _probe_from_bc(df: DataFrame, kind: str | None, bc, p: dict,
-                   asm_meta: dict | None, key_col: str,
-                   result_col: str) -> DataFrame:
+                   key_col: str, result_col: str) -> DataFrame:
     if kind is not None:
-        return _broadcast_probe_udf(df, bc, [], key_col, result_col,
-                                    asm_meta)
+        return _broadcast_probe_udf(df, bc, [], key_col, result_col)
     probe = _with_route_shard(df, key_col, p)
     return _broadcast_probe_udf(probe, bc, ["__shard"], key_col,
                                 result_col).drop("__shard")
 
 
 def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
-                         key_col: str, result_col: str,
-                         asm_meta: dict | None = None) -> DataFrame:
+                         key_col: str, result_col: str) -> DataFrame:
     """Attach the vectorized membership column from a broadcast filter
-    map (grouped: per-batch numpy segmentation by group; global: one
-    kernel call per batch)."""
+    map (grouped: per-batch ``group_segments`` segmentation, one find
+    call per group; global: one kernel call per batch)."""
     import pyarrow as pa
     from pyspark.sql.functions import ArrowUDFType, arrow_udf
 
     from ..kernels.keys import keys_and_valid_from_arrow
+    from .build import group_segments
 
     if group_cols:
         def probe(*cols):
             filters = _materialize(bc)
             keys, valid = keys_and_valid_from_arrow(cols[-1])
             out = np.zeros(len(keys), dtype=bool)
-            if len(keys) and len(cols) == 2 \
-                    and pa.types.is_integer(cols[0].type) \
-                    and cols[0].null_count == 0:
-                # single non-null int group col (the forest/shard
-                # shape): numpy argsort segmentation instead of a
-                # pandas groupby — no frame build, no per-group index
-                # objects, one contiguous find call per present group
-                g = np.asarray(cols[0].to_numpy(zero_copy_only=False))
-                order = np.argsort(g, kind="stable")
-                gs = g[order]
-                bounds = np.flatnonzero(
-                    np.r_[True, gs[1:] != gs[:-1]]).tolist()
-                bounds.append(len(gs))
-                for b, e in zip(bounds, bounds[1:]):
-                    f = filters.get((int(gs[b]),))
+            gcols = cols[:-1]
+            if len(keys):
+                order, bounds = group_segments(
+                    [c.to_pandas(types_mapper=pd.ArrowDtype)
+                     for c in gcols], len(keys))
+                heads = order[np.r_[0, bounds].astype(np.int64)]
+                groups = zip(*(c.take(heads).to_pylist() for c in gcols))
+                for g, idx in zip(groups, np.split(order, bounds)):
+                    # a null group value never equals a filter's group
+                    # (SQL semantics), even though the build keeps a
+                    # null group's filter
+                    f = None if None in g else filters.get(g)
                     if f is not None:
-                        idx = order[b:e]
                         out[idx] = f.find_hashes(keys[idx])
-                return pa.array(out & valid)
-            gdf = pd.DataFrame(
-                {i: c.to_pandas() for i, c in enumerate(cols[:-1])})
-            for g, sub in gdf.groupby(list(gdf.columns), sort=False):
-                g = g if isinstance(g, tuple) else (g,)
-                f = filters.get(g)
-                if f is not None:
-                    idx = sub.index.to_numpy()
-                    out[idx] = f.find_hashes(keys[idx])
             return pa.array(out & valid)  # null keys are never members
 
         # nondeterministic ONLY to stop Catalyst's constraint propagation
@@ -1252,7 +953,7 @@ def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
         return df.withColumn(result_col, udf(*args))
 
     def probe_global(keys):
-        f = _materialize(bc, asm_meta).get(())
+        f = _materialize(bc).get(())
         if f is None:
             return pa.array(np.zeros(len(keys), dtype=bool))
         k, valid = keys_and_valid_from_arrow(keys)
@@ -1312,6 +1013,10 @@ def _probe_via_cogroup(df: DataFrame, filters_df: DataFrame,
         + [StructField(result_col, BooleanType())])
 
     def probe_group(left: "pa.Table", right: "pa.Table") -> "pa.Table":
+        if right.num_rows > 1:
+            raise _duplicate_rows(group_cols, [tuple(
+                right.column(c)[0].as_py() for c in group_cols)]
+                * right.num_rows)
         if left.num_rows == 0:
             res = np.zeros(0, dtype=bool)
         else:

@@ -153,9 +153,8 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
 
 def test_assembled_tbf_multilevel_probe_unit():
     """The multi-level assembled TBF forest probe (round-6): bit
-    parity with per-shard find_hashes on RAGGED level counts, raw
-    round-trip for the shm publisher, truncated/foreign rejection,
-    and missing-shard False parity."""
+    parity with per-shard find_hashes on RAGGED level counts and
+    missing-shard False parity."""
     import numpy as np
 
     import libfilter_spark.spark.probe as P
@@ -187,11 +186,6 @@ def test_assembled_tbf_multilevel_probe_unit():
         m = msh == s
         expect[m] = filters[s].find_hashes(mixed[m])
     assert (pv.find(mixed, binary=False) == expect).all()
-    raw = pv.to_raw()
-    pv2 = P._TbfForestMultiProbe.from_raw(S, raw)
-    assert (pv2.find(mixed, binary=False) == expect).all()
-    assert P._TbfForestMultiProbe.from_raw(S, raw[:-5]) is None
-    assert P._TbfForestMultiProbe.from_raw(S + 1, raw) is None
     del blobs[5]  # missing shard ⇒ its keys report False
     pv3 = P._TbfForestMultiProbe.assemble(S, blobs)
     exp3 = expect.copy()
@@ -296,9 +290,7 @@ def test_assembled_frozen_tcf_probe_unit():
     zero FN on present keys, bit-identical FP pattern on absent keys,
     stash entries findable through the shard-prefixed side table, and
     keys routed to a MISSING shard reported False (the fp==0
-    always-true quirk must not leak through empty matrix rows). Also
-    pins the to_raw/from_raw publisher image roundtrip and its
-    truncation rejection."""
+    always-true quirk must not leak through empty matrix rows)."""
     import numpy as np
 
     import libfilter_spark.spark.probe as P
@@ -332,16 +324,6 @@ def test_assembled_frozen_tcf_probe_unit():
         sel = a_sh == s
         expect[sel] = fr.find_hashes(absent[sel])
     assert np.array_equal(pv.find(absent, binary=False), expect)
-    # publisher image roundtrip
-    raw = pv.to_raw()
-    pv2 = P._FrozenTcfForestProbe.from_raw(n_sh, raw)
-    assert pv2 is not None
-    assert np.array_equal(pv2.find(absent, binary=False), expect)
-    assert pv2.find(keys, binary=False)[present_mask].all()
-    # truncated image rejected
-    assert P._FrozenTcfForestProbe.from_raw(n_sh, raw[:-3]) is None
-    assert P._FrozenTcfForestProbe.from_raw(
-        n_sh, np.zeros(5, dtype=np.uint64)) is None
     # non-uniform shards (different log_side_size) not eligible
     big = TaffyCuckooFilter.create(50 * n)
     big.add_hashes(keys[:100])
@@ -440,9 +422,8 @@ def test_assembled_live_tcf_probe_unit():
     EXACTLY like per-shard TaffyCuckooFilter finds: zero FN on present
     keys, bit-identical FP pattern on absent keys, stash entries
     findable through the shard-prefixed code table, and keys routed to
-    a MISSING shard reported False. Also pins the to_raw/from_raw
-    publisher image roundtrip, its truncation rejection, and the
-    non-uniform (upsized-shard) refusal."""
+    a MISSING shard reported False. Also pins the non-uniform
+    (upsized-shard) refusal."""
     import numpy as np
 
     import libfilter_spark.spark.probe as P
@@ -488,18 +469,6 @@ def test_assembled_live_tcf_probe_unit():
         sel = a_sh == s
         expect[sel] = f.find_hashes(absent[sel])
     assert np.array_equal(pv.find(absent, binary=False), expect)
-    # publisher image roundtrip (stash tables included)
-    raw = pv.to_raw()
-    pv2 = P._LiveTcfForestProbe.from_raw(n_sh, raw)
-    assert pv2 is not None
-    assert np.array_equal(pv2.find(absent, binary=False), expect)
-    assert pv2.find(keys, binary=False)[present_mask].all()
-    assert pv2.find(np.array(stash_probe_keys, dtype=np.uint64),
-                    binary=False).all()
-    # truncated image rejected
-    assert P._LiveTcfForestProbe.from_raw(n_sh, raw[:-3]) is None
-    assert P._LiveTcfForestProbe.from_raw(
-        n_sh, np.zeros(5, dtype=np.uint64)) is None
     # non-uniform shards (different log_side_size) not eligible
     big = TaffyCuckooFilter.create(50 * n)
     big.add_hashes(keys[:100])

@@ -307,141 +307,16 @@ def test_filter_via_shm_zero_copy_equivalent():
         P._FILTER_CACHE.clear()
 
 
-def test_shared_assembled_state_equivalent():
-    """The /dev/shm shared-assembly path (what workers run past
-    _SHM_ASM_MIN on a global shard probe) must agree with private
-    assembly for both assembled kinds — the single-level TBF forest
-    matrix and the block-slice global filter — across all three
-    worker roles: publisher (lock holder), attacher (file already
-    present, no broadcast unpickle), and private fallback (publisher
-    too slow). No Spark: _materialize's worker branch is exercised
-    directly."""
-    import os
-    import uuid
-
-    import numpy as np
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import libfilter_spark.spark.probe as P
-    from libfilter_spark.filters.block import BlockSliceFilter
-    from libfilter_spark.filters.taffy_block import TaffyBlockFilter
-    from libfilter_spark.kernels import block as K
-    from libfilter_spark.kernels.keys import shard_of_keys, splitmix64
-
-    keys = splitmix64(40_000, seed=7)
-    absent = splitmix64(80_000, seed=7)[40_000:]
-    n_sh = 4
-
-    class FakeBC:
-        def __init__(self, token, fmap):
-            self.value = (token, fmap)
-
-    made = []
-    try:
-        # --- single-level TBF forest kind ---
-        shards = shard_of_keys(keys, n_sh, binary=False)
-        blobs = {}
-        for s in range(n_sh):
-            f = TaffyBlockFilter.create(12_000, 0.004)
-            f.add_hashes(keys[shards == s])
-            assert len(f.levels) == 1
-            blobs[s] = f.serialize()
-        token = uuid.uuid4().hex
-        meta = {"token": token, "kind": "tbf_level0_set",
-                "n_shards": n_sh}
-        made.append(P._asm_path(token, "tbf_level0_set"))
-        fmap = {(): ("tbf_level0_set", (n_sh, blobs))}
-        priv = P._TbfForestProbe.assemble(n_sh, blobs)
-
-        # role 1: publisher — no file yet, takes the lock, publishes
-        P._FILTER_CACHE.clear()
-        pub = P._materialize(FakeBC(token, fmap), meta)[()]
-        assert os.path.exists(made[-1])
-        # role 2: attacher — fresh worker, file present; broadcast
-        # value must NOT be touched
-        P._FILTER_CACHE.clear()
-
-        class Poisoned:
-            @property
-            def value(self):
-                raise AssertionError("attacher touched bc.value")
-        att = P._materialize(Poisoned(), meta)[()]
-        for obj in (pub, att):
-            assert obj.find(keys, binary=False).all()
-            assert np.array_equal(obj.find(absent, binary=False),
-                                  priv.find(absent, binary=False))
-
-        # role 3: private fallback — lock held by a live "worker",
-        # deadline elapsed
-        lock = made[-1] + ".lock"
-        os.unlink(made[-1])
-        with open(lock, "w"):
-            pass
-        made.append(lock)
-        old_wait = P._ASM_WAIT_S
-        P._ASM_WAIT_S = 0.0
-        try:
-            P._FILTER_CACHE.clear()
-            fb = P._materialize(FakeBC(token, fmap), meta)[()]
-        finally:
-            P._ASM_WAIT_S = old_wait
-        assert not os.path.exists(made[-2])  # nobody published
-        assert fb.find(keys, binary=False).all()
-
-        # --- block-slice kind ---
-        from libfilter_spark.filters import BlockFilter
-        full = BlockFilter.create_with_ndv_fpp(40_000, 0.004)
-        full.add_hashes(keys)
-        st = full.state
-        w = K.WORDS_PER_BUCKET
-        nb = st.size // w
-        bounds = [0, nb // 3, 2 * nb // 3, nb]
-        slices = [BlockSliceFilter(nb, lo,
-                                   st[lo * w:hi * w]).serialize()
-                  for lo, hi in zip(bounds, bounds[1:])]
-        token2 = uuid.uuid4().hex
-        meta2 = {"token": token2, "kind": "block_slice_set",
-                 "n_shards": len(slices)}
-        made.append(P._asm_path(token2, "block_slice_set"))
-        fmap2 = {(): ("block_slice_set", slices)}
-        P._FILTER_CACHE.clear()
-        pub2 = P._materialize(FakeBC(token2, fmap2), meta2)[()]
-        assert os.path.exists(made[-1])
-        P._FILTER_CACHE.clear()
-        att2 = P._materialize(Poisoned(), meta2)[()]
-        for obj in (pub2, att2):
-            assert obj.find_hashes(keys).all()
-            assert np.array_equal(obj.find_hashes(absent),
-                                  full.find_hashes(absent))
-    finally:
-        P._FILTER_CACHE.clear()
-        for pth in made:
-            try:
-                os.unlink(pth)
-            except OSError:
-                pass
-
-
-def test_shared_assembly_spark_end_to_end(spark, monkeypatch):
-    """With the share threshold lowered, a global shard-frame probe
-    must publish the assembled state to /dev/shm and answer exactly
-    as before — for both the sharded block build and the jvm TBF
-    forest. Exercises the real worker path (publisher + attachers
-    racing) under Spark."""
+def test_shared_assembly_spark_end_to_end(spark):
+    """A global shard-frame probe assembles its probe state in each
+    python worker and answers exactly, first and repeat probe alike —
+    for both the sharded block build and the TBF forest — and leaves
+    no /dev/shm file behind (nothing is shared across processes)."""
     import glob
-    import os
 
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import libfilter_spark.spark.probe as P
     from libfilter_spark.spark.forest import build_filter_forest
     from libfilter_spark.spark.sharded import build_block_shards
 
-    monkeypatch.setattr(P, "_SHM_ASM_MIN", 1)
     n = 6_000
     base = spark.range(n).select(
         F.col("id").cast("string").alias("content"))
@@ -451,80 +326,28 @@ def test_shared_assembly_spark_end_to_end(spark, monkeypatch):
     probe_keys = with_content_key_bin(probe, "content") \
         .select("key", "content")
 
-    before = set(glob.glob("/dev/shm/libfilter_asm_*.u4"))
-    try:
-        for frame in (
-                build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4),
-                build_filter_forest(keys, "key", "taffy_block", ndv=n,
-                                    fpp=0.01, n_shards=4)):
-            got = {r["content"]: r["maybe_seen"]
-                   for r in probe_with_filters(probe_keys, frame,
-                                               None).collect()}
-            assert all(got[str(i)] for i in range(n))  # zero FN
-            # repeat probe (warm caches + existing shm file)
-            again = {r["content"]: r["maybe_seen"]
-                     for r in probe_with_filters(probe_keys, frame,
-                                                 None).collect()}
-            assert again == got
-        created = set(glob.glob("/dev/shm/libfilter_asm_*.u4")) - before
-        assert len(created) == 2  # one per assembled kind
-    finally:
-        for pth in set(glob.glob("/dev/shm/libfilter_asm_*")) - before:
-            try:
-                os.unlink(pth)
-            except OSError:
-                pass
-
-
-def test_shared_assembly_stale_lock_takeover():
-    """A lock whose holder died mid-assembly must not wedge the
-    shared-assembly path: a worker that finds a stale lock (mtime
-    older than _ASM_LOCK_STALE_S) steals it and publishes."""
-    import os
-    import time
-    import uuid
-
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import numpy as np
-
-    import libfilter_spark.spark.probe as P
-
-    token = uuid.uuid4().hex
-    meta = {"token": token, "kind": "block_slice_set", "n_shards": 1}
-    path = P._asm_path(token, "block_slice_set")
-    lock = path + ".lock"
-    try:
-        with open(lock, "w"):
-            pass
-        stale = time.time() - P._ASM_LOCK_STALE_S - 5
-        os.utime(lock, (stale, stale))
-        calls = []
-
-        def build():
-            calls.append(1)
-            from libfilter_spark.filters.block import BlockFilter
-            raw = np.zeros(1024, dtype=np.uint8)
-            return BlockFilter(raw.view(np.uint32)), raw
-
-        got = P._publish_assembled(meta, build)
-        assert got is not None and calls == [1]
-        assert os.path.exists(path) and not os.path.exists(lock)
-    finally:
-        for pth in (path, lock):
-            try:
-                os.unlink(pth)
-            except OSError:
-                pass
+    before = set(glob.glob("/dev/shm/libfilter_asm_*"))
+    for frame in (
+            build_block_shards(keys, ndv=n, fpp=0.01, n_shards=4),
+            build_filter_forest(keys, "key", "taffy_block", ndv=n,
+                                fpp=0.01, n_shards=4)):
+        got = {r["content"]: r["maybe_seen"]
+               for r in probe_with_filters(probe_keys, frame,
+                                           None).collect()}
+        assert all(got[str(i)] for i in range(n))  # zero FN
+        # repeat probe (warm per-worker caches)
+        again = {r["content"]: r["maybe_seen"]
+                 for r in probe_with_filters(probe_keys, frame,
+                                             None).collect()}
+        assert again == got
+    assert set(glob.glob("/dev/shm/libfilter_asm_*")) == before
 
 
 def test_grouped_probe_int_group_with_nulls(spark):
-    """The argsort fast path only takes non-null integer group
-    columns; a null group value must route through the pandas
-    fallback and report its rows as non-members (not crash, not
-    match). Pins the null_count guard in _broadcast_probe_udf."""
+    """A null value in an integer group column gets its own segment
+    in the grouped broadcast probe's segmentation (group_segments keeps
+    nulls as a key); its rows must report as non-members (not crash,
+    not match). Pins the null-group skip in _broadcast_probe_udf."""
     build = spark.range(1_000).select(
         (F.col("id") % 4).alias("g"),
         F.col("id").cast("string").alias("content"))
@@ -584,140 +407,6 @@ def test_small_session_precheck_keeps_blobs_off_driver(spark,
     assert any("estimated shard blobs" in str(x.message) for x in w)
     assert got == expect
     assert all(got[str(i)] for i in range(3_000))
-
-
-def test_truncated_published_state_falls_back():
-    """A truncated or foreign file at the published asm path (e.g. a
-    crashed publisher plus an unlucky rename) must be REJECTED by the
-    attacher for every assembled kind — a file short by whole buckets
-    (which a size-derived bucket count would silently accept, probing
-    the wrong rows) and a file published for another n_shards; the
-    worker then republishes correct state over it and answers
-    exactly."""
-    import os
-    import uuid
-
-    import numpy as np
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import libfilter_spark.spark.probe as P
-    from libfilter_spark.filters import (BlockFilter, TaffyBlockFilter,
-                                         TaffyCuckooFilter)
-    from libfilter_spark.filters.block import BlockSliceFilter
-    from libfilter_spark.kernels import block as K
-    from libfilter_spark.kernels.keys import shard_of_keys, splitmix64
-
-    keys = splitmix64(20_000, seed=11)
-    absent = splitmix64(40_000, seed=11)[20_000:]
-    n_sh = 4
-    shards = shard_of_keys(keys, n_sh, binary=False)
-
-    def forest(make, freeze=False):
-        blobs = {}
-        for s in range(n_sh):
-            f = make()
-            f.add_hashes(keys[shards == s])
-            blobs[s] = (f.freeze() if freeze else f).serialize()
-        return n_sh, blobs
-
-    full = BlockFilter.create_with_ndv_fpp(20_000, 0.004)
-    full.add_hashes(keys)
-    w = K.WORDS_PER_BUCKET
-    nb = full.state.size // w
-    bounds = [0, nb // 2, nb]
-    payloads = {
-        "block_slice_set": [
-            BlockSliceFilter(nb, lo, full.state[lo * w:hi * w]).serialize()
-            for lo, hi in zip(bounds, bounds[1:])],
-        "tbf_level0_set": forest(
-            lambda: TaffyBlockFilter.create(8_000, 0.004)),
-        "tbf_forest_set": forest(lambda: TaffyBlockFilter.create(64, 0.01)),
-        "frozen_tcf_set": forest(lambda: TaffyCuckooFilter.create(8_000),
-                                 freeze=True),
-        "tcf_set": forest(lambda: TaffyCuckooFilter.create(8_000)),
-    }
-    assert set(payloads) == set(P._ASSEMBLED)  # every kind covered
-
-    class FakeBC:
-        def __init__(self, token, fmap):
-            self.value = (token, fmap)
-
-    made = []
-    try:
-        for kind, payload in payloads.items():
-            ref = P._assemble(kind, payload)
-            assert ref.find(keys, binary=False).all(), kind
-            expect = ref.find(absent, binary=False)
-            token = uuid.uuid4().hex
-            meta = {"token": token, "kind": kind,
-                    "n_shards": ref.n_shards}
-            bc = FakeBC(token, {(): (kind, payload)})
-            path = P._asm_path(token, kind)
-            made.append(path)
-            good = ref.to_raw()
-            for bad, bad_meta in (
-                    (good[:-4 * n_sh], meta),  # short by whole buckets
-                    (good, {**meta, "n_shards": ref.n_shards + 1})):
-                bad.tofile(path)
-                assert P._attach_assembled(bad_meta) is None, kind
-                P._FILTER_CACHE.clear()
-                got = P._materialize(bc, meta)[()]
-                assert got.find(keys, binary=False).all(), kind
-                assert np.array_equal(got.find(absent, binary=False),
-                                      expect), kind
-                # republished correct: a fresh worker attaches it
-                assert os.path.getsize(path) == good.nbytes, kind
-                att = P._attach_assembled(meta)
-                assert np.array_equal(att.find(absent, binary=False),
-                                      expect), kind
-    finally:
-        P._FILTER_CACHE.clear()
-        for pth in made:
-            for x in (pth, pth + ".lock"):
-                try:
-                    os.unlink(x)
-                except OSError:
-                    pass
-
-
-def test_stale_lock_takeover_is_compare_and_swap():
-    """Round-5 verdict: two waiters can both observe a stale lock; the
-    slower one must NOT unlink the faster taker's FRESH lock. The
-    takeover confirms by inode before unlinking (rename-aside CAS) and
-    restores a fresh lock it grabbed by accident."""
-    import os
-
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import libfilter_spark.spark.probe as P
-
-    lock = f"/dev/shm/libfilter_asm_testcas_{os.getpid()}.lock"
-    try:
-        with open(lock, "w") as fh:
-            fh.write("stale-holder")
-        st = os.stat(lock)
-        # another waiter already took over: stale unlinked, FRESH lock
-        # created at the same path (new inode)
-        os.unlink(lock)
-        with open(lock, "w") as fh:
-            fh.write("fresh-holder")
-        assert P._takeover_stale_lock(lock, st) is False
-        assert os.path.exists(lock)  # fresh lock survived
-        with open(lock) as fh:
-            assert fh.read() == "fresh-holder"
-        # the genuine stale case (inode unchanged) removes the lock
-        st2 = os.stat(lock)
-        assert P._takeover_stale_lock(lock, st2) is True
-        assert not os.path.exists(lock)
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
 
 
 def test_grouped_jvm_many_group_cols_no_overflow(spark):
@@ -845,60 +534,38 @@ def test_grouped_partials_build_keeps_null_group(spark):
     assert n_true == 4_000  # zero FN on non-null groups; null rows False
 
 
-def test_truncated_live_tcf_published_state_falls_back():
-    """The tcf_set assembled kind: a truncated/garbage published file
-    must be rejected by the attacher (from_raw exact-size check), the
-    worker republishes correct state, and a clean published image
-    attaches with answers identical to private assembly."""
-    import os
-    import uuid
+@pytest.mark.parametrize("via", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("frame", ["grouped", "shards"])
+def test_duplicate_filter_rows_raise(spark, frame, via):
+    """Two unioned builds give one group (or shard) two filter rows.
+    The broadcast route's filter map used to keep only the last row
+    and miss the other build's keys (about half of them), while the
+    shuffle route ORed both rows, so the answer depended on the route
+    (and on frame size under via='auto'). Both routes now reject the
+    frame with a ValueError that names the group or shard."""
+    from libfilter_spark.spark.sharded import build_block_shards
 
-    import numpy as np
-    import pytest as _pytest
+    def half(lo, hi):
+        base = spark.range(lo, hi).select(
+            F.lit("a").alias("g"),
+            F.col("id").cast("string").alias("content"))
+        return with_content_key_bin(base, "content") \
+            .select("g", "key", "content")
 
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    import libfilter_spark.spark.probe as P
-    from libfilter_spark.filters import TaffyCuckooFilter
-    from libfilter_spark.kernels.keys import shard_of_keys, splitmix64
-
-    keys = splitmix64(20_000, seed=13)
-    absent = splitmix64(40_000, seed=13)[20_000:]
-
-    class FakeBC:
-        def __init__(self, token, fmap):
-            self.value = (token, fmap)
-
-    n_sh = 4
-    shards = shard_of_keys(keys, n_sh, binary=False)
-    blobs = {}
-    for s in range(n_sh):
-        f = TaffyCuckooFilter.create(8_000)
-        f.add_hashes(keys[shards == s])
-        blobs[s] = f.serialize()
-    ref = P._LiveTcfForestProbe.assemble(n_sh, blobs)
-    token = uuid.uuid4().hex
-    meta = {"token": token, "kind": "tcf_set", "n_shards": n_sh}
-    path = P._asm_path(token, "tcf_set")
-    try:
-        np.zeros(9, dtype=np.uint8).tofile(path)  # truncated garbage
-        assert P._attach_assembled(meta) is None
-        P._FILTER_CACHE.clear()
-        got = P._materialize(
-            FakeBC(token, {(): ("tcf_set", (n_sh, blobs))}), meta)[()]
-        assert got.find(keys, binary=False).all()
-        assert np.array_equal(got.find(absent, binary=False),
-                              ref.find(absent, binary=False))
-        # republished correct image now attaches (fresh worker path)
-        P._FILTER_CACHE.clear()
-        att = P._attach_assembled(meta)
-        assert att is not None
-        assert np.array_equal(att.find(absent, binary=False),
-                              ref.find(absent, binary=False))
-    finally:
-        P._FILTER_CACHE.clear()
-        for pth in (path, path + ".lock"):
-            try:
-                os.unlink(pth)
-            except OSError:
-                pass
+    halves = [half(0, 5_000), half(5_000, 10_000)]
+    if frame == "grouped":
+        parts = [build_filters(h.select("g", "key"), ["g"], ndv=5_000,
+                               fpp=0.01) for h in halves]
+        group_cols, named = ["g"], "g='a'"
+    else:
+        parts = [build_block_shards(h.select("key"), ndv=5_000, fpp=0.01,
+                                    n_shards=2) for h in halves]
+        group_cols, named = None, "__shard="
+    filters = parts[0].unionByName(parts[1])
+    probe = halves[0].unionByName(halves[1])
+    with pytest.raises(Exception) as err:
+        probe_with_filters(probe, filters, group_cols, via=via) \
+            .where("maybe_seen").count()
+    msg = f"{type(err.value).__name__}: {err.value}"
+    assert "ValueError" in msg
+    assert f"more than one row for {named}" in msg

@@ -87,7 +87,7 @@ def test_merge_requires_same_schedule():
 
 
 def test_deserialize_view_probe_equivalent():
-    """Zero-copy view deserialization (shm probe path): identical
+    """Zero-copy view deserialization (assembled-probe path): identical
     probe results to the copying deserialize on a GROWN multi-level
     stack, without mutating the underlying buffer."""
     import numpy as np
