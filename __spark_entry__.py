@@ -1015,9 +1015,14 @@ def q_source_code_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest = src.where(F.col("repo") != "org0/repo0")
     filters = build_filters(mega, ["lang"], ndv=1 << 12, fpp=0.01)
     dup_in_mega = filter_semi_join(rest, mega, filters, ["lang"])
-    return (dup_in_mega.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_dup_files"),
-                 F.countDistinct("key").alias("n_dup_contents")))
+    per_lang = (dup_in_mega.groupBy("lang")
+                .agg(F.count(F.lit(1)).alias("n_dup_files"),
+                     F.countDistinct("key").alias("n_dup_contents")))
+    # collect the few per-lang rows so the cache can be released
+    # before returning (a lazy result would pin it for the caller)
+    rows = per_lang.collect()
+    src.unpersist()
+    return spark.createDataFrame(rows, per_lang.schema)
 
 
 @_register("multimodal_feature_audit")

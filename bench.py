@@ -388,7 +388,7 @@ def main() -> None:
         from libfilter_spark.filters.taffy_block import TaffyBlockFilter
         from libfilter_spark.kernels.keys import (shard_of_keys,
                                                   splitmix64)
-        from libfilter_spark.spark.probe import _TbfForestMultiProbe
+        from libfilter_spark.spark.probe import _TbfForestProbe
         n = 2_000_000
         n_sh = 2 * cpus_i
         present = splitmix64(n, seed=23)
@@ -398,7 +398,7 @@ def main() -> None:
             f = TaffyBlockFilter.create(64, 0.004)  # grown from tiny
             f.add_hashes(present[shv == s])
             per[s], blobs[s] = f, f.serialize()
-        pv = _TbfForestMultiProbe.assemble(n_sh, blobs)
+        pv = _TbfForestProbe.assemble(n_sh, blobs)
         assert pv is not None and len(per[0].levels) > 1
         mixed = _np.concatenate([present[:n // 2],
                                  splitmix64(n // 2, seed=29)])

@@ -2,10 +2,10 @@
 over DataFrames using Spark's partial+final aggregate shape.
 
 Design (SURVEY.md §3.4): scan → JVM-side sha2 key derivation →
-map-side partial filter per (task, group) via ``mapInPandas`` (NO row
-shuffle — only KB-sized filter blobs are shuffled) → ``applyInPandas``
-final merge per group → checkpoint → broadcast → vectorized probe →
-semi-join."""
+map-side partial filter per (task, group) via ``mapInArrow`` (NO row
+shuffle — only KB-sized filter blobs are shuffled) → one
+Arrow-segmented ``mapInArrow`` merge pass per partition of groups →
+checkpoint → broadcast → Arrow scalar UDF probe → semi-join."""
 
 from .session import get_spark
 from .keys import with_content_key, KEY_COL, KEY_HEX_COL

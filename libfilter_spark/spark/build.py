@@ -1,6 +1,6 @@
 """Distributed filter build — Spark's partial+final aggregate shape.
 
-Stage 1 (map-side combine, ``mapInPandas``): every task folds its
+Stage 1 (map-side combine, ``mapInArrow``): every task folds its
 input batches into one partial filter per group it sees. No row
 shuffle happens — a task emits one (group, blob) row per group, so
 the only shuffled payload is KB-sized filter state. This is the
@@ -17,7 +17,7 @@ algorithm of ``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters).
 Families must be *mergeable* for this path. The static XOR filter
 (one-shot bulk build, no union — ``c/lib/static.c:12-82``) uses the
 grouped path: a real shuffle of (group, key) pairs, one bulk build
-per group via ``applyInPandas``.
+per group via ``applyInArrow``.
 """
 
 from __future__ import annotations

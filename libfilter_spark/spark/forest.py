@@ -75,9 +75,10 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     Each shard is created once, at stream end, sized for its share:
     ``ndv // n_shards`` keys, and for ``taffy_block`` a level 0 of
     1.25 × that share + 64, so xxhash load jitter seldom grows a
-    second level and every shard keeps one level-0 size (the
-    assembled ``_TbfForestProbe`` needs both). A shard past the margin
-    grows a level like any taffy_block.
+    second level: the assembled ``_TbfForestProbe`` then probes the
+    whole forest with one gather per key. A shard past the margin
+    grows a level like any taffy_block, and its keys that miss the
+    newer level pay a second gather.
 
     ``engine`` accepts ``"auto"`` and ``"arrow"`` only, both this
     streamed build. A JVM ``bit_or``-aggregation taffy_block build

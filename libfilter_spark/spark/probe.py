@@ -1,7 +1,7 @@
 """Distributed membership probe — the Bloom-join pattern.
 
 The merged filters (KBs–MBs per group) are broadcast to every task;
-``mapInPandas`` adds a vectorized membership column (the batched
+a vectorized Arrow scalar UDF adds the membership column (the batched
 analogue of ``libfilter_block_find_hash``, ``block.h:140-152``). A
 probe row only *may* be present (false positives); the semi-join
 helper follows the probe with an exact join against the (pre-pruned)
@@ -26,10 +26,11 @@ from ..filters import FAMILIES
 from ..filters.block import BlockFilter, BlockSliceFilter
 from ..kernels import block as K
 
-# one lock guards every insert into the two caches below: driver-side
-# queries fan out over ThreadPoolExecutor (fpp conformance, merge
-# audits), so two threads can otherwise race the same pop(next(iter(d)))
-# eviction (KeyError) or double-broadcast one content token
+# one lock guards every insert into the two caches below: the
+# thread-pooled __spark_entry__ queries probe from several driver
+# threads at once (fpp_curve_conformance runs five build+probe legs),
+# which could otherwise race the same pop(next(iter(d))) eviction
+# (KeyError) or double-broadcast one content token
 _CACHE_LOCK = threading.Lock()
 
 # executor-local cache: broadcast token → {group: filter object}.
@@ -55,13 +56,6 @@ _MEMO_MAX = 24  # a cached-frame probe records two entries
 # (10^5 groups x MB blobs), and the probe switches to a shuffle
 # cogroup — filters stay distributed, probe keys shuffle to them.
 _BROADCAST_MAX = int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
-
-
-def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
-    """Small filters DataFrame → {group_tuple: (family, blob)}."""
-    return _filter_map(
-        filters_df.select(*group_cols, "family", "filter").collect(),
-        group_cols)
 
 
 def _filter_map(rows: list, group_cols: list[str]) -> dict:
@@ -189,11 +183,6 @@ class _Assembled:
             return None
         return cls._build(n_shards, blobs)
 
-    @staticmethod
-    def payload(n_shards: int, blobs: dict):
-        """What the broadcast carries for this kind (see _split)."""
-        return n_shards, blobs
-
 
 class _BlockSliceProbe(_Assembled, BlockFilter):
     """A ``bucket_range`` shard frame's disjoint slices written into
@@ -221,71 +210,16 @@ class _BlockSliceProbe(_Assembled, BlockFilter):
             state[sl.lo * w:sl.lo * w + sl.state.size] = sl.state
         return cls(n_shards, state)
 
-    @staticmethod
-    def payload(n_shards: int, blobs: dict):
-        # a bare blob list: every slice carries its own bucket range
-        return list(blobs.values())
-
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         return self.find_hashes(keys)
 
 
 class _TbfForestProbe(_Assembled):
-    """Assembled probe view of a SINGLE-LEVEL taffy_block forest (the
+    """Assembled probe view of a taffy_block forest, single-level (the
     default build's shape: shards pre-sized with a margin that never
-    upsized). All
-    shards share one level-0 bucket count, so the whole forest
-    concatenates into one (S × nb, 4) u64 matrix and a batch probes in
-    ONE vectorized pass: global bucket = shard × nb + level-0 bucket.
-    This removes the grouped route's per-batch pandas groupby and its
-    S tiny find_hashes calls — measured 875 ns/key there vs the
-    ~120 ns/key block-probe floor this path runs at. Kept apart from
-    _TbfForestMultiProbe, which measured 5–24% slower per key on a
-    single-level forest."""
-
-    family = "taffy_block"
-
-    def __init__(self, n_shards: int, num_buckets: int,
-                 state64: np.ndarray):
-        self.n_shards = n_shards
-        self.num_buckets = num_buckets
-        self.b64 = state64.reshape(-1, 4)          # (S*nb, 4) u64
-
-    @classmethod
-    def eligible(cls, n_shards: int, blobs: dict) -> bool:
-        # single-level shards sharing one level-0 size
-        return _all_same(
-            lv[0].size if len(lv) == 1 else None
-            for lv in map(_tbf_levels, blobs.values()))
-
-    @classmethod
-    def _build(cls, n_shards: int, blobs: dict):
-        levels = {s: _tbf_levels(b)[0] for s, b in blobs.items()}
-        span = next(iter(levels.values())).size
-        state = np.zeros(n_shards * span, dtype=np.uint32)
-        for s, lvl in levels.items():
-            state[s * span:(s + 1) * span] = lvl
-        return cls(n_shards, span // K.WORDS_PER_BUCKET,
-                   state.view(np.uint64))
-
-    def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
-        from ..kernels.keys import shard_of_keys
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        shards = shard_of_keys(keys, self.n_shards, binary=binary)
-        idx = K.bucket_index(keys, self.num_buckets).astype(np.int64) \
-            + shards * np.int64(self.num_buckets)
-        m64 = np.ascontiguousarray(K.make_masks(keys)).view(np.uint64)
-        g = self.b64[idx]
-        np.bitwise_and(g, m64, out=g)
-        return (g == m64).all(axis=1)
-
-
-class _TbfForestMultiProbe(_Assembled):
-    """Assembled probe view of a GROWN (multi-level) taffy_block
-    forest. Every shard of a forest is created with the same
-    (per-shard ndv, fpp), so level ``i``'s bucket count is a function
-    of the level index alone (the 6/π² sizing schedule,
+    upsized) or GROWN. Every shard of a forest is created with the
+    same (per-shard ndv, fpp), so level ``i``'s bucket count is a
+    function of the level index alone (the 6/π² sizing schedule,
     ``taffy-block.h:56-66``) — shards differ only in how many levels
     they have grown. Level ``i`` of every shard that has it therefore
     concatenates into ONE (R_i, 4) u64 matrix with a per-shard row
@@ -298,7 +232,9 @@ class _TbfForestMultiProbe(_Assembled):
     S·L tiny per-shard kernel calls per batch (the measured 100M-key
     growth-sweep gap: 3.5 Mk/s grouped vs 14 Mk/s for the same-shape
     assembled block probe). Lane masks are computed ONCE per batch and
-    compressed along with the keys (they depend only on the key)."""
+    compressed along with the keys (they depend only on the key). A
+    single-level forest is one full level: global bucket = shard × nb
+    + level-0 bucket, one gather, no compaction."""
 
     family = "taffy_block"
 
@@ -309,7 +245,8 @@ class _TbfForestMultiProbe(_Assembled):
         self.offsets = offsets    # (L, S) int64 row offsets, -1 missing
         self.mats = mats          # list of (R_i, 4) u64 matrices
         # levels every shard has (all but the newest in a ragged
-        # forest): probed without per-lane validity indexing
+        # forest): shard s sits at rows s × nb, so they are probed
+        # without the offset gather or per-lane validity indexing
         self.full = [bool((offsets[i] >= 0).all())
                      for i in range(len(mats))]
 
@@ -352,13 +289,14 @@ class _TbfForestMultiProbe(_Assembled):
         m64 = np.ascontiguousarray(K.make_masks(hs)).view(np.uint64)
         idx = None                # None ⇒ every lane still pending
         for i in reversed(range(len(self.mats))):
-            off = self.offsets[i][sh]
             if self.full[i]:
                 # every shard has level i (the common case: all but
                 # the newest level or two) — probe all pending lanes
                 # without the fancy-index copies
                 vpos, vk, vm = None, hs, m64
+                off = sh * np.int64(self.nbs[i])
             else:
+                off = self.offsets[i][sh]
                 vpos = np.flatnonzero(off >= 0)
                 if vpos.size == 0:
                     continue
@@ -367,6 +305,8 @@ class _TbfForestMultiProbe(_Assembled):
             g = self.mats[i][bi]
             np.bitwise_and(g, vm, out=g)
             found = (g == vm).all(axis=1)
+            if i == 0 and idx is None and vpos is None:
+                return found      # the oldest level saw every lane
             if found.any():
                 hit = np.flatnonzero(found) if vpos is None \
                     else vpos[found]
@@ -607,10 +547,10 @@ class _LiveTcfForestProbe(_Assembled):
         return out & self.present[shards]
 
 
-# kind → assembled class. A global shard frame takes the FIRST kind
-# whose family matches all its rows and whose shards are eligible, so a
-# single-level TBF forest gets the one-matrix probe. Frames no kind
-# takes probe through the grouped route on a JVM-derived shard column.
+# kind → assembled class. A global shard frame takes the kind whose
+# family matches all its rows and whose shards are eligible. Frames no
+# kind takes probe through the grouped route on a JVM-derived shard
+# column.
 # minimal_taffy_cuckoo forests deliberately stay grouped: each shard's
 # level geometry depends on its own cursor (which levels doubled) and
 # per-side hi/lo permutations, so a shared-permutation concatenated
@@ -619,24 +559,15 @@ class _LiveTcfForestProbe(_Assembled):
 # TCF assembled 16.7, BENCH/growth100m.json).
 _ASSEMBLED = {
     "block_slice_set": _BlockSliceProbe,
-    "tbf_level0_set": _TbfForestProbe,
-    "tbf_forest_set": _TbfForestMultiProbe,
+    "tbf_forest_set": _TbfForestProbe,
     "frozen_tcf_set": _FrozenTcfForestProbe,
     "tcf_set": _LiveTcfForestProbe,
 }
 
 
-def _split(payload) -> tuple[int, dict]:
-    """(n_shards, {shard: blob}) of an assembled map entry: forests
-    broadcast exactly that tuple, block slices a bare blob list (one
-    per non-empty shard)."""
-    if isinstance(payload, tuple):
-        return payload
-    return len(payload), dict(enumerate(payload))
-
-
-def _assemble(kind: str, payload):
-    obj = _ASSEMBLED[kind].assemble(*_split(payload))
+def _assemble(kind: str, payload: tuple):
+    """(n_shards, {shard: blob}) → the kind's probe object."""
+    obj = _ASSEMBLED[kind].assemble(*payload)
     assert obj is not None  # driver checked eligibility
     return obj
 
@@ -650,25 +581,22 @@ def _content_token(filter_map: dict) -> str:
     h = hashlib.blake2b(digest_size=16)
 
     def upd(x: bytes) -> None:
-        # length-framed: the token stays injective over the blob-list
-        # STRUCTURE (two partitionings whose bytes concatenate
-        # identically must not collide)
+        # length-framed: the token stays injective over the shard
+        # STRUCTURE (two splits whose bytes concatenate identically
+        # must not collide)
         h.update(len(x).to_bytes(8, "little"))
         h.update(x)
 
     for g in sorted(filter_map, key=repr):
         fam, blob = filter_map[g]
         upd(repr((g, fam)).encode())
-        if isinstance(blob, (bytes, bytearray)):
-            upd(blob)
-        elif isinstance(blob, tuple):  # (n_shards, {shard: blob})
+        if isinstance(blob, tuple):  # (n_shards, {shard: blob})
             upd(str(blob[0]).encode())
             for s in sorted(blob[1]):
                 upd(str(s).encode())
                 upd(blob[1][s])
-        else:  # list of slice blobs
-            for x in blob:
-                upd(x)
+        else:
+            upd(blob)
     return h.hexdigest()
 
 
@@ -710,7 +638,7 @@ def _with_route_shard(df: DataFrame, key_col: str, p: dict) -> DataFrame:
     return with_shard(df, key_col, int(p["n_shards"]))
 
 
-def _fingerprint(filters_df: DataFrame, cols: list[str], *extra):
+def _fingerprint(filters_df: DataFrame, cols: list[str]):
     """One-pass JVM fingerprint of a CACHED filters frame: row count,
     order-free content hash (bit_xor — overflow-free and ANSI-safe;
     the group/shard columns inside the hash keep equal blobs of
@@ -719,7 +647,7 @@ def _fingerprint(filters_df: DataFrame, cols: list[str], *extra):
     return filters_df.agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64(*cols, "family", "filter")).alias("h"),
-        F.sum(F.length("filter")).alias("l"), *extra).first()
+        F.sum(F.length("filter")).alias("l")).first()
 
 
 def _memo_key(df: DataFrame, tag: str, agg) -> tuple:
@@ -759,43 +687,83 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     group_cols = list(group_cols or [])
     if via not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"unknown probe route {via!r}")
-    if not group_cols and "__shard" in filters_df.columns \
-            and _collected is None:
-        return _probe_shard_frame(df, filters_df, key_col, result_col,
-                                  via)
-    if via == "shuffle":
-        return _probe_via_cogroup(df, filters_df, group_cols, key_col,
-                                  result_col)
+    shards = not group_cols and "__shard" in filters_df.columns \
+        and _collected is None
+    cols = ["__shard"] if shards else group_cols
+    entry = None if via == "shuffle" else _broadcast_entry(
+        df, filters_df, cols, shards, via, _collected)
+    if entry == ():  # empty build side: nothing can match
+        return df.withColumn(result_col, F.lit(False))
+    if entry is None:  # shuffle route, or over the broadcast budget
+        return _probe_via_cogroup(df, filters_df, cols, key_col,
+                                  result_col, shards)
+    kind, bc, p = entry
+    if kind is not None or not shards:
+        return _broadcast_probe_udf(df, bc, [] if kind else cols,
+                                    key_col, result_col)
+    return _broadcast_probe_udf(_with_route_shard(df, key_col, p), bc,
+                                cols, key_col, result_col).drop("__shard")
+
+
+def _broadcast_entry(df: DataFrame, filters_df: DataFrame,
+                     cols: list[str], shards: bool, via: str,
+                     fmap: dict | None):
+    """The broadcast side of a probe: ``(kind, bc, params)`` — an
+    _ASSEMBLED ``kind`` (None ⇒ probe ``bc``'s map on ``cols``) and,
+    for a shard frame, its params row — or None when the blobs exceed
+    the broadcast budget, or ``()`` when the frame is empty.
+
+    A shard frame's shapes that an _ASSEMBLED kind takes (block slices,
+    single- and multi-level TBF forests, uniform frozen and live TCF
+    forests) assemble into ONE probe object per worker — a plain
+    global probe, measured ~1.5× over the grouped route for slices and
+    ~3× for TBF forests. Anything else maps shard → blob and probes
+    through the grouped route on a JVM-derived shard column.
+
+    A CACHED grouped or shard frame pays a one-pass JVM fingerprint
+    aggregation first; repeat probes of an unchanged frame then skip
+    the blob collect AND the broadcast dump, reusing the memoized
+    entry. The memo key tags the frame shape, so a grouped probe on
+    ``["__shard"]`` never picks up a shard frame's assembled entry.
+    Uncached frames keep the single-collect flow (a fingerprint pass
+    would recompute their whole upstream build)."""
     memo_key = None
-    if _collected is None and group_cols and _is_cached(filters_df):
-        # CACHED grouped frame: a repeat probe of the unchanged frame
-        # reuses the recorded broadcast directly
-        agg = _fingerprint(filters_df, group_cols)
+    if fmap is None and cols and _is_cached(filters_df):
+        agg = _fingerprint(filters_df, cols)
         if not agg["n"]:
-            return df.withColumn(result_col, F.lit(False))
+            return ()
         if via == "auto" and agg["l"] > _BROADCAST_MAX:
-            # over budget, known WITHOUT collecting any blob
-            return _probe_via_cogroup(df, filters_df, group_cols,
-                                      key_col, result_col)
-        memo_key = _memo_key(df, "groupfp", agg)
-        bc = _MEMO.get(memo_key)
-        if bc is not None:
-            return _broadcast_probe_udf(df, bc, group_cols,
-                                        key_col, result_col)
-    if _collected is not None:
-        filter_map = _collected
-    elif via == "broadcast":
-        filter_map = collect_filters(filters_df, group_cols)
-    else:
-        rows = _collect_budgeted(filters_df, group_cols)
-        if rows is None:  # over budget → keep filters distributed
-            return _probe_via_cogroup(df, filters_df, group_cols,
-                                      key_col, result_col)
-        filter_map = _filter_map(rows, group_cols)
-    bc = _get_bc(df.sparkSession, filter_map)
+            return None  # over budget, known WITHOUT collecting a blob
+        memo_key = _memo_key(df, "shardfp" if shards else "groupfp", agg)
+        hit = _MEMO.get(memo_key)
+        if hit is not None:
+            return hit
+    kind = p = None
+    if fmap is None:
+        sel = cols + ["params"] if shards else cols
+        if via == "broadcast":  # the caller pinned the driver hop
+            rows = filters_df.select(*sel, "family", "filter").collect()
+        else:
+            rows = _collect_budgeted(filters_df, sel, shards)
+            if rows is None:  # over budget: blobs stay distributed
+                return None
+        if not rows:
+            return ()
+        fmap = _filter_map(rows, cols)
+    if shards:
+        p = json.loads(rows[0]["params"])
+        n_sh = int(p["n_shards"])
+        blobs = {s: blob for (s,), (_, blob) in fmap.items()}
+        fams = {fam for fam, _ in fmap.values()}
+        kind = next((k for k, c in _ASSEMBLED.items()
+                     if fams == {c.family} and c.eligible(n_sh, blobs)),
+                    None)
+        if kind is not None:
+            fmap = {(): (kind, (n_sh, blobs))}
+    entry = (kind, _get_bc(df.sparkSession, fmap), p)
     if memo_key is not None:
-        _bounded_put(_MEMO, memo_key, bc, _MEMO_MAX)
-    return _broadcast_probe_udf(df, bc, group_cols, key_col, result_col)
+        _bounded_put(_MEMO, memo_key, entry, _MEMO_MAX)
+    return entry
 
 
 def _get_bc(spark, filter_map: dict):
@@ -815,98 +783,6 @@ def _get_bc(spark, filter_map: dict):
         bc = _bounded_put(_MEMO, key, sc.broadcast((token, filter_map)),
                           _MEMO_MAX)
     return bc
-
-
-def _probe_shards_via_cogroup(df: DataFrame, filters_df: DataFrame,
-                              key_col: str, result_col: str,
-                              p: dict | None = None) -> DataFrame:
-    """Shard frame on the shuffle route (via='shuffle' or over the
-    budget): attach the routing column and cogroup — the blobs never
-    reach the driver."""
-    if p is None:
-        row = filters_df.select("params").first()
-        if row is None:
-            return df.withColumn(result_col, F.lit(False))
-        p = json.loads(row["params"])
-    probe = _with_route_shard(df, key_col, p)
-    return _probe_via_cogroup(probe, filters_df, ["__shard"], key_col,
-                              result_col).drop("__shard")
-
-
-def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
-                       key_col: str, result_col: str,
-                       via: str) -> DataFrame:
-    """GLOBAL probe against a distributed shard frame (block shards /
-    filter forest). Shapes an _ASSEMBLED kind takes (block slices,
-    single- and multi-level TBF forests, uniform frozen and live TCF
-    forests) assemble into ONE probe object per worker — a plain
-    global probe, measured ~1.5× over the grouped route for slices and
-    ~3× for TBF forests. Anything else probes through the grouped
-    route on a JVM-derived shard column; over-budget frames (or
-    via='shuffle') keep blobs off the driver via the cogroup route.
-
-    A CACHED frame pays a one-pass JVM fingerprint aggregation first;
-    repeat probes of an unchanged frame then skip the blob collect AND
-    the broadcast dump, reusing the memoized (kind, broadcast, params)
-    directly. Uncached frames keep the single-collect flow
-    (a fingerprint pass would recompute their whole upstream build)."""
-    if via == "shuffle":
-        return _probe_shards_via_cogroup(df, filters_df, key_col,
-                                         result_col)
-    memo_key = None
-    if _is_cached(filters_df):
-        agg = _fingerprint(filters_df, ["__shard"],
-                           F.first("params").alias("p"))
-        if not agg["n"]:
-            return df.withColumn(result_col, F.lit(False))
-        if via == "auto" and agg["l"] > _BROADCAST_MAX:
-            return _probe_shards_via_cogroup(
-                df, filters_df, key_col, result_col, json.loads(agg["p"]))
-        memo_key = _memo_key(df, "shardfp", agg)
-        hit = _MEMO.get(memo_key)
-        if hit is not None:
-            return _probe_from_bc(df, *hit, key_col, result_col)
-    if via == "auto":
-        rows = _collect_budgeted(filters_df, ["__shard", "params"],
-                                 shards=True)
-        if rows is None:  # over budget: blobs never hit the driver
-            return _probe_shards_via_cogroup(df, filters_df, key_col,
-                                             result_col)
-    else:  # via == "broadcast": caller pinned the driver hop
-        rows = filters_df.select("__shard", "params", "family",
-                                 "filter").collect()
-    if not rows:  # empty build side: nothing can match
-        return df.withColumn(result_col, F.lit(False))
-    p = json.loads(rows[0]["params"])
-    n_sh = int(p["n_shards"])
-    shard_blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-    if len(shard_blobs) != len(rows):
-        raise _duplicate_rows(["__shard"],
-                              [(int(r["__shard"]),) for r in rows])
-    fams = {r["family"] for r in rows}
-    kind = next((k for k, cls in _ASSEMBLED.items()
-                 if fams == {cls.family} and cls.eligible(n_sh, shard_blobs)),
-                None)
-    if kind is None:
-        collected = {(int(r["__shard"]),): (r["family"],
-                                            bytes(r["filter"]))
-                     for r in rows}
-    else:
-        payload = _ASSEMBLED[kind].payload(n_sh, shard_blobs)
-        collected = {(): (kind, payload)}
-    bc = _get_bc(df.sparkSession, collected)
-    if memo_key is not None:
-        _bounded_put(_MEMO, memo_key, (kind, bc, p), _MEMO_MAX)
-    return _probe_from_bc(df, kind, bc, p, key_col, result_col)
-
-
-def _probe_from_bc(df: DataFrame, kind: str | None, bc, p: dict,
-                   key_col: str, result_col: str) -> DataFrame:
-    if kind is not None:
-        return _broadcast_probe_udf(df, bc, [], key_col, result_col)
-    probe = _with_route_shard(df, key_col, p)
-    return _broadcast_probe_udf(probe, bc, ["__shard"], key_col,
-                                result_col).drop("__shard")
 
 
 def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
@@ -974,19 +850,28 @@ def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
 
 def _probe_via_cogroup(df: DataFrame, filters_df: DataFrame,
                        group_cols: list[str], key_col: str,
-                       result_col: str) -> DataFrame:
+                       result_col: str, shards: bool = False) -> DataFrame:
     """Shuffle probe — the many-groups scale path. The filter blobs
     never visit the driver: distinct (group, key) pairs cogroup with
     the filters frame on the group key, each task probes one group's
     keys against that group's blob, and the boolean equi-joins back.
     Driver memory stays flat at any number of groups; the price is a
     shuffle of the distinct probe keys plus the join — the right trade
-    exactly when groups × blob bytes outgrow a broadcast."""
+    exactly when groups × blob bytes outgrow a broadcast. A shard frame
+    (``shards``) first gets its routing column attached to the probe
+    side from the params row."""
     import pyarrow as pa
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from ..kernels.keys import keys_and_valid_from_arrow
 
+    if shards:
+        row = filters_df.select("params").first()
+        if row is None:
+            return df.withColumn(result_col, F.lit(False))
+        routed = _with_route_shard(df, key_col, json.loads(row["params"]))
+        return _probe_via_cogroup(routed, filters_df, group_cols, key_col,
+                                  result_col).drop("__shard")
     gcols = list(group_cols) or ["__g"]
     if group_cols:
         probe_keys = df.select(*group_cols, key_col)

@@ -212,6 +212,12 @@ def assemble_block_shards(shards_df: DataFrame) -> bytes:
     rows = shards_df.select(SHARD_COL, "params", "filter").collect()
     if not rows:
         raise ValueError("cannot assemble an empty shard frame")
+    shards = [(r[SHARD_COL],) for r in rows]
+    if len(set(shards)) != len(rows):
+        # two rows for one shard would overwrite one slice's bits with
+        # the other's (half the keys of a two-build union missing)
+        from .probe import _duplicate_rows
+        raise _duplicate_rows([SHARD_COL], shards)
     p = json.loads(rows[0]["params"])
     num_buckets = int(p["num_buckets"])
     out = bytearray(num_buckets * BUCKET_BYTES)

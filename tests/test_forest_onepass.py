@@ -4,6 +4,7 @@ and the streamed mapInArrow build must agree with the routing."""
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from libfilter_spark.kernels.keys import (shard_of_keys,
                                           spark_xxhash64_keys, to_signed)
@@ -89,10 +90,10 @@ def test_forest_engine_rejects_deleted_engines(spark):
 
 def test_assembled_tbf_forest_probe_matches_grouped(spark):
     """Round-5: a single-level taffy_block forest (the default build's
-    shape) probes through the assembled one-matrix fast path; answers
+    shape) probes through the assembled taffy_block kind; answers
     must equal the grouped shard route for binary AND long keys,
-    including absent keys and nulls; a grown multi-level forest must
-    fall back (not crash, same answers)."""
+    including absent keys and nulls; a grown multi-level forest takes
+    the same kind with the same answers."""
     import libfilter_spark.spark.probe as P
     from libfilter_spark.spark.forest import (build_filter_forest,
                                               probe_with_forest)
@@ -126,17 +127,17 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
             _collected=grouped_collected).where("maybe_seen").count()
         assert via_fast == via_grouped
         forest.unpersist()
-    # multi-level (grown) forest: takes the MULTI-level assembled
-    # path (round-6) — zero FN end-to-end, and absent answers equal
-    # the grouped route bit-for-bit
+    # multi-level (grown) forest: the same assembled kind — zero FN
+    # end-to-end, and absent answers equal the grouped route
+    # bit-for-bit
     keys = with_content_key_bin(df, "content").select("key")
     akeys = with_content_key_bin(absent, "content").select("key")
     grown = build_filter_forest(keys, "key", "taffy_block",
                                 ndv=8 * 64, fpp=0.01, n_shards=8).cache()
     gb = {int(r["__shard"]): bytes(r["filter"])
           for r in grown.collect()}
-    assert not P._TbfForestProbe.eligible(8, gb)
-    assert P._TbfForestMultiProbe.eligible(8, gb)
+    assert max(len(P._tbf_levels(b)) for b in gb.values()) > 1  # grown
+    assert P._TbfForestProbe.eligible(8, gb)
     assert probe_with_forest(keys, grown, "key") \
         .where("maybe_seen").count() == n
     from libfilter_spark.spark.forest import SHARD_COL, with_shard
@@ -175,8 +176,8 @@ def test_assembled_tbf_multilevel_probe_unit():
         f.add_hashes(ks)
         filters[s], blobs[s] = f, f.serialize()
     assert len(filters[3].levels) > len(filters[0].levels)  # ragged
-    assert P._TbfForestMultiProbe.eligible(S, blobs)
-    pv = P._TbfForestMultiProbe.assemble(S, blobs)
+    assert P._TbfForestProbe.eligible(S, blobs)
+    pv = P._TbfForestProbe.assemble(S, blobs)
     assert pv.find(all_keys, binary=False).all()  # zero FN
     absent = splitmix64(50_000, seed=456)
     mixed = np.concatenate([all_keys[:5000], absent])
@@ -187,7 +188,7 @@ def test_assembled_tbf_multilevel_probe_unit():
         expect[m] = filters[s].find_hashes(mixed[m])
     assert (pv.find(mixed, binary=False) == expect).all()
     del blobs[5]  # missing shard ⇒ its keys report False
-    pv3 = P._TbfForestMultiProbe.assemble(S, blobs)
+    pv3 = P._TbfForestProbe.assemble(S, blobs)
     exp3 = expect.copy()
     exp3[msh == 5] = False
     assert (pv3.find(mixed, binary=False) == exp3).all()
@@ -397,7 +398,7 @@ def test_probe_only_default_freezes_tcf(spark):
 
 
 def test_tbf_forest_uniform_rejects_foreign_mix():
-    """_TbfForestMultiProbe.eligible only accepts shards whose per-level sizes
+    """_TbfForestProbe.eligible only accepts shards whose per-level sizes
     agree (one forest's shared creation params); a mix of filters
     created with different params must fall back to the grouped
     route, not assemble a wrong-size matrix."""
@@ -412,9 +413,9 @@ def test_tbf_forest_uniform_rejects_foreign_mix():
     b = TaffyBlockFilter.create(50_000, 0.001)  # different schedule
     b.add_hashes(splitmix64(5000, seed=2))
     blobs = {0: a.serialize(), 1: b.serialize()}
-    assert not P._TbfForestMultiProbe.eligible(2, blobs)
-    assert P._TbfForestMultiProbe.assemble(2, blobs) is None
-    assert P._TbfForestMultiProbe.eligible(2, {}) is False
+    assert not P._TbfForestProbe.eligible(2, blobs)
+    assert P._TbfForestProbe.assemble(2, blobs) is None
+    assert P._TbfForestProbe.eligible(2, {}) is False
 
 
 def test_assembled_live_tcf_probe_unit():
@@ -568,3 +569,84 @@ def test_live_tcf_nonuniform_forest_falls_back_grouped(spark):
         .where("maybe_seen").count()
     assert found == n             # zero FN through the grouped fallback
     keys.unpersist()
+
+
+@pytest.mark.parametrize("shape, kind", [
+    ("block_slices", "block_slice_set"),
+    ("tbf_single", "tbf_forest_set"),
+    ("tbf_grown", "tbf_forest_set"),
+    ("tcf_frozen", "frozen_tcf_set"),
+    ("tcf_live", "tcf_set"),
+    ("mtcf", None),             # no assembled kind: per-shard map
+])
+def test_shard_frame_routes_agree(spark, monkeypatch, shape, kind):
+    """Every route of a global probe against a shard frame gives the
+    same answer per key: broadcast, shuffle, and auto over the budget
+    (which falls back to the cogroup), each on a cached and an
+    uncached frame, with zero false negatives. A repeat probe of the
+    cached frame is served from the driver memo without collecting a
+    blob."""
+    import json
+
+    import libfilter_spark.spark.probe as P
+    from libfilter_spark.spark.forest import build_filter_forest
+    from libfilter_spark.spark.keys import with_content_key_bin
+    from libfilter_spark.spark.sharded import build_block_shards
+
+    n, S = 6_000, 4
+    base = spark.range(2 * n).withColumn("content",
+                                         F.col("id").cast("string"))
+    probe = with_content_key_bin(base, "content").select("id", "key")
+    keys = probe.where(F.col("id") < n).select("key")
+
+    def build():
+        if shape == "block_slices":
+            return build_block_shards(keys, ndv=n, fpp=0.01, n_shards=S)
+        family, ndv, freeze = {
+            "tbf_single": ("taffy_block", n, None),
+            "tbf_grown": ("taffy_block", S * 64, None),
+            "tcf_frozen": ("taffy_cuckoo", n, True),
+            "tcf_live": ("taffy_cuckoo", n, False),
+            "mtcf": ("minimal_taffy_cuckoo", n, None)}[shape]
+        return build_filter_forest(keys, "key", family, ndv=ndv,
+                                   fpp=0.01, n_shards=S, freeze=freeze)
+
+    rows = build().collect()
+    blobs = {r["__shard"]: bytes(r["filter"]) for r in rows}
+    fams = {r["family"] for r in rows}
+    n_sh = int(json.loads(rows[0]["params"])["n_shards"])
+    assert [k for k, c in P._ASSEMBLED.items()
+            if fams == {c.family} and c.eligible(n_sh, blobs)] \
+        == ([kind] if kind else [])
+    if shape == "tbf_grown":
+        assert max(len(P._tbf_levels(b)) for b in blobs.values()) > 1
+
+    def answers(frame, via):
+        got = {r["id"]: r["maybe_seen"] for r in P.probe_with_filters(
+            probe, frame, None, via=via).select("id", "maybe_seen")
+            .collect()}
+        assert len(got) == 2 * n
+        assert all(got[i] for i in range(n)), (via, "false negative")
+        return got
+
+    def poisoned(*a, **kw):
+        raise AssertionError("repeat probe collected the blobs")
+
+    expect = None
+    for cached in (False, True):
+        frame = build()
+        if cached:
+            frame.cache()
+        for via in ("broadcast", "shuffle", "over_budget"):
+            with monkeypatch.context() as m:
+                if via == "over_budget":
+                    m.setattr(P, "_BROADCAST_MAX", 8)
+                route = "auto" if via == "over_budget" else via
+                got = answers(frame, route)
+                expect = expect or got
+                assert got == expect, (cached, via)
+                if cached:
+                    m.setattr(P, "_collect_budgeted", poisoned)
+                    m.setattr(P, "_filter_map", poisoned)
+                    assert answers(frame, route) == expect, (cached, via)
+        frame.unpersist()

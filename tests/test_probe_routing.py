@@ -481,7 +481,7 @@ def test_grouped_probe_content_cache_skips_recollect(spark,
 
     def poisoned(*a, **kw):
         raise AssertionError("repeat probe re-collected the blobs")
-    monkeypatch.setattr(P, "collect_filters", poisoned)
+    monkeypatch.setattr(P, "_filter_map", poisoned)
     monkeypatch.setattr(P, "_collect_budgeted", poisoned)
     second = {(r["g"], r["content"]): r["maybe_seen"]
               for r in probe_with_filters(probe_keys, filters,
@@ -534,16 +534,19 @@ def test_grouped_partials_build_keeps_null_group(spark):
     assert n_true == 4_000  # zero FN on non-null groups; null rows False
 
 
-@pytest.mark.parametrize("via", ["broadcast", "shuffle"])
-@pytest.mark.parametrize("frame", ["grouped", "shards"])
+@pytest.mark.parametrize("frame, via", [
+    ("grouped", "broadcast"), ("grouped", "shuffle"),
+    ("shards", "broadcast"), ("shards", "shuffle"), ("shards", "export")])
 def test_duplicate_filter_rows_raise(spark, frame, via):
     """Two unioned builds give one group (or shard) two filter rows.
     The broadcast route's filter map used to keep only the last row
     and miss the other build's keys (about half of them), while the
     shuffle route ORed both rows, so the answer depended on the route
-    (and on frame size under via='auto'). Both routes now reject the
-    frame with a ValueError that names the group or shard."""
-    from libfilter_spark.spark.sharded import build_block_shards
+    (and on frame size under via='auto'); the shard frame's export
+    wrote one slice over the other. Every route now rejects the frame
+    with a ValueError that names the group or shard."""
+    from libfilter_spark.spark.sharded import (assemble_block_shards,
+                                               build_block_shards)
 
     def half(lo, hi):
         base = spark.range(lo, hi).select(
@@ -564,8 +567,11 @@ def test_duplicate_filter_rows_raise(spark, frame, via):
     filters = parts[0].unionByName(parts[1])
     probe = halves[0].unionByName(halves[1])
     with pytest.raises(Exception) as err:
-        probe_with_filters(probe, filters, group_cols, via=via) \
-            .where("maybe_seen").count()
+        if via == "export":
+            assemble_block_shards(filters)
+        else:
+            probe_with_filters(probe, filters, group_cols, via=via) \
+                .where("maybe_seen").count()
     msg = f"{type(err.value).__name__}: {err.value}"
     assert "ValueError" in msg
     assert f"more than one row for {named}" in msg

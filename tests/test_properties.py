@@ -250,7 +250,7 @@ def test_assembled_tbf_forest_probe_parity(seed, n, n_shards, grow,
         filters[s], blobs[s] = f, f.serialize()
     for s in range(min(drop, n_shards - 1)):  # keep >= 1 shard
         del blobs[n_shards - 1 - s]
-    pv = P._TbfForestMultiProbe.assemble(n_shards, blobs)
+    pv = P._TbfForestProbe.assemble(n_shards, blobs)
     assert pv is not None
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])

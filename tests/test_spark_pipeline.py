@@ -87,6 +87,27 @@ def test_taffy_block_distributed(docs):
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
 
+def test_source_code_pipeline_releases_its_cache(spark, sf_dir):
+    """The query caches its keyed source table (build, probe and exact
+    verify all read it) and must release it before returning: the
+    result rows equal the recorded goldens and no persisted RDD is
+    left behind."""
+    import json
+    import os
+
+    import __spark_entry__ as E
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    got = E.queries()["source_code_pipeline"](spark, sf_dir)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert persisted().size() == before
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "goldens_sf001.json")) as fh:
+        golden = json.load(fh)["source_code_pipeline"]
+    assert got.columns == golden["columns"]
+    assert rows == sorted(tuple(r) for r in golden["rows"])
+
+
 def test_source_code_table_deterministic(spark):
     a = source_code_table(spark, 2000, seed=7, partitions=2).toPandas()
     b = source_code_table(spark, 2000, seed=7, partitions=5).toPandas()
