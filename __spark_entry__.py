@@ -844,7 +844,7 @@ def q_frozen_tcf_forest_semijoin(spark: SparkSession,
     orders = load_table(spark, sf_dir, "orders")
     build = _keyed(customers, "c_custkey")
     probe = _keyed(orders, "o_custkey")
-    # no freeze= argument: probe_only forests freeze BY DEFAULT
+    # no freeze= argument: taffy_cuckoo forests freeze BY DEFAULT
     # (round-6) — this query pins the default serving shape
     forest = build_filter_forest(build, "key", "taffy_cuckoo",
                                  ndv=1 << 13, fpp=0.01, n_shards=8)

@@ -487,14 +487,14 @@ def _driver_union_find(spark, edge_rows, id_type) -> DataFrame:
 def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
                       id_b: str = "id_b",
                       max_iters: int = 20,
-                      driver_max_edges: int | None = None) -> DataFrame:
+                      driver_max_edges: int = 200_000) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id)
     with cluster_id = the minimum member id (deterministic labels).
 
     Route 1 (small graphs): when the pair count is within
-    ``driver_max_edges`` (default env LIBFILTER_CC_DRIVER_MAX or
-    200k — a few MB of ids on the driver), the edge list collects and
-    a union-find with path compression labels components in one pass.
+    ``driver_max_edges`` (200k by default — a few MB of ids on the
+    driver), the edge list collects and a union-find with path
+    compression labels components in one pass.
     Near-dup graphs are usually output-sized (≈ the duplicate count,
     not the corpus), so this is the common case even at large sf; the
     distributed loop's per-round scheduling latency dwarfs the whole
@@ -515,11 +515,6 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
 
     Both routes emit identical labels (min member id per component,
     order-independent) — pinned by tests on random graphs."""
-    import os
-
-    if driver_max_edges is None:
-        driver_max_edges = int(os.environ.get(
-            "LIBFILTER_CC_DRIVER_MAX", 200_000))
     pairs = pairs.cache()   # the edge union reads it twice; without
     # this the whole upstream candidate pipeline recomputes per select
     if driver_max_edges > 0:

@@ -2,10 +2,13 @@
 over DataFrames using Spark's partial+final aggregate shape.
 
 Design (SURVEY.md §3.4): scan → JVM-side sha2 key derivation →
-map-side partial filter per (task, group) via ``mapInArrow`` (NO row
-shuffle — only KB-sized filter blobs are shuffled) → one
-Arrow-segmented ``mapInArrow`` merge pass per partition of groups →
-checkpoint → broadcast → Arrow scalar UDF probe → semi-join."""
+map-side partial filter or sketch per (task, group) via one
+``mapInArrow`` builder, ``build.partial_batches`` (NO row shuffle —
+only KB-sized blobs are shuffled; null keys are dropped) → one merge
+planner, ``build.merge_partials``: one or two Arrow-segmented
+``mapInArrow`` merge levels per partition of groups → checkpoint →
+broadcast → Arrow scalar UDF probe → semi-join. Sketches
+(``sketch_build.build_sketches``) run the same two stages."""
 
 from .session import get_spark
 from .keys import with_content_key, KEY_COL, KEY_HEX_COL

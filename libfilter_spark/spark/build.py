@@ -1,18 +1,20 @@
 """Distributed filter build — Spark's partial+final aggregate shape.
 
-Stage 1 (map-side combine, ``mapInArrow``): every task folds its
-input batches into one partial filter per group it sees. No row
-shuffle happens — a task emits one (group, blob) row per group, so
-the only shuffled payload is KB-sized filter state. This is the
-distributed analogue of the reference's single-process insert loop
-(``c/include/filter/block.h:127-138``), and the reason the design
-scales: at 100 TB the shuffle carries ~(tasks × groups) blobs, not
-10^12 rows.
+Stage 1 (map-side combine, ``mapInArrow`` over ``partial_batches``):
+every task folds its input batches into one partial filter per group
+it sees. No row shuffle happens — a task emits one (group, blob) row
+per group, so the only shuffled payload is KB-sized filter state.
+This is the distributed analogue of the reference's single-process
+insert loop (``c/include/filter/block.h:127-138``), and the reason
+the design scales: at 100 TB the shuffle carries ~(tasks × groups)
+blobs, not 10^12 rows.
 
-Stage 2 (final merge, ``mapInArrow`` over ``merge_partial_batches``):
-per group, fold partial blobs with the family's union (OR for block
-families — ``c/lib/block.c:68``'s TODO implemented; the TCF union
-algorithm of ``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters).
+Stage 2 (``merge_partials``: one or two ``mapInArrow`` levels over
+``merge_partial_batches``): per group, fold partial blobs with the
+family's union (OR for block families — ``c/lib/block.c:68``'s TODO
+implemented; the TCF union algorithm of
+``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters). The sketch
+build (spark/sketch_build.py) runs both stages with its own spec.
 
 Families must be *mergeable* for this path. The static XOR filter
 (one-shot bulk build, no union — ``c/lib/static.c:12-82``) uses the
@@ -24,7 +26,6 @@ from __future__ import annotations
 
 import functools
 import json
-import os
 
 import numpy as np
 import pandas as pd
@@ -34,7 +35,7 @@ from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType)
 
 from ..filters import FAMILIES
-from ..kernels.keys import to_unsigned
+from ..kernels.keys import drop_null_keys, keys_from_arrow
 
 
 def create_filter(family: str, ndv: int, fpp: float):
@@ -88,14 +89,7 @@ def select_build_strategy(family: str, grouped: bool, ndv: int,
     if family == "static_xor":
         return "grouped_bulk"
     if threshold is None:
-        import os
-        # 4 MB default (was 32 MB): the sharded path beat partials at
-        # every measured size down to ~1.5 MB filters (5M keys/7.5 MB:
-        # 1.8-2.2 s sharded vs 2.78 s partials, local[32] in-process
-        # A/B), and the shard-frame probe assembles per-worker so probe
-        # speed matches the single blob. Below 4 MB the single
-        # mergeable row is kept for its streaming/merge semantics.
-        threshold = int(os.environ.get("LIBFILTER_SHARDED_MIN", 4 << 20))
+        threshold = _SHARDED_MIN
     if estimate_filter_bytes(family, ndv, fpp) >= threshold:
         if grouped:
             return "grouped_bulk"
@@ -104,26 +98,28 @@ def select_build_strategy(family: str, grouped: bool, ndv: int,
     return "partials"
 
 
-# Scale-adaptive build plumbing (round 7, guide §2.2/§2.4): the
+# Build routing thresholds, all on PLAN-TIME size estimates.
+#
+# _SHARDED_MIN (4 MB, was 32 MB): global block filters at or past it
+# take the sharded route. The sharded path beat partials at every
+# measured size down to ~1.5 MB filters (5M keys/7.5 MB: 1.8-2.2 s
+# sharded vs 2.78 s partials, local[32] in-process A/B), and the
+# shard-frame probe assembles per worker, so probe speed matches the
+# single blob. Below 4 MB the single mergeable row is kept for its
+# streaming/merge semantics.
+#
+# _WIDEN_MIN_BYTES and _SMALL_MERGE_MAX (round 7): the
 # partial-widening repartition and the two-level content-bucketed
 # merge tree exist for HEAVY builds (MB-GB filters × many tasks); for
 # small filters they are pure overhead — a 96 KB global build measured
-# 1.38 s through the widen + tree vs 0.24 s of actual build work. Both
-# route on the PLAN-TIME size estimate (estimate_filter_bytes), so the
-# decision is scale-adaptive, not a local-mode constant: a cluster
-# with defaultParallelism in the thousands crosses the threshold at
-# proportionally smaller per-partial sizes.
-_WIDEN_MIN_BYTES = int(os.environ.get("LIBFILTER_WIDEN_MIN", 1 << 20))
-_SMALL_MERGE_MAX = int(os.environ.get("LIBFILTER_SMALL_MERGE_MAX",
-                                      64 << 20))
-
-
-def _keys_from_series(s: pd.Series) -> np.ndarray:
-    """LongType (int64) or 8-byte binary series → uint64 keys."""
-    if s.dtype == object:  # binary
-        from ..kernels.keys import keys_from_hash_bytes
-        return keys_from_hash_bytes(s.to_numpy())
-    return to_unsigned(s.to_numpy())
+# 1.38 s through the widen + tree vs 0.24 s of actual build work. The
+# merge routes on estimate × defaultParallelism, so a cluster with
+# thousands of cores crosses it at proportionally smaller partials.
+_SHARDED_MIN = 4 << 20
+_WIDEN_MIN_BYTES = 1 << 20
+_SMALL_MERGE_MAX = 64 << 20
+# buckets of the merge tree's first level
+_MERGE_FANIN = 16
 
 
 def group_segments(cols: list, n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -223,15 +219,6 @@ def merge_partial_batches(batches, keys: list[str], names: list[str],
         lo, size, out = i + 1, 0, []
 
 
-def merge_group_table(table, **spec):
-    """``applyInArrow`` form of ``merge_partial_batches``: the table is
-    one group, merged into a one-row table (``spec`` as there, minus
-    ``keys``)."""
-    import pyarrow as pa
-    return pa.Table.from_batches(
-        list(merge_partial_batches(table.to_batches(), [], **spec)))
-
-
 def merge_filter_list(family: str, blobs: list[bytes]) -> bytes:
     """Union of one group's partial filter blobs, in the given order
     (``merge_partial_batches`` passes them sorted by bytes)."""
@@ -265,19 +252,23 @@ def merge_filter_list(family: str, blobs: list[bytes]) -> bytes:
     return acc.serialize()
 
 
-def _result_schema(df: DataFrame, group_cols: list[str]) -> StructType:
-    fields = [f for f in df.schema.fields if f.name in group_cols]
-    # preserve group_cols order
-    by_name = {f.name: f for f in fields}
-    out = [StructField(c, by_name[c].dataType) for c in group_cols]
-    out += [
-        StructField("family", StringType()),
-        StructField("params", StringType()),
-        StructField("n_keys", LongType()),
-        StructField("n_partials", LongType()),
-        StructField("filter", BinaryType()),
-    ]
-    return StructType(out)
+# the column names and blob merge of a filter frame (merge_partials)
+_FILTER_SPEC = dict(tag="family", count="n_keys", blob="filter",
+                    merge=merge_filter_list)
+
+
+def _result_schema(df: DataFrame, group_cols: list[str],
+                   spec: dict = _FILTER_SPEC) -> StructType:
+    """group_cols (typed as in ``df``, in the given order) + (tag,
+    params, count, n_partials, blob), named by ``spec``."""
+    by_name = {f.name: f for f in df.schema.fields}
+    return StructType(
+        [StructField(c, by_name[c].dataType) for c in group_cols]
+        + [StructField(spec["tag"], StringType()),
+           StructField("params", StringType()),
+           StructField(spec["count"], LongType()),
+           StructField("n_partials", LongType()),
+           StructField(spec["blob"], BinaryType())])
 
 
 def _arrow_schema(schema: StructType):
@@ -289,12 +280,70 @@ def _arrow_schema(schema: StructType):
                       for f in schema.fields])
 
 
+def partial_batches(batches, group_cols: list[str], value_col: str,
+                    values, create, update, tag: str, params: str,
+                    schema):
+    """``mapInArrow`` body of the map-side partial, for filters and
+    sketches alike: one state per group the task sees.
+
+    Rows whose ``value_col`` is null are dropped (a null is neither a
+    member nor a value). Per batch, ``values(column)`` converts the
+    values once, ``group_segments`` splits the rows by group (a null
+    group value is a group), and ``update(state, values)`` runs once
+    per (batch, group) on a state from ``create()``. The one output
+    batch holds, in the order of the Arrow ``schema``: the group
+    columns, ``tag``, ``params``, the count of kept rows,
+    ``n_partials`` = 1 and the serialized state.
+
+    Arrow, not pandas: the pandas conversion materializes one Python
+    bytes object per binary key, measured to dominate the Python
+    stage and cap its multi-worker scaling (see spark/sharded.py
+    build_slice); ``keys_from_arrow`` reads the buffer zero-copy. The
+    numpy segmentation replaced a pandas groupby plus per-group key
+    conversion, measured at ~4 ms per (task, group)."""
+    import pyarrow as pa
+
+    acc: dict[tuple, object] = {}
+    counts: dict[tuple, int] = {}
+    for batch in batches:
+        batch = drop_null_keys(batch, value_col)
+        if batch.num_rows == 0:
+            continue
+        vals = values(batch.column(value_col))
+        if not group_cols:
+            segs = [((), vals)]
+        else:
+            gcols = [batch.column(c) for c in group_cols]
+            order, bounds = group_segments(
+                [c.to_pandas(types_mapper=pd.ArrowDtype) for c in gcols],
+                batch.num_rows)
+            heads = order[np.r_[0, bounds].astype(np.int64)]
+            segs = zip(zip(*(c.take(heads).to_pylist() for c in gcols)),
+                       (vals[seg] for seg in np.split(order, bounds)))
+        for g, v in segs:
+            state = acc.get(g)
+            if state is None:
+                state = acc[g] = create()
+                counts[g] = 0
+            update(state, v)
+            counts[g] += len(v)
+    if acc:
+        n = len(acc)
+        cols = [[g[i] for g in acc] for i in range(len(group_cols))]
+        cols += [[tag] * n, [params] * n, list(counts.values()), [1] * n,
+                 [state.serialize() for state in acc.values()]]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+
+
 def build_filters(df: DataFrame, group_cols: list[str] | None,
                   key_col: str = "key", family: str = "block",
                   ndv: int = 1 << 20, fpp: float = 0.01,
                   strategy: str | None = None) -> DataFrame:
     """Build one filter per group over ``df[key_col]`` (int64 two's-
-    complement uint64 keys or 8-byte binary).
+    complement uint64 keys or 8-byte binary). Null keys are dropped on
+    every route; a group whose keys are all null gets no row.
 
     Returns a small DataFrame: group_cols + (family, params, n_keys,
     n_partials, filter). ``ndv`` is the per-group capacity hint: exact
@@ -348,166 +397,99 @@ def build_filters(df: DataFrame, group_cols: list[str] | None,
                 proj = proj.repartition(target)
         except Exception:
             pass  # streaming plans have no static partitioning to widen
-    partial_schema = _result_schema(proj, group_cols)
-
-    # mapInArrow, not mapInPandas: the pandas conversion would
-    # materialize one Python bytes object per binary key — measured to
-    # dominate the Python stage and cap its multi-worker scaling (see
-    # spark/sharded.py build_slice); keys_from_arrow reads the Arrow
-    # buffer zero-copy instead
-    out_schema = _arrow_schema(partial_schema)
-
-    def partial_builder(batches):
-        import pyarrow as pa
-
-        from ..kernels.keys import drop_null_keys, keys_from_arrow
-        acc: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        for batch in batches:
-            batch = drop_null_keys(batch, key_col)
-            if batch.num_rows == 0:
-                continue
-            keys = keys_from_arrow(batch.column(key_col))
-            if not group_cols:
-                segs = [((), keys)]
-            else:
-                # key conversion ONCE per batch, then numpy group
-                # segmentation — pandas groupby iteration plus a
-                # per-group binary-key conversion measured ~4 ms per
-                # (task, group), which dominated many-group builds
-                gcols = [batch.column(c) for c in group_cols]
-                order, bounds = group_segments(
-                    [c.to_pandas(types_mapper=pd.ArrowDtype)
-                     for c in gcols], batch.num_rows)
-                heads = order[np.r_[0, bounds].astype(np.int64)]
-                segs = zip(zip(*(c.take(heads).to_pylist()
-                                 for c in gcols)),
-                           (keys[seg] for seg in np.split(order, bounds)))
-            for g, k in segs:
-                f = acc.get(g)
-                if f is None:
-                    f = acc[g] = create_filter(family, ndv, fpp)
-                    counts[g] = 0
-                f.add_hashes(k)
-                counts[g] += len(k)
-        if acc:
-            cols = {c: [g[i] for g in acc]
-                    for i, c in enumerate(group_cols)}
-            cols["family"] = [family] * len(acc)
-            cols["params"] = [params] * len(acc)
-            cols["n_keys"] = list(counts.values())
-            cols["n_partials"] = [1] * len(acc)
-            cols["filter"] = [f.serialize() for f in acc.values()]
-            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
-
-    partials = proj.mapInArrow(partial_builder, schema=partial_schema)
+    schema = _result_schema(proj, group_cols)
+    partials = proj.mapInArrow(functools.partial(
+        partial_batches, group_cols=group_cols, value_col=key_col,
+        values=keys_from_arrow,
+        create=functools.partial(create_filter, family, ndv, fpp),
+        update=FAMILIES[family].add_hashes, tag=family, params=params,
+        schema=_arrow_schema(schema)), schema=schema)
     return merge_filter_blobs(partials, group_cols, est_bytes=est_bytes)
 
 
-def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
-                       fanin: int = 16,
-                       est_bytes: int | None = None) -> DataFrame:
-    """Merge of partial filter rows → one row per group, as a TWO-LEVEL
-    tree: partials first merge inside ``fanin`` deterministic buckets
-    (bucket = xxhash64(blob) mod fanin, so the tree shape is a pure
-    function of the data), then buckets merge into the final filter.
+def merge_partials(partials: DataFrame, group_cols: list[str],
+                   spec: dict, est_bytes: int | None = None) -> DataFrame:
+    """Merge of partial rows (filters or sketches; ``spec`` names the
+    tag, count and blob columns and the blob-list ``merge``, as
+    ``merge_partial_batches`` takes them) → one row per group.
 
-    Why a tree: at high parallelism a single-task final merge has to
-    pull every partial blob (tasks × filter_bytes) through one Python
-    worker — measured as the scaling bottleneck (64 x 32 MB partials
-    made local[32] *slower* than local[8]). The tree caps per-task
-    merge input at ~max(n/fanin, fanin) blobs.
-
-    Determinism: every route merges through ``merge_partial_batches``
-    (see its merge-order contract), and the bucketing is
-    content-derived, so the tree shape is a function of the data.
+    Every level is a repartition plus one ``merge_partial_batches``
+    call per partition, so every route keeps its merge-order contract:
+    OR families and lattice sketches come out byte-identical whatever
+    the route, KLL/t-digest as a function of the sorted partial set.
 
     ``est_bytes`` (the caller's plan-time per-partial size estimate)
     routes SMALL merges — est × defaultParallelism within
-    $LIBFILTER_SMALL_MERGE_MAX (64 MB default) — onto single-level
-    plans: one 1-partition exchange + one Python task for a global
-    merge, one grouped exchange + per-partition Python loop for
-    grouped merges. The tree exists for tasks × MB-GB partial volumes;
-    below the threshold its extra exchange and cores-wide Python
-    stages dominate the work (a 5-group KB-blob merge measured ~128
-    Python tasks through the tree).
-    """
-    schema = partials.schema
+    ``_SMALL_MERGE_MAX`` — onto one level. With no estimate, or past
+    it, the merge is a TWO-LEVEL tree: partials first merge inside
+    ``_MERGE_FANIN`` content buckets per group (bucket = xxhash64(blob)
+    mod fan-in, so the tree shape is a pure function of the data),
+    then the buckets merge into the final row. At high parallelism a
+    single-level merge pulls every partial blob (tasks × blob bytes)
+    of a group through one Python worker — measured as the scaling
+    bottleneck (64 x 32 MB partials made local[32] *slower* than
+    local[8]); the tree caps per-task merge input at ~max(n/fan-in,
+    fan-in) blobs. Below the threshold the tree's extra exchange and
+    cores-wide Python stages dominate the work (a 5-group KB-blob
+    merge measured ~128 Python tasks through the tree).
+
+    The final level's exchange:
+
+    - global merge: ``repartition(1)``, one merge task;
+    - small grouped merge: ``repartition(*group_cols)``, UNPINNED on
+      purpose — AQE coalesces the KB-blob exchange to a task or two,
+      whose cost scales with the number of groups, not bytes (7.7k
+      96-byte partials in 2,000 groups, one core of a 4-core Xeon VM:
+      1.06 s as a pandas groupby loop building a frame per group,
+      0.043 s segmented once);
+    - tree: ``repartition(nparts, *group_cols)`` with an EXPLICIT
+      count. Bare ``repartition(*cols)`` lets AQE coalesce by size
+      (50 MB of partials → 5 partitions measured), serializing the
+      per-group merges the repartition exists to parallelize — a
+      1000-group merge took 9.1 s coalesced vs 1.7 s pinned at
+      local[32].
+
+    Partition-local merging replaced ``groupBy().applyInPandas``,
+    which cost one Python call per (group, bucket) — measured 20.8 s
+    of a 27 s query at 10^3 groups (≈17k calls)."""
+    spark = partials.sparkSession
     small = False
     if est_bytes is not None:
         try:
-            par = partials.sparkSession.sparkContext.defaultParallelism
+            par = spark.sparkContext.defaultParallelism
         except Exception:
             par = 32
         small = est_bytes * max(par, 1) <= _SMALL_MERGE_MAX
-
-    spec = dict(tag="family", count="n_keys", blob="filter",
-                merge=merge_filter_list)
-
-    def merging(keys, names):
-        return functools.partial(merge_partial_batches, keys=keys,
-                                 names=names, **spec)
-
-    bucket = F.pmod(F.xxhash64("filter"), F.lit(fanin)).alias("__mb")
-    level1_in = partials.select("*", bucket)
-    l1_schema = level1_in.schema
-
-    if not group_cols:
-        if not small:
-            # tree level 1: one __mb bucket per Python call, so a task
-            # holds one bucket's MB-GB blobs at a time
-            partials = level1_in.groupBy("__mb").applyInArrow(
-                functools.partial(merge_group_table,
-                                  names=l1_schema.names, **spec),
-                schema=l1_schema).drop("__mb")
-        # the final (or, for small merges, only) level: every row moves
-        # through one 1-partition exchange into ONE merge task — no
-        # cores-wide Python stage
-        return partials.repartition(1).mapInArrow(
-            merging([], schema.names), schema=schema)
-
-    # partition-local merging: groupBy().applyInPandas costs one
-    # Python call per (group, bucket) — measured 20.8 s of a 27 s
-    # query at 10^3 groups (≈17k calls). Repartitioning on the same
-    # keys co-locates each merge group, and ONE mapInArrow call per
-    # partition merges all its groups (merge_partial_batches) —
-    # identical blobs, identical sorted merge order, so the output
-    # stays byte-identical; Python calls drop to 2× shuffle partitions.
-    #
-    # The repartition carries an EXPLICIT partition count: with bare
-    # repartition(*cols) AQE coalesces the KB-blob exchange by size
-    # (50 MB of partials → 5 partitions measured), which serializes
-    # the per-group Python merges that the repartition exists to
-    # parallelize — a 1000-group merge took 9.1 s coalesced vs 1.7 s
-    # pinned at local[32].
-    l1_keys = [*group_cols, "__mb"]
-    spark = partials.sparkSession
     try:
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         nparts = spark.sparkContext.defaultParallelism
 
-    if small:
-        # single-level grouped merge: per-group partial volume is
-        # bounded by tasks × est bytes (under the threshold), so one
-        # task per group suffices — skip the __mb fan-in level (its
-        # exchange + cores-wide Python stage cost more than the merges
-        # below the threshold). The partition count is UNPINNED here on
-        # purpose: AQE coalesces the KB-blob exchange to a task or two.
-        # That task's cost scales with the number of groups, not bytes
-        # (7.7k 96-byte partials in 2,000 groups, one core of a 4-core
-        # Xeon VM: 1.06 s as a pandas groupby loop building a frame per
-        # group, 0.043 s segmented once), which is why
-        # merge_partial_batches keeps per-group Python work to one
-        # merge call; the pinned count stays
-        # reserved for the heavy tree, where coalescing serialized
-        # MB-blob merges.
-        return partials.repartition(*group_cols).mapInArrow(
-            merging(group_cols, schema.names), schema=schema)
-    level1 = level1_in.repartition(nparts, *l1_keys).mapInArrow(
-        merging(l1_keys, l1_schema.names), schema=l1_schema)
-    return level1.drop("__mb").repartition(nparts, *group_cols) \
-        .mapInArrow(merging(group_cols, schema.names), schema=schema)
+    def merged(df: DataFrame, keys: list[str]) -> DataFrame:
+        return df.mapInArrow(functools.partial(
+            merge_partial_batches, keys=keys, names=df.schema.names,
+            **spec), schema=df.schema)
+
+    if not small:
+        keys = [*group_cols, "__mb"]
+        bucket = F.pmod(F.xxhash64(spec["blob"]), F.lit(_MERGE_FANIN))
+        partials = merged(partials.select("*", bucket.alias("__mb"))
+                          .repartition(nparts, *keys), keys).drop("__mb")
+    if not group_cols:
+        final = partials.repartition(1)
+    elif small:
+        final = partials.repartition(*group_cols)
+    else:
+        final = partials.repartition(nparts, *group_cols)
+    return merged(final, group_cols)
+
+
+def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
+                       est_bytes: int | None = None) -> DataFrame:
+    """Merge of partial filter rows → one row per group
+    (``merge_partials`` over the filter columns; ``est_bytes`` is the
+    plan-time per-partial filter size, ``None`` forces the tree)."""
+    return merge_partials(partials, group_cols, _FILTER_SPEC, est_bytes)
 
 
 def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
@@ -552,10 +534,9 @@ def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
     out_schema = _arrow_schema(schema)
 
     def bulk(table):
-        # applyInArrow + zero-copy key extraction (see partial_builder)
+        # applyInArrow + zero-copy key extraction (see partial_batches)
         import pyarrow as pa
 
-        from ..kernels.keys import drop_null_keys, keys_from_arrow
         table = drop_null_keys(table, key_col)
         if table.num_rows == 0:
             return out_schema.empty_table()  # all keys null: no row

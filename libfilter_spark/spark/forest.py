@@ -57,8 +57,7 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
                         ndv: int = 1 << 20, fpp: float = 0.01,
                         n_shards: int | None = None,
                         engine: str = "auto",
-                        freeze: bool | None = None,
-                        probe_only: bool = True) -> DataFrame:
+                        freeze: bool | None = None) -> DataFrame:
     """→ one filter row per shard: (__shard, family, params, n_keys,
     n_partials=1, filter). ``ndv`` is the TOTAL population hint; each
     shard pre-sizes to its share.
@@ -101,16 +100,15 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     forest cannot absorb further inserts, and dropping the tails
     raises the structural FPP to the tail-less ~SLOTS·2^-HEAD level.
 
-    ``probe_only`` (default True) makes frozen the DEFAULT serving
-    shape when ``freeze`` is unset: a taffy_cuckoo forest a caller
-    never declared mutable serializes frozen — the path of least
+    Frozen is the DEFAULT serving shape: with ``freeze`` unset, a
+    taffy_cuckoo forest serializes frozen — the path of least
     resistance IS the reference's read-only serving form. Pass
-    ``probe_only=False`` (or ``freeze=False``) to keep live shards
-    (full tails: lower FPP, later absorb/upsize possible).
+    ``freeze=False`` to keep live shards (full tails: lower FPP, later
+    absorb/upsize possible).
     """
     spark = df.sparkSession
     if freeze is None:
-        freeze = probe_only and family == "taffy_cuckoo"
+        freeze = family == "taffy_cuckoo"
     if freeze and family != "taffy_cuckoo":
         raise ValueError(
             "freeze=True applies to the taffy_cuckoo family only "

@@ -39,7 +39,7 @@ def key_i64_from_hex(hex16: Column) -> Column:
 def key_bin_col(content: Column | str) -> Column:
     """8-byte binary key — the fast path: no decimal math, ~3x faster
     end-to-end than the int64 derivation at 5M keys (measured). The
-    kernels consume either form (``_keys_from_series``)."""
+    kernels consume either form (``keys_from_arrow``)."""
     return F.unhex(key_hex_col(content))
 
 

@@ -55,7 +55,7 @@ def _shard_bounds(num_buckets: int, n_shards: int) -> list[tuple[int, int]]:
 def _upper32(df: DataFrame, key_col: str):
     """JVM-side expression for the upper 32 bits of the uint64 key —
     works for 8-byte binary sha keys AND int64 (two's-complement
-    uint64) keys, matching ``_keys_from_series`` bit-for-bit."""
+    uint64) keys, matching ``keys_from_arrow`` bit-for-bit."""
     if isinstance(df.schema[key_col].dataType, BinaryType):
         # binary keys are big-endian uint64 (kernels/keys.py): the
         # upper 32 bits are the first 4 bytes

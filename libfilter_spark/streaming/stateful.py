@@ -12,19 +12,29 @@ from __future__ import annotations
 
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from ..kernels.keys import keys_from_hash_bytes, to_unsigned
 from ..sketches import HyperLogLog
-from ..spark.build import _keys_from_series
 
 STATE_SCHEMA = StructType([
     StructField("sketch", BinaryType()),
     StructField("n_rows", LongType()),
 ])
+
+
+def _keys_from_series(s: pd.Series) -> np.ndarray:
+    """LongType (int64) or 8-byte binary series with no nulls → uint64
+    keys (a null would turn an int64 series into float64)."""
+    if s.dtype == object:  # binary
+        return keys_from_hash_bytes(s.to_numpy())
+    return to_unsigned(s.to_numpy())
 
 
 def stream_distinct_counts(stream_df: DataFrame, group_col: str,
@@ -33,7 +43,9 @@ def stream_distinct_counts(stream_df: DataFrame, group_col: str,
     """groupBy(group_col) → stateful HLL distinct-count stream.
 
     Emits (group, n_rows, distinct_estimate) per updated group per
-    micro-batch. Returns the writeStream builder (caller starts it).
+    micro-batch. Rows with a null key are dropped in the JVM, before
+    the grouping, so ``n_rows`` counts non-null keys only. Returns the
+    writeStream builder (caller starts it).
     """
     out_schema = StructType([
         StructField(group_col,
@@ -59,7 +71,8 @@ def stream_distinct_counts(stream_df: DataFrame, group_col: str,
         yield pd.DataFrame({group_col: [key[0]], "n_rows": [n_rows],
                             "distinct_estimate": [h.estimate()]})
 
-    updated = (stream_df.groupBy(group_col)
+    updated = (stream_df.where(F.col(key_col).isNotNull())
+               .groupBy(group_col)
                .applyInPandasWithState(update, out_schema, STATE_SCHEMA,
                                        "update",
                                        GroupStateTimeout.NoTimeout))

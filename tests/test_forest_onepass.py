@@ -377,8 +377,7 @@ def test_assembled_frozen_tcf_probe_matches_grouped(spark):
 def test_probe_only_default_freezes_tcf(spark):
     """Round-6 (verdict task 3): with no freeze argument a
     taffy_cuckoo forest serializes FROZEN — the reference's read-only
-    serving shape is the default; probe_only=False (or freeze=False)
-    keeps live shards."""
+    serving shape is the default; freeze=False keeps live shards."""
     from libfilter_spark.spark.forest import build_filter_forest
     from libfilter_spark.spark.keys import with_content_key_bin
     n = 5_000
@@ -389,7 +388,7 @@ def test_probe_only_default_freezes_tcf(spark):
     assert all(r["family"] == "frozen_taffy_cuckoo"
                for r in default.collect())
     live = build_filter_forest(keys, "key", "taffy_cuckoo", ndv=n,
-                               n_shards=4, probe_only=False)
+                               n_shards=4, freeze=False)
     assert all(r["family"] == "taffy_cuckoo" for r in live.collect())
     # non-cuckoo families are unaffected by the default
     tbf = build_filter_forest(keys, "key", "taffy_block", ndv=n,

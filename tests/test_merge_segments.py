@@ -231,16 +231,14 @@ def test_filter_merge_routes_agree_over_many_groups(spark, family):
 
 
 def test_sketch_merge_routes_agree_over_many_groups(spark, monkeypatch):
-    import libfilter_spark.spark.sketch_build as SB
-
     df = _many_groups(spark).cache()
     for kind, col in (("hll", "key"), ("countmin", "key")):
         a, b = (_rows(build_sketches(df.repartition(p), ["g"], col,
                                      kind=kind), "sketch", "n_rows")
                 for p in (1, 4))
         with monkeypatch.context() as m:
-            # the large-sketch route: one applyInArrow call per group
-            m.setattr(SB, "_SMALL_MERGE_MAX", 0)
+            # the large-sketch route: the two-level merge tree
+            m.setattr(B, "_SMALL_MERGE_MAX", 0)
             c = _rows(build_sketches(df.repartition(4), ["g"], col,
                                      kind=kind), "sketch", "n_rows")
         assert len(a) > 1_000 and None in a, kind

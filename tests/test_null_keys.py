@@ -103,3 +103,34 @@ def test_build_routes_drop_null_keys(frames, route):
     assert "z" not in {r[0][0] for r in got[1]}, route
     n_keys = cols.index("n_keys")
     assert sum(r[0][n_keys] for r in got[1]) == N, route
+
+
+@pytest.fixture(scope="module")
+def sketch_frames(spark):
+    base = spark.range(N).select(
+        (F.col("id") % 2).cast("string").alias("g"),
+        F.col("id").cast("string").alias("content"),
+        (F.col("id") / 7.0).alias("v"))
+    keys = with_content_key_bin(base, "content").select(
+        "g", "key", F.xxhash64("content").alias("key64"), "v")
+    # nulls in both live groups, and a group "z" of null values only
+    nulls = spark.createDataFrame(
+        [(g, None, None, None) for g in ("0", "1", "z", "z")],
+        "g string, key binary, key64 bigint, v double")
+    return keys, keys.unionByName(nulls)
+
+
+@pytest.mark.parametrize("kind,col", [
+    ("hll", "key"), ("hll", "key64"), ("countmin", "key"),
+    ("countmin", "key64"), ("kll", "v")])
+def test_build_sketches_drop_null_values(sketch_frames, kind, col):
+    """build_sketches drops null values as the filter routes drop null
+    keys: blob for blob equal to the null-free build, n_rows counting
+    the non-null values only, and no row for the all-null group."""
+    from libfilter_spark.spark.sketch_build import build_sketches
+    got = [{r["g"]: (r["n_rows"], r["n_partials"], bytes(r["sketch"]))
+            for r in build_sketches(df, ["g"], col, kind=kind).collect()}
+           for df in sketch_frames]
+    assert got[0] == got[1], (kind, col)
+    assert set(got[1]) == {"0", "1"}, (kind, col)
+    assert sum(v[0] for v in got[1].values()) == N, (kind, col)

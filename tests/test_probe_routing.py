@@ -83,7 +83,8 @@ def test_probe_global_shuffle_route(spark):
 def test_build_strategy_override_pins_partials(spark, monkeypatch):
     """Round-3 ADVICE low (streaming): strategy='partials' must yield a
     single mergeable row even when the size router would go sharded."""
-    monkeypatch.setenv("LIBFILTER_SHARDED_MIN", "1024")
+    import libfilter_spark.spark.build as B
+    monkeypatch.setattr(B, "_SHARDED_MIN", 1024)
     base = spark.range(2_000).select(
         F.col("id").cast("string").alias("content"))
     keys = with_content_key_bin(base, "content").select("key")

@@ -160,30 +160,26 @@ def test_build_strategy_routing():
         2 * 200_000_000
 
 
-def test_grouped_bulk_large_build(spark):
+def test_grouped_bulk_large_build(spark, monkeypatch):
     """A grouped build past the routing threshold takes the bulk path
     (one full-size filter per group, zero blob merge) and still
     produces zero-FN filters probeable through the standard path."""
-    import os
-
+    import libfilter_spark.spark.build as B
     from libfilter_spark.spark.build import build_filters
     n = 40_000
     df = (spark.range(n)
           .withColumn("g", (F.col("id") % 4).cast("string"))
           .withColumn("content", F.col("id").cast("string")))
     keys = with_content_key_bin(df, "content").select("g", "key")
-    os.environ["LIBFILTER_SHARDED_MIN"] = "1"  # force the bulk route
-    try:
-        filters = build_filters(keys, ["g"], family="block",
-                                ndv=n // 4, fpp=0.01).cache()
-        rows = filters.collect()
-        assert len(rows) == 4
-        assert all(r["n_partials"] == 1 for r in rows)  # bulk: no merge
-        found = probe_with_filters(keys, filters, ["g"]) \
-            .where("maybe_seen").count()
-        assert found == n
-    finally:
-        del os.environ["LIBFILTER_SHARDED_MIN"]
+    monkeypatch.setattr(B, "_SHARDED_MIN", 1)  # force the bulk route
+    filters = build_filters(keys, ["g"], family="block",
+                            ndv=n // 4, fpp=0.01).cache()
+    rows = filters.collect()
+    assert len(rows) == 4
+    assert all(r["n_partials"] == 1 for r in rows)  # bulk: no merge
+    found = probe_with_filters(keys, filters, ["g"]) \
+        .where("maybe_seen").count()
+    assert found == n
 
 
 def test_tcf_forest_build_probe_semijoin(spark):
@@ -249,13 +245,13 @@ def test_mtcf_forest_build_probe(spark):
 
 
 def test_default_threshold_routes_5m_sharded():
-    """Round-4: default LIBFILTER_SHARDED_MIN dropped 32 MB -> 4 MB
-    (sharded beat partials at every measured size; probe assembles
-    slices per worker so probe speed matches the single blob)."""
-    import os
-
-    from libfilter_spark.spark.build import select_build_strategy
-    assert "LIBFILTER_SHARDED_MIN" not in os.environ
+    """Round-4: the sharded-route threshold (build._SHARDED_MIN) dropped
+    32 MB -> 4 MB (sharded beat partials at every measured size; probe
+    assembles slices per worker so probe speed matches the single
+    blob)."""
+    from libfilter_spark.spark.build import (_SHARDED_MIN,
+                                             select_build_strategy)
+    assert _SHARDED_MIN == 4 << 20
     assert select_build_strategy("block", False, 5_000_000, 0.004) == \
         "sharded"
     assert select_build_strategy("block", False, 1_000_000, 0.004) == \

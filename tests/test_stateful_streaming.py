@@ -4,6 +4,7 @@ stream via applyInPandasWithState, plus a watermarked windowed agg."""
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_stateful_hll_distinct_stream(spark, tmp_path):
@@ -61,3 +62,54 @@ def test_watermarked_windowed_counts(spark, tmp_path):
     finally:
         q.stop()
     assert total >= 4000
+
+
+@pytest.mark.parametrize("key_type", ["int64", "binary"])
+def test_stateful_hll_drops_null_keys(spark, tmp_path, key_type):
+    """Null keys are dropped before the grouping: n_rows counts the
+    non-null keys, the estimate equals a local HLL over them (an int64
+    batch with a null must not pass through float64, which maps the
+    null to 2^63 and 2^60 + 1 to 2^60), and a group of null keys only
+    emits no row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from libfilter_spark.sketches import HyperLogLog
+    from libfilter_spark.streaming.stateful import stream_distinct_counts
+
+    data = {0: [1 << 60, (1 << 60) + 1, None, 12_345],
+            1: [None, 7, None], 2: [None, None]}
+    if key_type == "int64":
+        atype = pa.int64()
+        enc = (lambda k: k)
+    else:
+        atype = pa.binary()
+        enc = (lambda k: k.to_bytes(8, "big"))
+    grp = [g for g, ks in data.items() for _ in ks]
+    key = [None if k is None else enc(k)
+           for ks in data.values() for k in ks]
+    src = tmp_path / "in"
+    src.mkdir()
+    pq.write_table(pa.table({"grp": pa.array(grp, pa.int64()),
+                             "key": pa.array(key, atype)}),
+                   src / "part-0.parquet")
+    stream = spark.readStream.schema(
+        spark.read.parquet(str(src)).schema).parquet(str(src))
+    name = f"hll_nulls_{key_type}"
+    q = (stream_distinct_counts(stream, "grp", "key", p=12)
+         .format("memory").queryName(name).start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {r["grp"]: (r["n_rows"], r["distinct_estimate"])
+           for r in spark.sql(f"select * from {name}").collect()}
+    want = {}
+    for g, ks in data.items():
+        live = [k for k in ks if k is not None]
+        if live:
+            h = HyperLogLog(p=12)
+            h.update_batch(np.array(live, dtype=np.uint64))
+            want[g] = (len(live), h.estimate())
+    assert got == want
