@@ -103,9 +103,6 @@ class BlockFilter:
     def clone(self) -> "BlockFilter":
         return BlockFilter(self.state.copy())
 
-    def zero_out(self) -> None:
-        self.state[:] = 0
-
     def __eq__(self, other) -> bool:
         return isinstance(other, BlockFilter) and \
             np.array_equal(self.state, other.state)

@@ -106,22 +106,6 @@ def _minhash_params(k: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signature(shingles: np.ndarray, a: np.ndarray,
-                      b: np.ndarray) -> np.ndarray:
-    """(n_shingles,) × (k,) → (k,) signature. Multiply in python-object
-    space is avoided by splitting the 61-bit modular multiply."""
-    if len(shingles) == 0:
-        return np.full(len(a), np.uint64(_M61), dtype=np.uint64)
-    x = (shingles % np.uint64(_M61)).astype(np.uint64)
-    # (a*x + b) mod M61 with 128-bit emulation: a,x < 2^61
-    lo = a[None, :] * (x[:, None] & np.uint64(0x3FFFFFFF))
-    hi = a[None, :] * (x[:, None] >> np.uint64(30))
-    prod = (lo % np.uint64(_M61)
-            + ((hi % np.uint64(_M61)) << np.uint64(30)) % np.uint64(_M61)
-            + b[None, :]) % np.uint64(_M61)
-    return prod.min(axis=0)
-
-
 def minhash_signatures_batch(shingle_sets: list[np.ndarray],
                              a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """(docs, k) signature matrix in one pass: flat modular multiply

@@ -10,7 +10,7 @@ spark/keys.py; a winnowing fingerprint kernel lives in dedup.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # occurrence counting via the length-difference trick — identical
@@ -129,14 +129,6 @@ def lang_id(col: Column) -> Column:
         best = F.when(cond, F.lit(lang)).otherwise(best)
         best_score = F.when(cond, s).otherwise(best_score)
     return best
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return (df.withColumn("n_tokens", token_count(c))
-            .withColumn("n_subwords", subword_estimate(c))
-            .withColumn("quality", quality_score(c))
-            .withColumn("lang_pred", lang_id(c)))
 
 
 def oracle_sql_snippets(text_col: str = "text") -> dict[str, str]:

@@ -175,8 +175,10 @@ def merge_partial_batches(batches, keys: list[str], names: list[str],
     Arrow array. Per group, ``merge(tag_value, blobs)`` gets the
     group's blobs **sorted by bytes** and returns the merged blob;
     ``count`` and ``n_partials`` are summed, and every other column
-    takes the group's first row. Merged rows are yielded in batches of
-    at most ``_MERGED_BATCH_BYTES`` of blobs (plus one row).
+    takes the group's first row. A group whose rows disagree on
+    ``tag`` or ``params`` raises a ``ValueError`` that names it: two
+    families, or two sizings, never merge. Merged rows are yielded in
+    batches of at most ``_MERGED_BATCH_BYTES`` of blobs (plus one row).
 
     Merge-order contract: the blobs a merge sees, and their order, are
     a function of the group's partial *set* alone. OR families
@@ -200,6 +202,25 @@ def merge_partial_batches(batches, keys: list[str], names: list[str],
          for k in keys], meta.num_rows)
     starts = np.r_[0, bounds].astype(np.int64)
     heads = meta.take(order[starts])
+    # every row of a group must agree with its head on the tag and the
+    # params: a merge under the head's family or sizing would silently
+    # mix filters (or sketches) built differently
+    seg = np.repeat(np.arange(len(starts)),
+                    np.diff(np.r_[starts, len(order)]))
+    for c in (tag, "params"):
+        codes = pd.factorize(
+            meta.column(c).to_pandas(types_mapper=pd.ArrowDtype),
+            use_na_sentinel=False)[0][order]
+        bad = np.flatnonzero(codes != codes[starts][seg])
+        if bad.size:
+            i, j = seg[bad[0]], order[bad[0]]
+            where = ", ".join(f"{k}={heads.column(k)[i].as_py()!r}"
+                              for k in keys) or "the global group"
+            raise ValueError(
+                f"partials of {where} disagree on {c}: "
+                f"{heads.column(c)[i].as_py()!r} vs "
+                f"{meta.column(c)[j].as_py()!r}; merge only partials "
+                "built with one family and one set of params")
     sums = {c: np.add.reduceat(
         meta.column(c).fill_null(0).to_numpy()[order], starts)
         for c in (count, "n_partials")}

@@ -12,6 +12,7 @@ turns a 100 TB shuffle into a few-GB shuffle.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -51,19 +52,31 @@ _FILTER_CACHE_MAX = 16
 _MEMO: dict[tuple, object] = {}
 _MEMO_MAX = 24  # a cached-frame probe records two entries
 
+
+def _broadcast_max(raw: str) -> int:
+    """``LIBFILTER_BROADCAST_MAX`` as a byte count. Anything but an
+    integer ≥ 0 raises: a negative budget would silently send every
+    ``auto`` probe to the shuffle route."""
+    if not raw.strip().isdecimal():
+        raise ValueError(f"LIBFILTER_BROADCAST_MAX={raw!r}: expected a "
+                         "byte count, an integer >= 0")
+    return int(raw)
+
+
 # broadcast-probe budget: past this many bytes of collected filter
 # blobs the driver hop (collect + sc.broadcast) becomes the chokepoint
-# (10^5 groups x MB blobs), and the probe switches to a shuffle
-# cogroup — filters stay distributed, probe keys shuffle to them.
-_BROADCAST_MAX = int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
+# (10^5 groups x MB blobs), and the probe takes the shuffle route —
+# filters stay distributed, and probe rows shuffle to their group's
+# filter row (_probe_via_shuffle).
+_BROADCAST_MAX = _broadcast_max(
+    os.environ.get("LIBFILTER_BROADCAST_MAX", str(256 << 20)))
 
 
 def _filter_map(rows: list, group_cols: list[str]) -> dict:
-    fmap = {tuple(r[c] for c in group_cols): (r["family"], bytes(r["filter"]))
-            for r in rows}
+    keys = [tuple(r[c] for c in group_cols) for r in rows]
+    fmap = {k: (r["family"], bytes(r["filter"])) for k, r in zip(keys, rows)}
     if len(fmap) != len(rows):
-        raise _duplicate_rows(group_cols, [tuple(r[c] for c in group_cols)
-                                           for r in rows])
+        raise _duplicate_rows(group_cols, keys)
     return fmap
 
 
@@ -179,9 +192,8 @@ class _Assembled:
     def assemble(cls, n_shards: int, blobs: dict):
         """{shard: blob} → probe object, or None when the shards are
         not eligible for this kind."""
-        if not cls.eligible(n_shards, blobs):
-            return None
-        return cls._build(n_shards, blobs)
+        return cls._build(n_shards, blobs) \
+            if cls.eligible(n_shards, blobs) else None
 
 
 class _BlockSliceProbe(_Assembled, BlockFilter):
@@ -565,13 +577,6 @@ _ASSEMBLED = {
 }
 
 
-def _assemble(kind: str, payload: tuple):
-    """(n_shards, {shard: blob}) → the kind's probe object."""
-    obj = _ASSEMBLED[kind].assemble(*payload)
-    assert obj is not None  # driver checked eligibility
-    return obj
-
-
 def _content_token(filter_map: dict) -> str:
     """Stable executor-cache key for a collected filter map: digest of
     every (group, family, blob bytes). blake2b keeps the driver-side
@@ -621,7 +626,8 @@ def _materialize(bc) -> dict:
     cached = _FILTER_CACHE.get(token)
     if cached is None:
         cached = _bounded_put(_FILTER_CACHE, token, {
-            g: _assemble(fam, blob) if fam in _ASSEMBLED
+            # the driver checked an _ASSEMBLED kind's eligibility
+            g: _ASSEMBLED[fam]._build(*blob) if fam in _ASSEMBLED
             else FAMILIES[fam].deserialize(blob)
             for g, (fam, blob) in filter_map.items()}, _FILTER_CACHE_MAX)
     return cached
@@ -650,11 +656,6 @@ def _fingerprint(filters_df: DataFrame, cols: list[str]):
         F.sum(F.length("filter")).alias("l")).first()
 
 
-def _memo_key(df: DataFrame, tag: str, agg) -> tuple:
-    return (df.sparkSession.sparkContext.applicationId, tag,
-            int(agg["n"]), int(agg["h"]), int(agg["l"]))
-
-
 def probe_with_filters(df: DataFrame, filters_df: DataFrame,
                        group_cols: list[str] | None,
                        key_col: str = "key",
@@ -665,10 +666,14 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     filter? Rows whose group has no filter get False. Keys may be
     int64 (two's-complement uint64) or 8-byte binary.
 
-    Implemented as a vectorized Arrow scalar UDF so only the key (and
-    group) columns cross the Python boundary — every other column of a
-    wide probe table stays JVM-side (at 100 TB the probe input is the
-    big table; shipping whole rows through Arrow would dominate).
+    The broadcast route is a vectorized Arrow scalar UDF, so only the
+    key (and group) columns cross the Python boundary — every other
+    column of a wide probe table stays JVM-side (at 100 TB the probe
+    input is the big table; shipping whole rows through Arrow would
+    dominate). The shuffle route carries every column through one
+    sorted ``mapInArrow`` pass instead, which saves the join back but
+    hides from column pruning which columns the caller reads: select
+    them before a shuffle probe of a wide table.
 
     A GLOBAL probe (group_cols empty) against a distributed shard
     frame (block shards / filter forest — one row per shard with a
@@ -680,8 +685,9 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
 
     ``via``: ``broadcast`` collects the filters to the driver and
     broadcasts (the fast path while blobs fit); ``shuffle`` keeps the
-    filters distributed and cogroups probe keys with them (the 100 TB
-    many-groups path — driver memory stays flat); ``auto`` broadcasts
+    filters distributed and shuffles the probe rows to them
+    (``_probe_via_shuffle``: the 100 TB many-groups path — driver
+    memory stays flat); ``auto`` broadcasts
     up to $LIBFILTER_BROADCAST_MAX collected bytes (256 MB default),
     then falls back to shuffle."""
     group_cols = list(group_cols or [])
@@ -695,7 +701,7 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     if entry == ():  # empty build side: nothing can match
         return df.withColumn(result_col, F.lit(False))
     if entry is None:  # shuffle route, or over the broadcast budget
-        return _probe_via_cogroup(df, filters_df, cols, key_col,
+        return _probe_via_shuffle(df, filters_df, cols, key_col,
                                   result_col, shards)
     kind, bc, p = entry
     if kind is not None or not shards:
@@ -734,7 +740,8 @@ def _broadcast_entry(df: DataFrame, filters_df: DataFrame,
             return ()
         if via == "auto" and agg["l"] > _BROADCAST_MAX:
             return None  # over budget, known WITHOUT collecting a blob
-        memo_key = _memo_key(df, "shardfp" if shards else "groupfp", agg)
+        memo_key = (df.sparkSession.sparkContext.applicationId,
+                    "shardfp" if shards else "groupfp", *map(int, agg))
         hit = _MEMO.get(memo_key)
         if hit is not None:
             return hit
@@ -848,84 +855,109 @@ def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
     return df.withColumn(result_col, udf(F.col(key_col)))
 
 
-def _probe_via_cogroup(df: DataFrame, filters_df: DataFrame,
+def _probe_via_shuffle(df: DataFrame, filters_df: DataFrame,
                        group_cols: list[str], key_col: str,
                        result_col: str, shards: bool = False) -> DataFrame:
     """Shuffle probe — the many-groups scale path. The filter blobs
-    never visit the driver: distinct (group, key) pairs cogroup with
-    the filters frame on the group key, each task probes one group's
-    keys against that group's blob, and the boolean equi-joins back.
-    Driver memory stays flat at any number of groups; the price is a
-    shuffle of the distinct probe keys plus the join — the right trade
-    exactly when groups × blob bytes outgrow a broadcast. A shard frame
-    (``shards``) first gets its routing column attached to the probe
-    side from the params row."""
-    import pyarrow as pa
-    from pyspark.sql.types import BooleanType, StructField, StructType
+    never visit the driver: filter rows (``__t`` = 0: the group
+    columns plus private ``__fam``/``__blob`` copies) and probe rows
+    (``__t`` = 1, every input column) hash to partitions by group and
+    sort there by (group, tag), so each group's filter row leads its
+    probe rows. One ``mapInArrow`` pass per partition
+    (``_probe_sorted_batches``) deserializes each group's blob once and
+    emits the probe rows with their own columns plus ``result_col``: no
+    dedupe shuffle, no Python call per group, no join back
+    (``grouped_skewed`` shapes on 4 cores: median 1.17 s against
+    2.81 s for the per-group cogroup and join back it replaced,
+    BENCH/shuffle_probe_ab.json). Driver memory
+    stays flat at any number of groups. The price is one shuffle of
+    the probe rows, every column of which crosses Arrow.
 
-    from ..kernels.keys import keys_and_valid_from_arrow
-
+    A shard frame (``shards``) groups on ``__shard``, attached to the
+    probe side from the params row. A global frame salts: probe rows
+    spread over the partitions by a key hash and the blob row
+    replicates to every one (the price of a driverless probe of one
+    huge blob; frames the build router sharded never reach here), over
+    ``spark.sql.shuffle.partitions`` salt values."""
+    out_cols = df.columns
+    schema = df.withColumn(result_col, F.lit(None).cast("boolean")).schema
     if shards:
         row = filters_df.select("params").first()
         if row is None:
             return df.withColumn(result_col, F.lit(False))
-        routed = _with_route_shard(df, key_col, json.loads(row["params"]))
-        return _probe_via_cogroup(routed, filters_df, group_cols, key_col,
-                                  result_col).drop("__shard")
+        df = _with_route_shard(df, key_col, json.loads(row["params"]))
     gcols = list(group_cols) or ["__g"]
-    if group_cols:
-        probe_keys = df.select(*group_cols, key_col)
-        fdf = filters_df
-    else:
-        # GLOBAL frame: a single __g=0 group would serialize the whole
-        # probe into ONE task. Salt instead: keys bucket by a JVM-side
-        # key hash and the blob row replicates to every bucket, so all
-        # R tasks probe in parallel (R x blob bytes of shuffle — the
-        # price of a driverless probe of one huge blob; frames the
-        # build router sharded never reach here).
-        R = max(1, int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32")))
-        probe_keys = df.select(key_col).withColumn(
-            "__g", F.pmod(F.xxhash64(F.col(key_col)),
-                          F.lit(R)).cast("long"))
-        fdf = filters_df.withColumn(
-            "__g", F.explode(F.sequence(F.lit(0).cast("long"),
-                                        F.lit(R - 1).cast("long"))))
-    probe_keys = probe_keys.where(F.col(key_col).isNotNull()) \
-        .dropDuplicates(gcols + [key_col])
-    out_schema = StructType(
-        [probe_keys.schema[c] for c in gcols + [key_col]]
-        + [StructField(result_col, BooleanType())])
+    # filter rows take the probe side's group types, so the union keeps
+    # the input's column types for the pass to emit as they came
+    fdf = filters_df.select(
+        *(F.col(c).cast(df.schema[c].dataType) for c in group_cols),
+        F.col("family").alias("__fam"), F.col("filter").alias("__blob"),
+        F.lit(0).alias("__t"))
+    probe = df.withColumn("__t", F.lit(1))
+    if not group_cols:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        probe = probe.withColumn("__g", F.pmod(F.xxhash64(key_col), F.lit(n)))
+        fdf = fdf.withColumn("__g", F.explode(F.sequence(F.lit(0),
+                                                         F.lit(n - 1))))
+    # no pinned partition count: AQE coalesces the exchange to about one
+    # partition per core, never splitting one, so a group stays in one
+    # partition. Each Python task has a fixed cost (about 0.35 s on a
+    # 4-core box), so on grouped_skewed shapes 8 pinned partitions took
+    # 1.57 s against 1.05 s coalesced to 3; 2M rows in 10k groups took
+    # about the same either way (6 coalesced partitions).
+    tagged = probe.unionByName(fdf, allowMissingColumns=True) \
+        .repartition(*gcols).sortWithinPartitions(*gcols, "__t")
+    return tagged.mapInArrow(functools.partial(
+        _probe_sorted_batches, gcols=gcols, names=group_cols,
+        key_col=key_col, out_cols=out_cols, result_col=result_col),
+        schema=schema)
 
-    def probe_group(left: "pa.Table", right: "pa.Table") -> "pa.Table":
-        if right.num_rows > 1:
-            raise _duplicate_rows(group_cols, [tuple(
-                right.column(c)[0].as_py() for c in group_cols)]
-                * right.num_rows)
-        if left.num_rows == 0:
-            res = np.zeros(0, dtype=bool)
-        else:
-            keys, valid = keys_and_valid_from_arrow(left.column(key_col))
-            res = np.zeros(len(keys), dtype=bool)
-            for fam, blob in zip(right.column("family").to_pylist(),
-                                 right.column("filter").to_pylist()):
-                f = FAMILIES[fam].deserialize(blob)
-                res |= f.find_hashes(keys)
-            res &= valid
-        cols = {c: left.column(c) for c in gcols + [key_col]}
-        cols[result_col] = pa.array(res)
-        return pa.table(cols)
 
-    probed = (probe_keys.groupBy(*gcols)
-              .cogroup(fdf.groupBy(*gcols))
-              .applyInArrow(probe_group, schema=out_schema))
-    if group_cols:
-        joined = df.join(probed, on=group_cols + [key_col], how="left")
-    else:
-        joined = df.join(probed.drop("__g"), on=key_col, how="left")
-    # rows whose group has no filter, or whose key is null, get False
-    return joined.withColumn(result_col,
-                             F.coalesce(F.col(result_col), F.lit(False)))
+def _probe_sorted_batches(batches, gcols: list[str], names: list[str],
+                          key_col: str, out_cols: list[str],
+                          result_col: str):
+    """``mapInArrow`` body of the shuffle probe, over one partition
+    sorted by (``gcols``, ``__t``): every group's rows are contiguous
+    and its filter row, if any, comes first. The current group and its
+    deserialized filter carry across batch boundaries. A second filter
+    row for one group raises ``_duplicate_rows`` (``names``: the group
+    columns the error reports). Probe rows of a group with no filter,
+    of a group tuple that holds a null (SQL equality: a null group
+    matches no filter, though the build keeps one) and with a null key
+    get False."""
+    import pyarrow as pa
+
+    from ..kernels.keys import keys_and_valid_from_arrow
+    from .build import group_segments
+
+    cur, f = None, None
+    for b in filter(len, batches):
+        is_filter = b.column("__t").to_numpy() == 0
+        gc = [b.column(c) for c in gcols]
+        # the input is sorted, so each group is one run of rows: the
+        # runs start at the segments' first rows, in input order
+        order, bounds = group_segments(
+            [c.to_pandas(types_mapper=pd.ArrowDtype) for c in gc], len(b))
+        starts = np.sort(order[np.r_[0, bounds].astype(np.int64)])
+        n_filters = np.add.reduceat(is_filter.astype(np.int64), starts)
+        keys, valid = keys_and_valid_from_arrow(b.column(key_col))
+        out = np.zeros(len(b), dtype=bool)
+        heads = zip(*(c.take(starts).to_pylist() for c in gc))
+        for g, lo, hi, nf in zip(heads, starts, np.r_[starts[1:], len(b)],
+                                 n_filters):
+            if g != cur:
+                cur, f = g, None
+            if nf:
+                if f is not None or nf > 1:
+                    raise _duplicate_rows(names, [g if names else ()] * 2)
+                f = FAMILIES[b.column("__fam")[lo].as_py()].deserialize(
+                    b.column("__blob")[lo].as_py())
+                lo += 1
+            if f is not None and None not in g:
+                out[lo:hi] = f.find_hashes(keys[lo:hi])
+        yield pa.RecordBatch.from_arrays(
+            [b.column(c) for c in out_cols] + [pa.array(out & valid)],
+            names=[*out_cols, result_col]).filter(pa.array(~is_filter))
 
 
 def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,

@@ -268,3 +268,24 @@ def test_sketch_merge_routes_agree_over_many_groups(spark, monkeypatch):
                     assert abs(rank - q) <= 0.05 + 1 / len(vals), \
                         (kind, g, q)
     df.unpersist()
+
+
+@pytest.mark.parametrize("other", [dict(family="block", fpp=0.0101),
+                                   dict(family="bloom", fpp=0.01)])
+def test_merge_rejects_partials_that_disagree(spark, other):
+    """A merge used to take the family and params of a group's first
+    row, so the union of two grouped builds with different fpp (here
+    one filter size) or family merged silently under one of them. The
+    merge now compares every row of a group with its head."""
+    from libfilter_spark.spark.keys import with_content_key_bin
+    base = spark.range(2_000).select(
+        F.lit("a").alias("g"), F.col("id").cast("string").alias("content"))
+    keys = with_content_key_bin(base, "content").select("g", "key")
+    one = build_filters(keys, ["g"], ndv=1_000, fpp=0.01)
+    two = build_filters(keys, ["g"], ndv=1_000, **other)
+    with pytest.raises(Exception) as err:
+        merge_filter_blobs(one.unionByName(two), ["g"]).collect()
+    msg = f"{type(err.value).__name__}: {err.value}"
+    assert "ValueError" in msg and "partials of g='a'" in msg
+    assert ("disagree on family" if other["family"] != "block"
+            else "disagree on params") in msg

@@ -1,4 +1,4 @@
-"""Probe routing: broadcast vs shuffle-cogroup equivalence, the
+"""Probe routing: broadcast vs shuffle-route equivalence, the
 auto-budget fallback, and the grouped build engines (round-4 items)."""
 
 import pyspark.sql.functions as F
@@ -576,3 +576,101 @@ def test_duplicate_filter_rows_raise(spark, frame, via):
     msg = f"{type(err.value).__name__}: {err.value}"
     assert "ValueError" in msg
     assert f"more than one row for {named}" in msg
+
+
+@pytest.fixture
+def small_batches(spark):
+    """64-row Arrow batches over fewer shuffle partitions than groups:
+    a partition holds several groups, batches cut groups, and a
+    group's filter row lands in a different batch from most of its
+    probe rows."""
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+            "spark.sql.shuffle.partitions": "3"}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in prev.items():
+        spark.conf.set(k, v)
+
+
+def _pass_frames(spark, two_cols: bool):
+    """Build and probe frames for the shuffle pass. Rows with
+    id % 50 == 7 have a null in their group tuple (the build keeps a
+    filter for it); one group has no filter; the probe side holds
+    every build key, as many absent keys, duplicate rows and null
+    keys."""
+    null = F.col("id") % 50 == 7
+    if two_cols:
+        gcols = ["g1", "g2"]
+        groups = [(F.col("id") % 4).cast("int").alias("g1"),
+                  F.when(null, F.lit(None)).otherwise(
+                      (F.col("id") % 3).cast("string")).alias("g2")]
+        no_filter = (F.col("g1") == 3) & (F.col("g2") == "2")
+    else:
+        gcols = ["g"]
+        groups = [F.when(null, F.lit(None)).otherwise(
+            (F.col("id") % 12).cast("string")).alias("g")]
+        no_filter = F.col("g") == "11"
+
+    def frame(n):
+        base = spark.range(n).select(
+            *groups, F.col("id").cast("string").alias("content"))
+        return with_content_key_bin(base, "content")
+
+    build = frame(3_000).where(~no_filter | no_filter.isNull()) \
+        .select(*gcols, "key")
+    probe = frame(6_000).select("content", *gcols, "key")
+    nulls = spark.createDataFrame(
+        [("nullkey", *(["0"] if not two_cols else [0, "0"]), None)],
+        probe.schema)
+    probe = probe.unionByName(probe.where(F.col("content") < "2")) \
+        .unionByName(nulls)
+    return gcols, build, probe
+
+
+@pytest.mark.parametrize("two_cols", [False, True])
+def test_shuffle_pass_agrees_with_broadcast(spark, small_batches,
+                                            two_cols):
+    """The shuffle route's segmented pass answers row for row as the
+    broadcast route does, keeps the input's columns and rows, and runs
+    with no cogroup and no join. Covers duplicate probe rows, a null
+    in the group tuple (False on both routes, though the build kept
+    that group's filter), null keys and a group with no filter."""
+    from collections import Counter
+
+    gcols, build, probe = _pass_frames(spark, two_cols)
+    filters = build_filters(build, gcols, ndv=500, fpp=0.01).cache()
+    groups = [tuple(r[c] for c in gcols) for r in filters.collect()]
+    assert any(None in g for g in groups)  # the null group's filter
+    shuffled = probe_with_filters(probe, filters, gcols, via="shuffle")
+    assert shuffled.columns == probe.columns + ["maybe_seen"]
+    plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" not in plan and "Join" not in plan
+    rows = shuffled.collect()
+    expect = probe_with_filters(probe, filters, gcols,
+                                via="broadcast").collect()
+    assert len(rows) == len(expect) == probe.count()
+    assert Counter(map(tuple, rows)) == Counter(map(tuple, expect))
+    for r in rows:
+        g = tuple(r[c] for c in gcols)
+        if r["key"] is None or None in g or g not in groups:
+            assert r["maybe_seen"] is False
+        elif int(r["content"]) < 3_000:
+            assert r["maybe_seen"]  # zero false negatives
+    filters.unpersist()
+
+
+@pytest.mark.parametrize("raw", ["abc", "-1", "1.5", "", "1e6", "0x10"])
+def test_broadcast_max_rejects_bad_values(raw):
+    """LIBFILTER_BROADCAST_MAX must be an integer byte count >= 0: a
+    garbage value used to fail with a bare int() error and a negative
+    one silently sent every auto probe to the shuffle route."""
+    import re
+
+    import libfilter_spark.spark.probe as P
+    named = f"LIBFILTER_BROADCAST_MAX={re.escape(repr(raw))}"
+    with pytest.raises(ValueError, match=named):
+        P._broadcast_max(raw)
+    assert P._broadcast_max("0") == 0
+    assert P._broadcast_max(" 1024 ") == 1024
