@@ -168,6 +168,43 @@ class BlockSliceFilter:
         return bool(self.find_hashes(
             np.array([hash_], dtype=np.uint64))[0])
 
+    def add_hashes(self, hashes: np.ndarray,
+                   buckets: np.ndarray | None = None) -> None:
+        """Insert keys routed to this slice; ``buckets`` are their
+        global bucket indices when the caller has them already (the
+        sharded build routes on them). A key whose bucket falls
+        outside the slice raises: its bits would land in another
+        shard's range."""
+        if len(hashes) == 0:
+            return
+        if buckets is None:
+            buckets = K.bucket_index(hashes, self.num_buckets) \
+                .astype(np.int64)
+        idx = buckets - self.lo
+        if idx.min() < 0 or idx.max() >= self.state.size // \
+                K.WORDS_PER_BUCKET:
+            raise ValueError("key routed to the wrong block slice")
+        K.scatter(self.state, idx, hashes)
+
+    @classmethod
+    def assemble(cls, blobs) -> np.ndarray:
+        """Write the disjoint slice blobs of ONE global filter into its
+        full state array, byte-identical to building it in one piece;
+        a bucket range no slice covers stays zero (no keys there)."""
+        state = None
+        for blob in blobs:
+            sl = cls.deserialize(blob)
+            if state is None:
+                state = K.empty(sl.num_buckets)
+            elif sl.num_buckets * K.WORDS_PER_BUCKET != state.size:
+                raise ValueError("block slices of different filters "
+                                 "cannot assemble into one")
+            lo = sl.lo * K.WORDS_PER_BUCKET
+            state[lo:lo + sl.state.size] = sl.state
+        if state is None:
+            raise ValueError("cannot assemble zero block slices")
+        return state
+
     def serialize(self) -> bytes:
         head = np.array([self.num_buckets, self.lo],
                         dtype="<u8").tobytes()

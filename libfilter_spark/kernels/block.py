@@ -92,7 +92,16 @@ def add_hashes(state: np.ndarray, hashes: np.ndarray) -> None:
             add_hashes(state, hashes[i:i + _KERNEL_BLOCK])
         return
     num_buckets = state.size // WORDS_PER_BUCKET
-    idx = bucket_index(hashes, num_buckets).astype(np.int64)
+    scatter(state, bucket_index(hashes, num_buckets).astype(np.int64),
+            hashes)
+
+
+def scatter(state: np.ndarray, idx: np.ndarray,
+            hashes: np.ndarray) -> None:
+    """OR the lane masks of ``hashes`` into buckets ``idx`` of
+    ``state``, in place: the insert once the bucket indices are known
+    (``add_hashes`` on a whole filter, ``BlockSliceFilter.add_hashes``
+    on a bucket range of one)."""
     masks = make_masks(hashes)
     # fold the 8 u32 lanes into 4 u64 lanes: same bytes (both the mask
     # matrix and the state are viewed the same way in memory), half the

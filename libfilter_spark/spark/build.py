@@ -16,10 +16,13 @@ implemented; the TCF union algorithm of
 ``c/lib/taffy-cuckoo.c:260-348`` for cuckoo filters). The sketch
 build (spark/sketch_build.py) runs both stages with its own spec.
 
-Families must be *mergeable* for this path. The static XOR filter
-(one-shot bulk build, no union — ``c/lib/static.c:12-82``) uses the
-grouped path: a real shuffle of (group, key) pairs, one bulk build
-per group via ``applyInArrow``.
+Families must be *mergeable* for this path. Large builds shuffle
+keys instead (``select_build_strategy``): a global block filter, and
+the filters of grouped block and taffy_block builds past a 10M ndv
+hint, are built on disjoint bucket ranges (spark/sharded.py). The static
+XOR filter (one-shot bulk build, no union — ``c/lib/static.c:12-82``)
+and the other large grouped builds shuffle (group, key) pairs into
+one bulk build per group via ``applyInArrow``.
 """
 
 from __future__ import annotations
@@ -47,8 +50,8 @@ def create_filter(family: str, ndv: int, fpp: float):
 
 def estimate_filter_bytes(family: str, ndv: int, fpp: float) -> int:
     """Rough final-size estimate used ONLY for strategy routing —
-    order-of-magnitude fidelity is enough (the routing threshold is a
-    32 MB cliff, not a tight bound)."""
+    order-of-magnitude fidelity is enough (the route changes at
+    ``_SHARDED_MIN``, 4 MB, not at a tight bound)."""
     import math
     from ..kernels.sizing import block_bytes_needed
     if family in ("block", "taffy_block"):
@@ -67,7 +70,7 @@ def estimate_filter_bytes(family: str, ndv: int, fpp: float) -> int:
 
 
 def select_build_strategy(family: str, grouped: bool, ndv: int,
-                          fpp: float, threshold: int | None = None) -> str:
+                          fpp: float) -> str:
     """Pick the build path by estimated filter size — the difference
     between 'works at sf0.1' and 'works at 100 TB':
 
@@ -83,14 +86,16 @@ def select_build_strategy(family: str, grouped: bool, ndv: int,
       XOR always, which NEEDS all group keys in one task —
       ``c/lib/static.c:12-82``): shuffle (group, key) rows, build each
       group's filter exactly once. Trades an 8 B/row shuffle for
-      removing the tasks-x-bytes blob merge entirely; groups
-      parallelize across executors.
+      removing the tasks-x-bytes blob merge entirely. Block and
+      taffy_block groups past a 10M ndv hint build on bucket ranges
+      spread over every task, the rest one task per group
+      (``_build_grouped``).
+
+    The threshold is ``_SHARDED_MIN``.
     """
     if family == "static_xor":
         return "grouped_bulk"
-    if threshold is None:
-        threshold = _SHARDED_MIN
-    if estimate_filter_bytes(family, ndv, fpp) >= threshold:
+    if estimate_filter_bytes(family, ndv, fpp) >= _SHARDED_MIN:
         if grouped:
             return "grouped_bulk"
         if family == "block":
@@ -116,6 +121,16 @@ def select_build_strategy(family: str, grouped: bool, ndv: int,
 # merge routes on estimate × defaultParallelism, so a cluster with
 # thousands of cores crosses it at proportionally smaller partials.
 _SHARDED_MIN = 4 << 20
+# Grouped block and taffy_block builds with an ndv hint at or past this
+# take the bucket-range route. taffy_block: that route pre-sizes level
+# 0 at 1.25x the hint + 64 and raises once a group passes it, while the
+# bulk below grows a level; the raise must not reach builds that grow
+# today, and the line goes once each group is sized from its own key
+# count. block: the bytes are the same either way, but below the line
+# the bulk was faster (16 Zipf groups at ndv 4M: 6.20 against 6.88 s,
+# BENCH/grouped_shard_ab.json) since the route's second stage shuffles
+# every group's slices.
+_GROUPED_SHARDS_MIN = 10_000_000
 _WIDEN_MIN_BYTES = 1 << 20
 _SMALL_MERGE_MAX = 64 << 20
 # buckets of the merge tree's first level
@@ -157,6 +172,21 @@ def group_segments(cols: list, n: int) -> tuple[np.ndarray, np.ndarray]:
             diff |= s[1:] != s[:-1]
         bounds = np.flatnonzero(diff) + 1
     return order, bounds
+
+
+def batch_groups(batch, group_cols: list[str], vals: np.ndarray):
+    """(group tuple, that group's slice of ``vals``) for each group of
+    an Arrow batch, segmented by ``group_segments``; with no group
+    columns the whole batch is the one group ``()``."""
+    if not group_cols:
+        return [((), vals)]
+    gcols = [batch.column(c) for c in group_cols]
+    order, bounds = group_segments(
+        [c.to_pandas(types_mapper=pd.ArrowDtype) for c in gcols],
+        batch.num_rows)
+    heads = order[np.r_[0, bounds].astype(np.int64)]
+    return zip(zip(*(c.take(heads).to_pylist() for c in gcols)),
+               (vals[seg] for seg in np.split(order, bounds)))
 
 
 # merged rows per output batch are cut at this many blob bytes, so no
@@ -331,17 +361,7 @@ def partial_batches(batches, group_cols: list[str], value_col: str,
         if batch.num_rows == 0:
             continue
         vals = values(batch.column(value_col))
-        if not group_cols:
-            segs = [((), vals)]
-        else:
-            gcols = [batch.column(c) for c in group_cols]
-            order, bounds = group_segments(
-                [c.to_pandas(types_mapper=pd.ArrowDtype) for c in gcols],
-                batch.num_rows)
-            heads = order[np.r_[0, bounds].astype(np.int64)]
-            segs = zip(zip(*(c.take(heads).to_pylist() for c in gcols)),
-                       (vals[seg] for seg in np.split(order, bounds)))
-        for g, v in segs:
+        for g, v in batch_groups(batch, group_cols, vals):
             state = acc.get(g)
             if state is None:
                 state = acc[g] = create()
@@ -515,43 +535,31 @@ def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
 
 def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
                    family: str, ndv: int, fpp: float) -> DataFrame:
-    """Shuffle-then-bulk-build path: every group's keys land in one
-    task and the filter is built exactly once — no per-task partials,
-    no blob merge. Required for static XOR (one-shot construct needs
-    all keys, ``c/lib/static.c:12-82``); chosen by the strategy router
-    for LARGE grouped builds of any family, where per-task full-size
-    partials would shuffle tasks x filter_bytes of blobs. Memory
-    bound: 8 bytes x group rows + one group's filter per task."""
+    """One filter per group, built exactly once: no per-task partials,
+    no blob merge. Memory bound: 8 bytes x group rows + one group's
+    filter per task.
+
+    - Grouped ``block`` and ``taffy_block`` builds with ``ndv`` of
+      at least ``_GROUPED_SHARDS_MIN`` run on bucket ranges
+      (``sharded.build_grouped_blocks``): each group's filter is cut
+      into disjoint slices built on different tasks, so one huge
+      group spreads over every core, and each group's slices are
+      written into its one blob.
+    - Every other build, and the global (``__g = 0``) case, is the
+      bulk: every group's keys land in one ``applyInArrow`` call.
+      Static XOR needs that (its one-shot construct takes all keys,
+      ``c/lib/static.c:12-82``), and block and growable
+      taffy_block builds below the line keep it."""
     from ..filters.static_xor import StaticXorFilter
 
+    if group_cols and family in ("block", "taffy_block") \
+            and ndv >= _GROUPED_SHARDS_MIN:
+        from .sharded import build_grouped_blocks
+        return build_grouped_blocks(df, group_cols, key_col, family,
+                                    ndv, fpp)
     params = json.dumps({"ndv": int(ndv), "fpp": float(fpp)})
     proj = df.select(*group_cols, key_col)
     schema = _result_schema(proj, group_cols)
-
-    # huge grouped BLOCK builds (ndv ≥ 10M per group) take the JVM
-    # bit_or engine: the insert runs as groupBy(group, bucket)
-    # .agg(bit_or) under whole-stage codegen and ZERO keys cross into
-    # Python. Shuffle volume: one ~40 B row per distinct (group,
-    # bucket) ≈ filter bytes (+ the group key per row), map-side
-    # combined. It beat the applyInArrow pass below in 3 of 3 pairs at
-    # 2 groups × 10M keys on a 4-core Xeon VM (local[4], medians
-    # 11.13 vs 24.58 s; BENCH/engine_ab.json).
-    if family == "block" and group_cols and ndv >= 10_000_000:
-        return _build_grouped_block_jvm(proj, group_cols, key_col,
-                                        ndv, fpp, params, schema)
-    # huge grouped TAFFY-BLOCK builds take the same engine: a
-    # pre-sized TBF never upsizes, so its state is one level-0 block
-    # array plus (ndv0, ttl, last_ndv) bookkeeping — the insert IS the
-    # block bit_or aggregation (byte-identical to a streamed
-    # create+add_hashes at the same level-0 size, tested). 1.25x
-    # level-0 margin absorbs group-size jitter around the per-group
-    # ndv hint; a group overflowing it errors at assembly rather than
-    # silently mis-building. Same measurement: 3 of 3 pairs, 12.56 vs
-    # 23.96 s.
-    if family == "taffy_block" and group_cols and ndv >= 10_000_000:
-        return _build_grouped_tbf_jvm(proj, group_cols, key_col,
-                                      ndv, fpp, params, schema)
-
     out_schema = _arrow_schema(schema)
 
     def bulk(table):
@@ -583,180 +591,3 @@ def _build_grouped(df: DataFrame, group_cols: list[str], key_col: str,
             .applyInArrow(
                 lambda table: bulk(table.drop_columns("__g")),
                 schema=schema))
-
-
-def _build_grouped_block_jvm(proj: DataFrame, group_cols: list[str],
-                             key_col: str, ndv: int, fpp: float,
-                             params: str, schema) -> DataFrame:
-    """Grouped block build with the insert in Tungsten (see
-    block_groupby_bitor): per-group filters assemble
-    from the reduced nonzero-bucket rows — per-task memory is the
-    filters of the groups hashed to it, same bound as the streamed
-    bulk path. Byte-identical to the applyInArrow bulk build; both
-    drop null keys."""
-    from ..kernels.block import serialize as _ser
-    from ..kernels.sizing import BUCKET_BYTES, block_bytes_needed
-
-    num_buckets = max(1, block_bytes_needed(ndv, fpp) // BUCKET_BYTES)
-
-    def make_blob(sl: np.ndarray, count: int) -> tuple[str, bytes]:
-        return "block", _ser(np.ascontiguousarray(sl.view(np.uint32)))
-
-    return _grouped_bitor_assemble(proj, group_cols, key_col,
-                                   num_buckets, params, schema,
-                                   make_blob)
-
-
-def _build_grouped_tbf_jvm(proj: DataFrame, group_cols: list[str],
-                           key_col: str, ndv: int, fpp: float,
-                           params: str, schema) -> DataFrame:
-    """Grouped taffy_block build in Tungsten: pre-sized level-0 with a
-    1.25x margin over the per-group ndv hint (the aggregation is
-    orderless, so a group cannot upsize mid-build); groups past the
-    margin raise at assembly. Byte-identical to a streamed
-    create+add_hashes build at the same level-0 sizing
-    (tests/test_probe_routing.py)."""
-    from ..filters.taffy_block import (TaffyBlockFilter, _level0_ndv,
-                                       _level_bytes)
-    from ..kernels import block as K
-
-    ndv0 = _level0_ndv(int(ndv * 1.25) + 64, fpp)
-    num_buckets = K.num_buckets_for(_level_bytes(ndv0, fpp, 0))
-
-    def make_blob(sl: np.ndarray, count: int) -> tuple[str, bytes]:
-        if count > ndv0:
-            raise ValueError(
-                f"group got {count} keys > level-0 capacity {ndv0}; a "
-                "real taffy_block would upsize — raise ndv or use the "
-                "streamed build (smaller ndv hint)")
-        level0 = np.ascontiguousarray(sl.view(np.uint32))
-        f = TaffyBlockFilter(ndv0, fpp, [level0], ttl=ndv0 - count,
-                             last_ndv=ndv0)
-        return "taffy_block", f.serialize()
-
-    return _grouped_bitor_assemble(proj, group_cols, key_col,
-                                   num_buckets, params, schema,
-                                   make_blob)
-
-
-def _grouped_bitor_assemble(proj: DataFrame, group_cols: list[str],
-                            key_col: str, num_buckets: int,
-                            params: str, schema,
-                            make_blob) -> DataFrame:
-    """Shared grouped JVM bit_or engine: run the insert as
-    ``groupBy(group, bucket).agg(bit_or)`` (whole-stage codegen, zero
-    keys into Python), then assemble each group's reduced
-    nonzero-bucket rows into a filter blob via ``make_blob``."""
-    spark = proj.sparkSession
-    try:
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        nparts = spark.sparkContext.defaultParallelism
-    # explicit count: AQE would coalesce a small bucket-row exchange
-    # and serialize the per-group assembly (see merge_filter_blobs)
-    agg = block_groupby_bitor(proj, key_col, num_buckets, group_cols) \
-        .repartition(nparts, *group_cols)
-    out_names = [f.name for f in schema.fields]
-    out_schema = _arrow_schema(schema)
-
-    def assemble(batches):
-        import pyarrow as pa
-        slices: dict[tuple, np.ndarray] = {}
-        counts: dict[tuple, int] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            gvals = [batch.column(c).to_pylist() for c in group_cols]
-            b = batch.column("b").to_numpy(zero_copy_only=False)
-            cnt = batch.column("cnt").to_numpy(zero_copy_only=False)
-            ps = [batch.column(f"p{i}").to_numpy(zero_copy_only=False)
-                  .view(np.uint64) for i in range(4)]
-            # pd.factorize (inside group_segments) gives null group
-            # values a real code — np.unique would try to SORT an
-            # object array containing None and raise TypeError
-            order, bounds = group_segments(
-                [np.asarray(col, dtype=object) for col in gvals],
-                batch.num_rows)
-            for seg in np.split(order, bounds):
-                g = tuple(col[seg[0]] for col in gvals)
-                sl = slices.get(g)
-                if sl is None:
-                    sl = slices[g] = np.zeros(num_buckets * 4,
-                                              dtype=np.uint64)
-                    counts[g] = 0
-                m = sl.reshape(-1, 4)
-                idx = b[seg]
-                for i in range(4):
-                    # buckets are distinct post-agg within a group
-                    m[idx, i] = ps[i][seg]
-                counts[g] += int(cnt[seg].sum())
-        if slices:
-            cols: dict[str, list] = {c: [] for c in out_names}
-            for g, sl in slices.items():
-                fam, blob = make_blob(sl, counts[g])
-                for c, v in zip(group_cols, g):
-                    cols[c].append(v)
-                cols["family"].append(fam)
-                cols["params"].append(params)
-                cols["n_keys"].append(counts[g])
-                cols["n_partials"].append(1)
-                cols["filter"].append(blob)
-            yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
-
-    return agg.mapInArrow(assemble, schema=schema)
-
-
-def block_groupby_bitor(df: DataFrame, key_col: str, num_buckets: int,
-                        lead_cols: list[str]) -> DataFrame:
-    """The JVM bit_or aggregation: the block scatter-OR insert as a
-    whole-stage-codegen ``groupBy(lead..., bucket).agg(bit_or)``, one
-    independent filter per ``lead_cols`` group. Per key, (bucket,
-    8 lane masks) are integer expressions replicating
-    ``block.h:97-125`` exactly:
-
-    - bucket = (h_hi * num_buckets) >> 32 (mulhi range reduction on
-      the upper 32 key bits),
-    - lane i bit = (u32)(h_lo * seed_i) >> 27 — the wrapping 32-bit
-      multiply is emulated in BIGINT with a 16/16 split because ANSI
-      mode forbids overflowing casts,
-    - lane pairs pack into one BIGINT each (bit_or distributes over
-      the packed halves), so the aggregation state is 4 longs/bucket.
-
-    Map-side partial combine runs before the shuffle: volume is one
-    row per DISTINCT (lead..., bucket) per task (≤ filter size), and
-    Python only ever sees the reduced nonzero-bucket rows. Returns
-    (lead..., b, p0..p3, cnt). Null keys are dropped by a JVM filter,
-    which Spark pushes below the key projection, so a derived key is
-    computed twice here."""
-    from ..kernels import block as K
-    if isinstance(df.schema[key_col].dataType, BinaryType):
-        b_expr = (f"shiftright(cast(conv(hex(substring({key_col},1,4)),"
-                  f"16,10) as bigint) * {num_buckets}, 32)")
-        hlo_expr = (f"cast(conv(hex(substring({key_col},5,4)),16,10) "
-                    "as bigint)")
-    else:
-        b_expr = (f"shiftright(shiftrightunsigned(cast({key_col} as "
-                  f"bigint), 32) * {num_buckets}, 32)")
-        hlo_expr = f"cast({key_col} as bigint) & 4294967295"
-    base = (df.where(F.col(key_col).isNotNull())
-            .select(*lead_cols,
-                    F.expr(b_expr).alias("b"),
-                    F.expr(hlo_expr).alias("hlo"))
-            .withColumn("a0", F.expr("hlo & 65535"))
-            .withColumn("a1", F.expr("shiftright(hlo, 16)")))
-
-    def mask(seed: int) -> str:
-        # (hlo * seed) mod 2^32 via 16/16 split, then top-5 bits
-        return ("shiftleft(cast(1 as bigint), cast(shiftright("
-                f"(a0 * {seed} + shiftleft((a1 * {seed}) & 65535, 16))"
-                " & 4294967295, 27) as int))")
-
-    seeds = [int(s) for s in K.SEEDS]
-    pairs = [F.expr(f"{mask(seeds[2 * i])} | "
-                    f"shiftleft({mask(seeds[2 * i + 1])}, 32)")
-             .alias(f"p{i}") for i in range(4)]
-    gb = [*lead_cols, "b"]
-    return (base.select(*gb, *pairs)
-            .groupBy(*gb)
-            .agg(*[F.bit_or(f"p{i}").alias(f"p{i}") for i in range(4)],
-                 F.count(F.lit(1)).alias("cnt")))

@@ -80,10 +80,10 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     newer level pay a second gather.
 
     ``engine`` accepts ``"auto"`` and ``"arrow"`` only, both this
-    streamed build. A JVM ``bit_or``-aggregation taffy_block build
-    with the same output lost every pair to it on a 4-core Xeon VM at
-    local[4] (3 interleaved pairs per size, medians 2.83 vs 2.05 s at
-    3M keys, 6.57 vs 4.93 s at 10M, 12.11 vs 8.78 s at 20M;
+    streamed build. A JVM OR-aggregation taffy_block build (since
+    deleted) with the same output lost every pair to it on a 4-core
+    Xeon VM at local[4] (3 interleaved pairs per size, medians 2.83 vs
+    2.05 s at 3M keys, 6.57 vs 4.93 s at 10M, 12.11 vs 8.78 s at 20M;
     BENCH/engine_ab.json), and a ``collect_list``-packed transfer was
     slower at local[2] and local[8] (11.43 vs 10.34 s, 5.53 vs
     4.46 s; BENCH/forest_ipc.json).

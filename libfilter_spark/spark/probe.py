@@ -215,12 +215,7 @@ class _BlockSliceProbe(_Assembled, BlockFilter):
 
     @classmethod
     def _build(cls, n_shards: int, blobs: dict):
-        slices = [BlockSliceFilter.deserialize(b) for b in blobs.values()]
-        w = K.WORDS_PER_BUCKET
-        state = np.zeros(slices[0].num_buckets * w, dtype=np.uint32)
-        for sl in slices:
-            state[sl.lo * w:sl.lo * w + sl.state.size] = sl.state
-        return cls(n_shards, state)
+        return cls(n_shards, BlockSliceFilter.assemble(blobs.values()))
 
     def find(self, keys: np.ndarray, binary: bool) -> np.ndarray:
         return self.find_hashes(keys)

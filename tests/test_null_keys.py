@@ -2,8 +2,6 @@
 same filters from an input with null keys as from the same input
 without them, and a group whose keys are all null gets no row."""
 
-import json
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -32,14 +30,10 @@ def _bulk(family):
     return build
 
 
-def _grouped_jvm(kind):
+def _grouped_shards(kind):
     def build(df):
-        from libfilter_spark.spark import build as B
-        fn = {"block": B._build_grouped_block_jvm,
-              "taffy_block": B._build_grouped_tbf_jvm}[kind]
-        params = json.dumps({"ndv": NDV, "fpp": 0.01})
-        return fn(df, ["g"], "key", NDV, 0.01, params,
-                  B._result_schema(df, ["g"]))
+        from libfilter_spark.spark.sharded import build_grouped_blocks
+        return build_grouped_blocks(df, ["g"], "key", kind, NDV, 0.01)
     return build
 
 
@@ -67,8 +61,10 @@ ROUTES = {
     "grouped_bulk_block": _bulk("block"),
     "grouped_bulk_taffy_block": _bulk("taffy_block"),
     "static_xor": _bulk("static_xor"),
-    "grouped_jvm_block": _grouped_jvm("block"),
-    "grouped_jvm_taffy_block": _grouped_jvm("taffy_block"),
+    # the bucket-range route of large grouped builds; the ids predate
+    # it (it replaced a JVM bit_or engine)
+    "grouped_jvm_block": _grouped_shards("block"),
+    "grouped_jvm_taffy_block": _grouped_shards("taffy_block"),
     "salted": _salted,
     "sharded": _sharded,
     "forest": _forest,

@@ -97,32 +97,52 @@ def test_build_strategy_override_pins_partials(spark, monkeypatch):
     assert len(rows) == 1 and rows[0]["family"] == "block"
 
 
-def test_grouped_block_jvm_engine_byte_identical(spark):
-    """Huge grouped block builds route through the JVM bit_or engine
-    (round-4): per-group blobs must be byte-identical to the streamed
-    applyInArrow bulk build, and the public router must pick it past
-    the 10M-ndv crossover."""
-    from libfilter_spark.spark.build import (_build_grouped,
-                                             _build_grouped_block_jvm,
-                                             _result_schema)
-    import json as _json
+def _bulk_blobs(keys, family, ndv, fpp=0.01):
+    """{g: (blob, n_keys)} of the bulk build: one create + add_hashes
+    per group over the group's non-null keys."""
+    from libfilter_spark.kernels.keys import keys_from_arrow
+    from libfilter_spark.spark.build import create_filter
+    t = keys.toArrow()
+    t = t.filter(t.column("key").is_valid())
+    ks = keys_from_arrow(t.column("key"))
+    gs = t.column("g").to_pylist()
+    out = {}
+    for g in set(gs):
+        sel = ks[[x == g for x in gs]]
+        f = create_filter(family, ndv, fpp)
+        f.add_hashes(sel)
+        out[g] = (f.serialize(), len(sel))
+    return out
+
+
+def test_grouped_block_jvm_engine_byte_identical(spark, monkeypatch):
+    """Grouped block builds run on bucket-range shards, the route that
+    replaced the JVM bit_or engine: per-group blobs must be
+    byte-identical to the bulk build (one create + add_hashes per
+    group) at 1, 3 and 8 shards per group, for binary and int64 keys,
+    and the public router must take the route for a large grouped
+    block build."""
+    from libfilter_spark.spark import sharded
+    from libfilter_spark.spark.keys import with_content_key
     n = 40_000
     base = spark.range(n).select(
         (F.col("id") % 3).cast("string").alias("g"),
         F.col("id").cast("string").alias("content"))
     keys = with_content_key_bin(base, "content").select("g", "key")
-    proj = keys.select("g", "key")
-    params = _json.dumps({"ndv": 20_000, "fpp": 0.01})
-    jvm = _build_grouped_block_jvm(proj, ["g"], "key", 20_000, 0.01,
-                                   params, _result_schema(proj, ["g"]))
-    arrow = _build_grouped(keys, ["g"], "key", "block", 20_000, 0.01)
-    f_jvm = {r["g"]: (bytes(r["filter"]), r["n_keys"])
-             for r in jvm.collect()}
-    f_arr = {r["g"]: (bytes(r["filter"]), r["n_keys"])
-             for r in arrow.collect()}
-    assert f_jvm == f_arr and len(f_jvm) == 3
-    # public router: grouped block past both thresholds -> jvm path,
-    # zero FN through the grouped probe
+    for binary in (True, False):
+        src = keys if binary else with_content_key(
+            base, "content", hex_col=None).select("g", "key")
+        f_arr = _bulk_blobs(src, "block", 20_000)
+        for shards in (1, 3, 8):
+            monkeypatch.setattr(sharded, "_default_shards",
+                                lambda s, k=shards: k)
+            sh = sharded.build_grouped_blocks(src, ["g"], "key", "block",
+                                              20_000, 0.01)
+            f_jvm = {r["g"]: (bytes(r["filter"]), r["n_keys"])
+                     for r in sh.collect()}
+            assert f_jvm == f_arr and len(f_jvm) == 3, (binary, shards)
+    # public router: a large grouped block build takes the shard
+    # route, zero FN through the grouped probe
     filters = build_filters(keys, ["g"], ndv=12_000_000, fpp=0.01)
     filters.cache().count()
     found = probe_with_filters(keys, filters, ["g"]) \
@@ -131,40 +151,40 @@ def test_grouped_block_jvm_engine_byte_identical(spark):
     filters.unpersist()
 
 
-def test_grouped_tbf_jvm_engine_byte_identical(spark):
-    """Round-5 (verdict task 7): huge grouped taffy_block builds run
-    the insert as the JVM bit_or aggregation. Blobs must be
-    byte-identical to the streamed create+add_hashes build at the same
-    level-0 sizing, and the public router must pick the engine past
-    the 10M-ndv crossover."""
-    import json as _json
-
+def test_grouped_tbf_jvm_engine_byte_identical(spark, monkeypatch):
+    """Grouped taffy_block builds at ndv >= 10M run on bucket-range
+    shards with a pre-sized level 0, the route that replaced the JVM
+    bit_or engine. Blobs must be byte-identical to the streamed
+    create+add_hashes bulk build at the same level-0 sizing, at 1, 3
+    and 8 shards per group, and the public router must take the route
+    past the 10M-ndv line."""
     from libfilter_spark.filters.taffy_block import (_level0_ndv)
-    from libfilter_spark.spark.build import (_build_grouped,
-                                             _build_grouped_tbf_jvm,
-                                             _result_schema)
+    from libfilter_spark.spark import sharded
+    from libfilter_spark.spark.build import _build_grouped
     n, ndv = 30_000, 9_000
     base = spark.range(n).select(
         (F.col("id") % 3).cast("string").alias("g"),
         F.col("id").cast("string").alias("content"))
     keys = with_content_key_bin(base, "content").select("g", "key")
-    params = _json.dumps({"ndv": ndv, "fpp": 0.01})
-    jvm = _build_grouped_tbf_jvm(keys, ["g"], "key", ndv, 0.01, params,
-                                 _result_schema(keys, ["g"]))
-    # streamed side gets the jvm engine's inflated level-0 hint so the
-    # sizing (and therefore the bytes) match exactly; a 10k-key group
-    # stays within level 0 either way
+    # streamed side gets the shard route's inflated level-0 hint so
+    # the sizing (and therefore the bytes) match exactly; a 10k-key
+    # group stays within level 0 either way
     ndv0 = _level0_ndv(int(ndv * 1.25) + 64, 0.01)
     arrow = _build_grouped(keys, ["g"], "key", "taffy_block",
                            ndv0, 0.01)
-    f_jvm = {r["g"]: (bytes(r["filter"]), r["n_keys"], r["family"])
-             for r in jvm.collect()}
     f_arr = {r["g"]: (bytes(r["filter"]), r["n_keys"], r["family"])
              for r in arrow.collect()}
-    assert f_jvm == f_arr and len(f_jvm) == 3
-    assert all(fam == "taffy_block" for _, _, fam in f_jvm.values())
-    # public router: grouped taffy_block past the crossover -> jvm
-    # engine, zero FN through the grouped probe
+    for shards in (1, 3, 8):
+        monkeypatch.setattr(sharded, "_default_shards",
+                            lambda s, k=shards: k)
+        jvm = sharded.build_grouped_blocks(keys, ["g"], "key",
+                                           "taffy_block", ndv, 0.01)
+        f_jvm = {r["g"]: (bytes(r["filter"]), r["n_keys"], r["family"])
+                 for r in jvm.collect()}
+        assert f_jvm == f_arr and len(f_jvm) == 3, shards
+        assert all(fam == "taffy_block" for _, _, fam in f_jvm.values())
+    # public router: grouped taffy_block past the line -> shard
+    # route, zero FN through the grouped probe
     filters = build_filters(keys, ["g"], family="taffy_block",
                             ndv=12_000_000, fpp=0.01)
     filters.cache().count()
@@ -173,12 +193,12 @@ def test_grouped_tbf_jvm_engine_byte_identical(spark):
     assert found == n
     filters.unpersist()
     # a group overflowing the pre-sized level 0 raises, never
-    # silently mis-builds
-    tiny_params = _json.dumps({"ndv": 64, "fpp": 0.01})
-    bad = _build_grouped_tbf_jvm(keys, ["g"], "key", 64, 0.01,
-                                 tiny_params,
-                                 _result_schema(keys, ["g"]))
+    # silently mis-builds, and the error names the group
+    bad = sharded.build_grouped_blocks(keys, ["g"], "key", "taffy_block",
+                                       64, 0.01)
     with pytest.raises(Exception, match="level-0 capacity"):
+        bad.collect()
+    with pytest.raises(Exception, match="group g="):
         bad.collect()
 
 
@@ -198,29 +218,20 @@ def test_sharded_override_validation(spark):
 
 
 def test_grouped_block_jvm_null_group(spark):
-    """Round-4 ADVICE medium: a null group value must not crash the
-    JVM engine's assemble (np.unique cannot sort None); blobs must
-    stay byte-identical to the streamed bulk build, null group
-    included."""
-    import json as _json
-
-    from libfilter_spark.spark.build import (_build_grouped,
-                                             _build_grouped_block_jvm,
-                                             _result_schema)
+    """A null group value is a group on the bucket-range route that
+    replaced the JVM engine (whose assemble once crashed on it:
+    np.unique cannot sort None); blobs must stay byte-identical to
+    the bulk build, null group included."""
+    from libfilter_spark.spark.sharded import build_grouped_blocks
     base = spark.range(9_000).select(
         F.when(F.col("id") % 3 == 0, None)
         .otherwise((F.col("id") % 3).cast("string")).alias("g"),
         F.col("id").cast("string").alias("content"))
     keys = with_content_key_bin(base, "content").select("g", "key")
-    params = _json.dumps({"ndv": 4_000, "fpp": 0.01})
-    jvm = _build_grouped_block_jvm(keys, ["g"], "key", 4_000, 0.01,
-                                   params,
-                                   _result_schema(keys, ["g"]))
-    arrow = _build_grouped(keys, ["g"], "key", "block", 4_000, 0.01)
+    jvm = build_grouped_blocks(keys, ["g"], "key", "block", 4_000, 0.01)
     f_jvm = {r["g"]: (bytes(r["filter"]), r["n_keys"])
              for r in jvm.collect()}
-    f_arr = {r["g"]: (bytes(r["filter"]), r["n_keys"])
-             for r in arrow.collect()}
+    f_arr = _bulk_blobs(keys, "block", 4_000)
     assert f_jvm == f_arr
     assert None in f_jvm and len(f_jvm) == 3
 
@@ -418,11 +429,10 @@ def test_grouped_jvm_many_group_cols_no_overflow(spark):
     the lexsort fallback; every build key must still probe true in
     its own group (a merged slice would also create cross-group false
     positives at far above the configured fpp). The grouped partials
-    route segments its batches the same way and must agree."""
-    import json as _json
-
-    from libfilter_spark.spark.build import (_build_grouped_block_jvm,
-                                             _result_schema)
+    route segments its batches the same way and must agree. The
+    bucket-range route that replaced the JVM engine segments both its
+    slice and its concatenation stage with it."""
+    from libfilter_spark.spark.sharded import build_grouped_blocks
 
     n = 600
     gcols = [f"g{i}" for i in range(10)]
@@ -433,10 +443,7 @@ def test_grouped_jvm_many_group_cols_no_overflow(spark):
           for i, c in enumerate(gcols)])
     keys = with_content_key_bin(base, "content") \
         .select(*gcols, "key").coalesce(1)  # one batch: max uniques
-    params = _json.dumps({"ndv": 64, "fpp": 0.01})
-    filters = _build_grouped_block_jvm(
-        keys, gcols, "key", 64, 0.01, params,
-        _result_schema(keys, gcols))
+    filters = build_grouped_blocks(keys, gcols, "key", "block", 64, 0.01)
     filters.cache()
     # none merged: one filter per DISTINCT group tuple (all columns
     # derive from id mod 101, so 101 groups)

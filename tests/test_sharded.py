@@ -8,8 +8,6 @@ from libfilter_spark.filters import BlockFilter
 from libfilter_spark.kernels.keys import sha256_keys
 from libfilter_spark.spark.keys import with_content_key_bin
 from libfilter_spark.spark.probe import probe_with_filters
-from libfilter_spark.spark.sharded import (build_block_filter_sharded,
-                                           sharded_filter_row)
 
 
 def test_sharded_build_byte_identical(spark):
@@ -29,9 +27,39 @@ def test_sharded_build_byte_identical(spark):
             assert assemble_block_shards(sh) == expect, (binary, shards)
             assert sh.agg(F.sum("n_keys")).first()[0] == n
             sh.unpersist()
-    blob = build_block_filter_sharded(_content_keys(spark, n), ndv=n,
-                                      fpp=0.01, n_shards=3)
-    assert blob == expect
+
+
+def test_block_shard_matches_kernel_buckets(spark):
+    """The JVM shard column equals the kernel's bucket range, shard =
+    bucket_index * n_shards // num_buckets, for binary and int64 keys:
+    random keys plus the keys on either side of every shard's first
+    bucket, at shard counts up to one per bucket. A null key still
+    gets a shard: a null partition id would fail the repartition."""
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    from libfilter_spark.kernels import block as K
+    from libfilter_spark.kernels.keys import keys_from_arrow
+    from libfilter_spark.spark.sharded import (SHARD_COL, _shard_bounds,
+                                               with_block_shard)
+    rng = np.random.default_rng(5)
+    for nb, n in ((1, 1), (7, 3), (1000, 4), (1000, 8), (4096, 1000),
+                  (97, 97)):
+        edges = [(-(-(lo << 32) // nb) + d) % (1 << 32)
+                 for lo, _ in _shard_bounds(nb, n) for d in (-1, 0)]
+        vals = [int(x) for x in rng.integers(0, 1 << 63, 2_000)] + \
+            [(e << 32) | 0xFFFFFFFF for e in edges] + \
+            [e << 32 for e in edges] + [(1 << 64) - 1]
+        rows = [(v.to_bytes(8, "big"),) for v in vals] + [(None,)]
+        df = spark.createDataFrame(
+            rows, StructType([StructField("key", BinaryType())]))
+        for src in (df, df.select(F.conv(F.hex("key"), 16, -10)
+                                  .cast("long").alias("key"))):
+            t = with_block_shard(src, "key", nb, n).toArrow()
+            got = t.column(SHARD_COL).to_pylist()
+            assert 0 <= got[-1] < n, (nb, n)
+            keys = keys_from_arrow(t.column("key").slice(0, len(vals)))
+            want = K.bucket_index(keys, nb).astype(np.int64) * n // nb
+            assert got[:-1] == want.tolist(), (nb, n)
 
 
 def test_sharded_build_engines_byte_identical(spark):
@@ -57,11 +85,22 @@ def test_sharded_build_engines_byte_identical(spark):
 
 
 def test_sharded_probe_round_trip(spark):
+    """An exported shard frame probes as a one-row block filters
+    frame with zero false negatives."""
+    import json
+
+    from libfilter_spark.spark.sharded import (assemble_block_shards,
+                                               build_block_shards)
     n = 30_000
     df = spark.range(n).withColumn("content", F.col("id").cast("string"))
     keys = with_content_key_bin(df, "content").select("key")
-    blob = build_block_filter_sharded(keys, ndv=n, fpp=0.01, n_shards=8)
-    filters = sharded_filter_row(spark, blob, n, 0.01)
+    blob = assemble_block_shards(
+        build_block_shards(keys, ndv=n, fpp=0.01, n_shards=8))
+    filters = spark.createDataFrame(
+        [("block", json.dumps({"ndv": n, "fpp": 0.01}), None, None,
+          bytearray(blob))],
+        "family string, params string, n_keys long, n_partials long, "
+        "filter binary")
     found = probe_with_filters(keys, filters, None) \
         .where("maybe_seen").count()
     assert found == n
@@ -139,17 +178,17 @@ def test_build_strategy_routing():
     assert select_build_strategy("taffy_cuckoo", True, 100_000, 0.01) == \
         "partials"
     # huge global block -> sharded (regardless of key dtype)
-    assert select_build_strategy("block", False, 200_000_000, 0.004,
-                                 threshold=32 * mb) == "sharded"
+    assert select_build_strategy("block", False, 200_000_000, 0.004) == \
+        "sharded"
     # huge grouped builds -> grouped bulk, for every family
     for fam in ("block", "taffy_block", "taffy_cuckoo",
                 "minimal_taffy_cuckoo", "bloom"):
-        assert select_build_strategy(fam, True, 200_000_000, 0.004,
-                                     threshold=32 * mb) == "grouped_bulk", fam
+        assert select_build_strategy(fam, True, 200_000_000, 0.004) == \
+            "grouped_bulk", fam
     # huge global non-block stays partials (absorb/tree merge path;
     # the forest is the explicit scale API for cuckoo families)
     assert select_build_strategy("taffy_cuckoo", False, 200_000_000,
-                                 0.004, threshold=32 * mb) == "partials"
+                                 0.004) == "partials"
     # static XOR always needs all group keys in one task
     assert select_build_strategy("static_xor", False, 10, 0.01) == \
         "grouped_bulk"
@@ -339,7 +378,9 @@ def test_streamed_builds_derive_each_key_once(spark):
     """Every Python build drops null keys itself, so no JVM filter is
     pushed below the key projection to derive every key twice: one
     ``sha2`` in the physical plan of the sharded, forest, partials
-    (global and grouped) and grouped-bulk builds."""
+    (global and grouped) and grouped-bulk builds, and of the grouped
+    taffy_block build at ndv >= 10M (its JVM engine derived every key
+    twice)."""
     from libfilter_spark.spark.build import build_filters
     from libfilter_spark.spark.forest import build_filter_forest
     from libfilter_spark.spark.sharded import build_block_shards
@@ -355,6 +396,53 @@ def test_streamed_builds_derive_each_key_once(spark):
                 build_filters(keys, None, ndv=n, strategy="partials"),
                 build_filters(gkeys, ["g"], ndv=n, strategy="partials"),
                 build_filters(gkeys, ["g"], ndv=n,
-                              strategy="grouped_bulk")):
+                              strategy="grouped_bulk"),
+                build_filters(gkeys, ["g"], family="taffy_block",
+                              ndv=10_000_000)):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("sha2(") == 1, plan
+
+
+def test_grouped_shards_skewed_group(spark):
+    """A group holding half the rows is cut into bucket ranges like
+    every other: each group's shards land on different partitions, the
+    big group's on all of them, and the blobs equal the partials
+    route's (block) and the bulk build's (taffy_block, same level-0
+    sizing)."""
+    import json
+
+    from libfilter_spark.filters.taffy_block import _level0_ndv
+    from libfilter_spark.spark.build import _build_grouped, build_filters
+    from libfilter_spark.spark.sharded import (SHARD_COL, _build_slices,
+                                               build_grouped_blocks)
+    n, ndv = 40_000, 20_000
+    base = spark.range(n).select(
+        F.when(F.col("id") % 2 == 0, "big")
+        .otherwise((F.col("id") % 9).cast("string")).alias("g"),
+        F.col("id").cast("string").alias("content"))
+    keys = with_content_key_bin(base, "content").select("g", "key")
+    rows = _build_slices(keys, ["g"], "key", 1_000, 4, "{}").select(
+        "g", SHARD_COL, F.spark_partition_id().alias("pid")).collect()
+    parts: dict = {}
+    for r in rows:
+        parts.setdefault(r["g"], []).append(r["pid"])
+    assert all(len(set(p)) == len(p) for p in parts.values()), parts
+    assert sorted(parts["big"]) == [0, 1, 2, 3]
+
+    def blobs(df):
+        return {r["g"]: (bytes(r["filter"]), r["n_keys"])
+                for r in df.collect()}
+
+    shards = blobs(build_grouped_blocks(keys, ["g"], "key", "block", ndv,
+                                        0.01))
+    assert shards == blobs(build_filters(keys, ["g"], ndv=ndv, fpp=0.01,
+                                         strategy="partials"))
+    assert shards["big"][1] == n // 2 and len(shards) == 10
+    ndv0 = _level0_ndv(int(ndv * 1.25) + 64, 0.01)
+    assert blobs(build_grouped_blocks(keys, ["g"], "key", "taffy_block",
+                                      ndv, 0.01)) == \
+        blobs(_build_grouped(keys, ["g"], "key", "taffy_block", ndv0,
+                             0.01))
+    assert json.loads(build_grouped_blocks(
+        keys, ["g"], "key", "block", ndv, 0.01).first()["params"]) == \
+        {"ndv": ndv, "fpp": 0.01}
